@@ -38,7 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import ExtractConfig
-from .job import EXTRACT_SCHEMA, bucket_col
+from .job import (
+    EXTRACT_SCHEMA,
+    bucket_col,
+    extract_frame,
+    kernel_input,
+    require_plain_text_mode,
+)
 from .kernel import KERNEL_VERSION
 
 LEDGER_SCHEMA = (
@@ -172,10 +178,16 @@ class _BucketStatsParam(AccumulatorParam):
 
 
 def _extract_batches_with_stats(acc, preserve_spaces: bool = False):
-    """Fused kernel stage (same contract as job._extract_batches) that also
-    folds per-bucket stats into ``acc`` while the rows stream through — the
-    stats ride the one-and-only input scan. The bucket column is computed
-    JVM-side once and passed through, so the output needs no re-hash.
+    """The fused kernel stage (``job.extract_frame``, bucket passed
+    through) that also folds per-bucket stats into ``acc`` while the rows
+    stream through — the stats ride the one-and-only input scan. The
+    bucket column is computed JVM-side once and passed through, so the
+    output needs no re-hash.
+
+    ``rows_out`` counts rows that produced a usable extract: the kernel
+    emits a quarantine row per failed input, so counting emissions would
+    make rows_out ≡ rows_in, a dead metric. rows_in − rows_out is the
+    quarantine volume an operator actually watches.
 
     Metrics caveat: Spark's exactly-once accumulator guarantee covers
     ACTIONS only; with ``spark.speculation`` on (or recompute after executor
@@ -185,34 +197,21 @@ def _extract_batches_with_stats(acc, preserve_spaces: bool = False):
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_record
-
         for pdf in batches:
-            local: dict = {}
-            recs = []
-            for url, html, bucket in zip(
-                pdf["url"].tolist(), pdf["html"].tolist(), pdf["bucket"].tolist()
-            ):
-                r = extract_record(url, html, preserve_spaces=preserve_spaces)
-                r["bucket"] = int(bucket)
-                recs.append(r)
-                n_bytes = len(html) if html is not None else 0
-                is_err = r["error"] is not None
-                s = local.get(r["bucket"], (0, 0, 0, 0, 0))
-                local[r["bucket"]] = (
-                    s[0] + 1,
-                    s[1] + n_bytes,
-                    # rows_out = rows that produced a usable extract; the
-                    # kernel emits a quarantine row per failed input, so
-                    # counting emissions made rows_out ≡ rows_in — a dead
-                    # metric (r5 review find). rows_in − rows_out is now
-                    # the quarantine volume an operator actually watches.
-                    s[2] + (0 if is_err else 1),
-                    s[3] + (1 if is_err else 0),
-                    s[4] + (1 if r["extracted_text"] == "" else 0),
-                )
-            acc.add(local)
-            yield pd.DataFrame.from_records(recs)
+            out = extract_frame(pdf, preserve_spaces, ("bucket",))
+            if len(out):  # an empty batch's frame has no kernel columns
+                ok = out["error"].isna()
+                per_bucket = pd.DataFrame({
+                    "bucket": out["bucket"],
+                    "rows_in": 1,
+                    "bytes_in": pdf["html"].str.len().fillna(0).values,
+                    "rows_out": ok,
+                    "n_errors": ~ok,
+                    "n_empty": out["extracted_text"] == "",
+                }).groupby("bucket").sum()
+                acc.add({int(b): tuple(map(int, s))
+                         for b, *s in per_bucket.itertuples()})
+            yield out
 
     return fn
 
@@ -232,17 +231,7 @@ def resumable_extract(
     work survives). Returns a summary dict of this invocation.
     """
     cfg = cfg or ExtractConfig()
-    if cfg.output_mode == "spans":
-        raise ValueError(
-            "resumable_extract supports output_mode='text' only — the ledger "
-            "counts rows/empties over per-page records, not span rows"
-        )
-    if cfg.extra_passthrough_cols:
-        raise ValueError(
-            "resumable_extract does not support extra_passthrough_cols — the "
-            "checkpointed kernel stage projects exactly (url, html, bucket); "
-            "use extract_job for passthrough columns"
-        )
+    require_plain_text_mode(cfg, "resumable_extract")
     # case-insensitive: Spark's boolean conf parsing accepts True/TRUE
     if spark.conf.get("spark.speculation", "false").lower() == "true":
         raise ValueError(
@@ -258,19 +247,6 @@ def resumable_extract(
     # previously completed buckets. Pin it here so a caller-built session
     # can never lose data.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.batch_rows)
-    )
-    if cfg.max_split_mb:
-        # same split-sizing knobs as job.run_extract (r3 review: the
-        # checkpointed path silently ignored them)
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(cfg.max_split_mb << 20)
-        )
-        spark.conf.set(
-            "spark.sql.files.openCostInBytes",
-            str(max(1, cfg.max_split_mb // 4) << 20),
-        )
 
     all_buckets = list(range(cfg.salt_buckets))
     done = set(completed_buckets(spark, ledger_dir, cfg.salt_buckets))
@@ -294,10 +270,7 @@ def resumable_extract(
     # overwrite would never touch — duplicates-in-waiting (see helper)
     _clear_stale_bucket_partitions(output_path, cfg.salt_buckets)
 
-    pages = spark.read.parquet(input_path)
-    if cfg.lang_filter:
-        pages = pages.where(F.col("lang").isin(cfg.lang_filter))
-    pages = pages.select(
+    pages = kernel_input(spark, spark.read.parquet(input_path), cfg).select(
         "url",
         "html",
         bucket_col(F.col("url"), cfg.salt_buckets).alias("bucket"),

@@ -53,13 +53,6 @@ class ExtractConfig:
     #: physically clustered by bucket ahead of a wide op.
     presalt_shuffle: bool = False
 
-    #: parquet split sizing for the scan feeding the kernel. None (default)
-    #: keeps Spark's parallelism-derived sizing, which adapts the task
-    #: decomposition to the cluster width and measured fastest at BOTH
-    #: tested widths (BENCH/scaling.json grid); set explicitly only to
-    #: chase a known bad layout (e.g. a few giant splittable files).
-    max_split_mb: Optional[int] = None
-
     #: per-partition checkpoint ledger location (None = no checkpointing).
     checkpoint_dir: Optional[str] = None
 

@@ -43,41 +43,39 @@ SPANS_SCHEMA = (
 )
 
 
-def make_extract_batches(
-    preserve_spaces: bool = False, extra_cols: tuple = ()
-):
-    """Build the fused kernel stage with mode/passthrough baked in.
+def extract_frame(
+    pdf: pd.DataFrame, preserve_spaces: bool = False, extra_cols: tuple = ()
+) -> pd.DataFrame:
+    """THE per-batch kernel loop — fused strip→score→extract→clean over one
+    Arrow batch (SURVEY.md §4 "fused pipeline"); every text-mode entry
+    (batch, resumable, streaming) runs its rows through here. The per-row
+    loop is *inside* a vectorized batch — the same granularity as the
+    reference's per-manifest loop (ocr.py:90), not a per-row Spark UDF.
 
     ``extra_cols`` ride the same Arrow batch: the kernel emits exactly one
     record per input row IN ORDER, so the extra columns re-attach
     positionally — the Arrow analog of the reference's ``batch_mapping``
     positional rejoin (ocr.py:151-161), with zero joins.
     """
+    out = pd.DataFrame.from_records(
+        extract_record(u, h, preserve_spaces=preserve_spaces)
+        for u, h in zip(pdf["url"].tolist(), pdf["html"].tolist())
+    )
+    for c in extra_cols:
+        out[c] = pdf[c].values
+    return out
+
+
+def make_extract_batches(
+    preserve_spaces: bool = False, extra_cols: tuple = ()
+):
+    """The ``mapInPandas`` function of the fused kernel stage."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            out = pd.DataFrame.from_records(
-                extract_record(u, h, preserve_spaces=preserve_spaces)
-                for u, h in zip(urls, htmls)
-            )
-            for c in extra_cols:
-                out[c] = pdf[c].values
-            yield out
+            yield extract_frame(pdf, preserve_spaces, extra_cols)
 
     return fn
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused strip→score→extract→clean over Arrow batches (default mode).
-
-    One pandas stage, one Arrow round-trip (SURVEY.md §4 "fused pipeline");
-    the per-row loop is *inside* a vectorized batch — the same granularity
-    as the reference's per-manifest loop (ocr.py:90), not a per-row Spark
-    UDF.
-    """
-    yield from make_extract_batches()(batches)
 
 
 def make_spans_batches(preserve_spaces: bool = False):
@@ -124,39 +122,48 @@ def salted(df: DataFrame, buckets: int) -> DataFrame:
     return df.repartition(buckets, F.col("bucket"))
 
 
+def kernel_input(
+    spark: SparkSession, pages: DataFrame, cfg: ExtractConfig
+) -> DataFrame:
+    """The pages every kernel stage reads: ``lang_filter`` applied (and
+    pushed to the scan), with the session's Arrow batch size set to
+    ``cfg.batch_rows``. The batch size is a SESSION conf read at ACTION
+    time, not captured into the lazy plan — one config per session-batch
+    of jobs is the supported pattern (the spark-submit entry and
+    ``__spark_entry__`` both do exactly that)."""
+    spark.conf.set(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.batch_rows)
+    )
+    if cfg.lang_filter:
+        pages = pages.where(F.col("lang").isin(cfg.lang_filter))
+    return pages
+
+
+def require_plain_text_mode(cfg: ExtractConfig, entry: str) -> None:
+    """Reject the configs an entry point cannot honour — span output and
+    passthrough columns — instead of silently ignoring them."""
+    if cfg.output_mode == "spans" or cfg.extra_passthrough_cols:
+        raise ValueError(
+            f"{entry} supports output_mode='text_column' with no "
+            "extra_passthrough_cols — use the batch extract_job for those "
+            "modes"
+        )
+
+
 def run_extract(
     spark: SparkSession,
     pages: DataFrame,
     cfg: Optional[ExtractConfig] = None,
 ) -> DataFrame:
-    """Lazy extraction plan over a pages DataFrame (url, ..., html, lang).
+    """Lazy extraction plan over a pages DataFrame (url, ..., html, lang);
+    batch or streaming.
 
     Keeps only (url, html) in the kernel input projection — Arrow
     serialization of the binary payload dominates I/O (SURVEY.md §4), so
     nothing else crosses the Python boundary.
-
-    Conf caveat: the Arrow-batch/split-sizing knobs are SESSION-level and
-    read at ACTION time, not captured into this lazy plan — building two
-    plans with different ``max_split_mb`` then executing the first runs it
-    under the second's setting. One config per session-batch of jobs is
-    the supported pattern (the spark-submit entry and the driver harness
-    both do exactly that).
     """
     cfg = cfg or ExtractConfig()
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.batch_rows)
-    )
-    if cfg.max_split_mb:
-        # same task decomposition at every cluster size; several waves per
-        # core so jumbo-page skew amortizes without any shuffle
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(cfg.max_split_mb << 20)
-        )
-        spark.conf.set(
-            "spark.sql.files.openCostInBytes", str(max(1, cfg.max_split_mb // 4) << 20)
-        )
-    if cfg.lang_filter:
-        pages = pages.where(F.col("lang").isin(cfg.lang_filter))
+    pages = kernel_input(spark, pages, cfg)
 
     extras = tuple(cfg.extra_passthrough_cols)
     if extras and cfg.output_mode == "spans":
@@ -167,7 +174,7 @@ def run_extract(
         )
     projected = pages.select("url", "html", *extras)
     # map-only hot path: no pre-kernel shuffle unless explicitly requested
-    # (skew is handled by split sizing above; see ExtractConfig.presalt_shuffle)
+    # (see ExtractConfig.presalt_shuffle)
     part = salted(projected, cfg.salt_buckets) if cfg.presalt_shuffle else projected
     part = part.select("url", "html", *extras)
 

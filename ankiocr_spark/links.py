@@ -821,11 +821,12 @@ def registered_domain(hosts: DataFrame) -> DataFrame:
     co.uk). Input: (doc_id, host). Output adds (public_suffix,
     registered_domain); unlisted TLDs fall back to the PSL's implicit
     ``*`` rule (suffix = last label), and a host that IS a bare suffix
-    has no registrable part (NULL). A trailing FQDN dot
-    (``example.com.`` — routine in DNS-derived host data) is stripped
-    before matching; otherwise-invalid hosts (empty labels) pass through
-    deterministically — host validation belongs to `host_col`/url
-    parsing, not here.
+    has no registrable part (NULL). Matching is case-insensitive (DNS
+    names are; the output labels are lowercase) and every trailing FQDN
+    dot (``example.com.`` — routine in DNS-derived host data) is stripped
+    first; the host column itself passes through verbatim.
+    Otherwise-invalid hosts (empty labels) pass through deterministically
+    — host validation belongs to `host_col`/url parsing, not here.
 
     Scale shape: ONE codegen projection fused into the scan, zero
     Exchange (plan-asserted) — the match length is `array_max` over the
@@ -847,7 +848,7 @@ def registered_domain(hosts: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     sfx = F.array(*[F.lit(s) for s in PUBLIC_SUFFIXES])
-    labels = F.split(F.regexp_replace("host", r"\.$", ""), r"\.")
+    labels = F.split(F.regexp_replace(F.lower("host"), r"\.+$", ""), r"\.")
     n = F.size(labels)
 
     def cand(k: F.Column) -> F.Column:
@@ -909,7 +910,8 @@ WITH hosts AS (
            ELSE 'intranet-host' || doc_id END AS host
   FROM documents),
 sfx(suffix) AS (VALUES {values}),
-lab AS (SELECT doc_id, host, string_split(host, '.') AS labels FROM hosts),
+norm AS (SELECT doc_id, host, rtrim(lower(host), '.') AS nh FROM hosts),
+lab AS (SELECT doc_id, host, string_split(nh, '.') AS labels FROM norm),
 cand AS (
   SELECT doc_id, host, k
   FROM lab, unnest([{", ".join(str(k) for k in range(1, _PSL_MAX_LABELS + 1))}]) AS t(k)
@@ -918,9 +920,9 @@ cand AS (
         IN (SELECT suffix FROM sfx)),
 m AS (SELECT doc_id, host, max(k) AS mk FROM cand GROUP BY doc_id, host),
 fin AS (
-  SELECT h.doc_id, h.host, string_split(h.host, '.') AS labels,
-         len(string_split(h.host, '.')) AS n, coalesce(m.mk, 1) AS kf
-  FROM hosts h LEFT JOIN m ON m.doc_id = h.doc_id AND m.host = h.host)
+  SELECT h.doc_id, h.host, string_split(h.nh, '.') AS labels,
+         len(string_split(h.nh, '.')) AS n, coalesce(m.mk, 1) AS kf
+  FROM norm h LEFT JOIN m ON m.doc_id = h.doc_id AND m.host = h.host)
 SELECT doc_id, host,
        array_to_string(labels[n - kf + 1:n], '.') AS public_suffix,
        CASE WHEN n > kf

@@ -35,7 +35,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .config import ExtractConfig
 from .fixtures import PAGES_SCHEMA
-from .job import EXTRACT_SCHEMA
 from .ops import ORACLE_FLAGSHIP, docs_as_pages
 
 
@@ -60,25 +59,14 @@ def stream_pages(
 
 
 def stream_extract_plan(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
-    """The streaming extraction plan: same projection + fused kernel as the
-    batch job; the salt bucket is computed post-kernel for the partitioned
-    sink (a pre-kernel repartition would force a stateless shuffle per
-    micro-batch for no balance win — micro-batch file splits already bound
-    task size via maxFilesPerTrigger).
-
-    Honors the SAME ExtractConfig semantics as the batch job (r3 review:
-    preserve_interword_spaces and lang_filter were silently ignored,
-    breaking the batch/stream parity the module promises); the knobs with
-    no streaming analog raise instead of silently doing nothing."""
-    from .job import bucket_col, make_extract_batches
+    """The streaming extraction plan: the batch job's plan
+    (``job.run_extract``) over a streaming pages DataFrame, so both honour
+    the same ExtractConfig by construction; the knobs with no streaming
+    analog raise instead of silently doing nothing."""
+    from .job import require_plain_text_mode, run_extract
 
     cfg = cfg or ExtractConfig()
-    if cfg.output_mode == "spans" or cfg.extra_passthrough_cols:
-        raise ValueError(
-            "streaming extraction supports output_mode='text_column' with "
-            "no extra_passthrough_cols — use the batch extract_job for "
-            "those modes"
-        )
+    require_plain_text_mode(cfg, "streaming extraction")
     if cfg.presalt_shuffle:
         # no silent no-op (the module contract): a per-micro-batch
         # stateless repartition buys no balance here — micro-batch file
@@ -88,31 +76,7 @@ def stream_extract_plan(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -
             "bounds micro-batch task size) — use the batch extract_job "
             "for salted-repartition layouts"
         )
-    if cfg.lang_filter:
-        pages = pages.where(F.col("lang").isin(cfg.lang_filter))
-    out = pages.select("url", "html").mapInPandas(
-        make_extract_batches(cfg.preserve_interword_spaces), EXTRACT_SCHEMA
-    )
-    return out.withColumn("bucket", bucket_col(F.col("url"), cfg.salt_buckets))
-
-
-def _apply_stream_confs(spark: SparkSession, cfg: ExtractConfig) -> None:
-    """Session confs the streaming entries share with the batch job:
-    Arrow batch sizing plus — when set — the file-split knobs, which
-    apply to micro-batch file reads exactly as to batch scans
-    (r5 review: max_split_mb was silently ignored here, the same bug
-    class r3 fixed for resumable_extract)."""
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.batch_rows)
-    )
-    if cfg.max_split_mb:
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(cfg.max_split_mb << 20)
-        )
-        spark.conf.set(
-            "spark.sql.files.openCostInBytes",
-            str(max(1, cfg.max_split_mb // 4) << 20),
-        )
+    return run_extract(pages.sparkSession, pages, cfg)
 
 
 def start_stream_extract(
@@ -128,8 +92,6 @@ def start_stream_extract(
     by bucket). With ``available_now`` it drains current files and stops —
     call again after new dumps land and ONLY the new files process (the
     resume test asserts this)."""
-    cfg = cfg or ExtractConfig()
-    _apply_stream_confs(spark, cfg)
     pages = stream_pages(spark, input_dir, max_files_per_trigger)
     plan = stream_extract_plan(pages, cfg)
     writer = (
@@ -175,8 +137,6 @@ def start_stream_extract_dedup(
     only for ``dedup_horizon`` behind the stream's max ``warc_ts``, so
     state stays bounded (urls-per-horizon, not all urls ever) — the
     streaming complement of the batch dedup_exact operator."""
-    cfg = cfg or ExtractConfig()
-    _apply_stream_confs(spark, cfg)
     pages = stream_pages(spark, input_dir)
     deduped = (
         pages.withWatermark("warc_ts", dedup_horizon)

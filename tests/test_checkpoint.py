@@ -65,6 +65,37 @@ def test_kill_and_resume(spark, pages_dir, tmp_path):
     # two distinct run_ids prove the resume (lineage across runs)
     assert ledger_df.select("run_id").distinct().count() == 2
 
+    # every counter equals an independent recount: rows_in/bytes_in from
+    # the input under bucket_col, the rest from the written output
+    from ankiocr_spark.job import bucket_col
+
+    counters = ("rows_in", "bytes_in", "rows_out", "n_errors", "n_empty")
+    ledger_counts = {
+        r["bucket"]: tuple(r[c] for c in counters)
+        for r in per_bucket.select("bucket", *counters).collect()
+    }
+    assert len(ledger_counts) == per_bucket.count() == BUCKETS
+    inp = {
+        r["bucket"]: (r["rows_in"], r["bytes_in"])
+        for r in spark.read.parquet(pages_dir)
+        .groupBy(bucket_col(F.col("url"), BUCKETS).alias("bucket"))
+        .agg(
+            F.count("*").alias("rows_in"),
+            F.sum(F.coalesce(F.octet_length("html"), F.lit(0))).alias("bytes_in"),
+        )
+        .collect()
+    }
+    outp = {
+        r["bucket"]: (r["rows_out"], r["n_errors"], r["n_empty"])
+        for r in result.groupBy("bucket").agg(
+            F.count_if(F.col("error").isNull()).alias("rows_out"),
+            F.count_if(F.col("error").isNotNull()).alias("n_errors"),
+            F.count_if(F.col("extracted_text") == "").alias("n_empty"),
+        ).collect()
+    }
+    assert ledger_counts == {b: inp[b] + outp[b] for b in range(BUCKETS)}
+    assert sum(v[4] for v in ledger_counts.values()) > 0  # empties planted
+
 
 def test_resume_is_noop_when_complete(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out2")
@@ -170,7 +201,10 @@ def test_config_parity_with_extract_job(spark, pages_dir, tmp_path):
     )
     pages.write.parquet(spaced)
 
-    cfg_kwargs = dict(salt_buckets=4, preserve_interword_spaces=True)
+    cfg_kwargs = dict(
+        salt_buckets=4, preserve_interword_spaces=True,
+        lang_filter=["en", "eng"],
+    )
     out_ckpt = str(tmp_path / "out_ckpt")
     out_batch = str(tmp_path / "out_batch")
     resumable_extract(
@@ -185,6 +219,7 @@ def test_config_parity_with_extract_job(spark, pages_dir, tmp_path):
          for r in spark.read.parquet(out_batch).collect()}
     assert a == b
     assert "columnar   layout   preserved" in a["https://spaced.example/x"]
+    assert len(a) == pages.where(F.col("lang").isin("en", "eng")).count() < N
     # and without the knob the space runs collapse (defaults differ)
     resumable_extract(
         spark, spaced, str(tmp_path / "out_plain"),

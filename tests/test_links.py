@@ -373,15 +373,17 @@ def test_resolve_redirects_early_exit_skips_settled_rounds(spark, monkeypatch):
 
 
 def test_registered_domain_strips_fqdn_trailing_dot(spark):
-    """DNS-derived host data routinely carries the FQDN trailing dot;
-    matching must see 'example.com.' as 'example.com' (kept verbatim in
-    the host column — only the match normalizes)."""
+    """DNS-derived host data routinely carries the FQDN trailing dot (or
+    several) and arbitrary case; matching must see 'WWW.Example.CO.UK..'
+    as 'www.example.co.uk' (kept verbatim in the host column — only the
+    match normalizes)."""
     from pyspark.sql import functions as F  # noqa: F401
 
     from ankiocr_spark.links import registered_domain
 
     hosts = spark.createDataFrame(
-        [(1, "www.example.com."), (2, "portal.ac.uk."), (3, "ac.uk.")],
+        [(1, "www.example.com."), (2, "portal.ac.uk."), (3, "ac.uk."),
+         (4, "WWW.Example.CO.UK..")],
         "doc_id: bigint, host: string",
     )
     got = {r["doc_id"]: r for r in registered_domain(hosts).collect()}
@@ -391,6 +393,8 @@ def test_registered_domain_strips_fqdn_trailing_dot(spark):
     assert (got[2]["public_suffix"], got[2]["registered_domain"]) == (
         "ac.uk", "portal.ac.uk")
     assert (got[3]["public_suffix"], got[3]["registered_domain"]) == ("ac.uk", None)
+    assert (got[4]["public_suffix"], got[4]["registered_domain"]) == (
+        "co.uk", "example.co.uk")
 
 
 def test_registered_domain_matches_python_reference_on_random_hosts(spark):
@@ -409,12 +413,15 @@ def test_registered_domain_matches_python_reference_on_random_hosts(spark):
     hosts = []
     for i in range(200):
         n = rng.randint(1, 5)
-        hosts.append((i, ".".join(rng.choice(frags) for _ in range(n))))
+        host = ".".join(rng.choice(frags) for _ in range(n))
+        # mixed-case and (multi-)trailing-dot variants of the same shapes
+        host = "".join(c.upper() if rng.random() < 0.3 else c for c in host)
+        hosts.append((i, host + "." * rng.choice((0, 0, 1, 2, 3))))
 
     suffixes = set(PUBLIC_SUFFIXES)
 
     def ref(host):
-        labels = host.rstrip(".").split(".")
+        labels = host.lower().rstrip(".").split(".")
         n = len(labels)
         mk = 0
         for k in range(1, min(n, 4) + 1):
