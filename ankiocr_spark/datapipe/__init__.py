@@ -3,13 +3,12 @@
 Beyond the reference's own surface (SURVEY.md §2), these are the operations
 a web-scale training-data pipeline needs as first-class components:
 deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard,
-embedding-cosine), similarity search (brute-force + LSH-bucketed ANN),
+embedding-cosine), similarity search (brute-force + LSH-bucketed ANN) and
 text analysis (language-ID, quality scoring, token counting,
-fingerprinting), and multimodal binary-column plumbing.
+fingerprinting).
 
-Everything is declarative DataFrame/SQL (JVM-side, codegen-friendly) except
-the multimodal decode stub, which is mapInPandas plumbing by design. Hash
+Everything is declarative DataFrame/SQL (JVM-side, codegen-friendly). Hash
 functions are md5-derived so DuckDB oracles can reproduce them bit-exactly.
 """
 
-from . import dedup, similarity, textstats, multimodal  # noqa: F401
+from . import dedup, similarity, textstats  # noqa: F401

@@ -817,7 +817,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # project the filtered array ONCE below the consumers: HOF lambdas are
     # interpreted (no codegen CSE), so referencing `kept` twice in one
-    # select would run the array filter twice per row (docs/PLANS.md §CSE).
+    # select would run the array filter twice per row.
     kept_rows = paged.select(
         "doc_id",
         F.size("_lines").cast("bigint").alias("n_lines"),

@@ -297,7 +297,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # C4 stage: build the injected line array once, filter by the shared
     # rule, gate the doc (each HOF output projected ONCE — no codegen CSE
-    # inside lambdas, docs/PLANS.md §CSE)
+    # inside lambdas)
     c4 = ext.select(
         "doc_id", "lang", "body",
         c4_lines(F.col("body"), F.col("doc_id")).alias("_lines"),
@@ -438,7 +438,7 @@ def q_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # project the HOF inputs ONCE below their consumers (no codegen CSE
-    # inside lambdas — docs/PLANS.md §CSE)
+    # inside lambdas)
     staged = docs.select(
         "doc_id",
         "lang",

@@ -475,7 +475,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scorer, exact by construction."""
     base = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     # token array projected ONCE below its consumers (HOF lambdas have no
-    # codegen CSE — docs/PLANS.md §CSE)
+    # codegen CSE)
     toks = base.select(
         "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("_toks")
     )

@@ -40,84 +40,63 @@ HEADLINE = [
 #: (MinHash-LSH is). Timed once and reported separately so the headline
 #: wall reflects the scale paths (VERDICT r3 #4: Jaccard alone was 47%
 #: of the r3 headline).
+#:
+#: The flag marks the documents-driven round-5 ops ALSO timed at the 10×
+#: corpus — at sf0.1 they finish inside the noise floor, so the 10×
+#: number is the one that carries scaling signal. semdedup is not
+#: flagged: it reads the embeddings table, which the 10× corpus symlinks
+#: at 1×.
 SECONDARY = [
-    "dedup_ngram_jaccard",
+    ("dedup_ngram_jaccard", False),
     # the delta-economics showcase: value-equals a full re-extract but the
     # kernel sees only the added/changed slice. Timed for visibility; not
     # headline because the sf-table fixture must synthesize BOTH snapshots
     # (two kernel passes) — production reads the old extract table.
-    "incremental_extract",
+    ("incremental_extract", False),
     # r4 additions, timed for visibility; kept off the headline so the
     # round-over-round wall stays comparable (same 8-query basket).
-    "seq_pack",
-    "crossdedup_lsh",
-    "train_val_split",
-    "boilerplate_strip",
+    ("seq_pack", False),
+    ("crossdedup_lsh", False),
+    ("train_val_split", False),
+    ("boilerplate_strip", False),
     # cluster_keeper / cluster_keeper_staged are NOT timed: at sf0.1 both
     # pay the simhash-pair + CC-propagation chain (~69 s, dominated by
     # stages the pair/cluster queries already characterize — inline pays
     # it in-lineage, staged pays it once at staging time); the keeper
     # step itself adds one broadcast join + one cluster-partitioned
     # window either way.
-    "vocab_topn",
-    "bm25_topk",
-    "hybrid_rrf",
-    "classifier_score",
-    "url_latest",
-    "dsir_weight",
-    "c4_filter",
-    "badwords_filter",
-    "token_entropy",
-    "signal_correlation",
+    ("vocab_topn", False),
+    ("bm25_topk", False),
+    ("hybrid_rrf", False),
+    ("classifier_score", False),
+    ("url_latest", False),
+    ("dsir_weight", False),
+    ("c4_filter", False),
+    ("badwords_filter", False),
+    ("token_entropy", False),
+    ("signal_correlation", False),
     # r5 additions
-    "classifier_train",
-    "recrawl_e2e",
-    "curation_pipeline_e2e",
-    "semdedup",
-    "domain_reputation",
-    "robots_txt_filter",
-    "split_leakage",
-    "crawl_schedule",
-    "zipf_alpha",
-    "bpe_pair_counts",
-    "perplexity_buckets",
-    "corpus_health",
-    "gate_funnel",
-    "page_metadata",
-    "html_tables",
-    "canonical_collapse",
-    "lang_mismatch",
-    "mojibake",
-    "charset_sniff",
-    "redirect_resolve",
-    "registered_domain",
-]
-
-#: the documents-driven round-5 ops ALSO timed at the 10× corpus — at
-#: sf0.1 they finish inside the noise floor, so the 10× number is the one
-#: that carries scaling signal. Defined next to SECONDARY so a new
-#: documents-driven query is added in one place (review find: the inline
-#: tuple forced a dual edit and would silently drop the 10× timing).
-#: semdedup is excluded: it reads the embeddings table, which the 10×
-#: corpus symlinks at 1×.
-SECONDARY_10X = [
-    "domain_reputation",
-    "robots_txt_filter",
-    "split_leakage",
-    "crawl_schedule",
-    "zipf_alpha",
-    "bpe_pair_counts",
-    "perplexity_buckets",
-    "corpus_health",
-    "gate_funnel",
-    "page_metadata",
-    "html_tables",
-    "canonical_collapse",
-    "lang_mismatch",
-    "mojibake",
-    "charset_sniff",
-    "redirect_resolve",
-    "registered_domain",
+    ("classifier_train", False),
+    ("recrawl_e2e", False),
+    ("curation_pipeline_e2e", False),
+    ("semdedup", False),
+    ("domain_reputation", True),
+    ("robots_txt_filter", True),
+    ("split_leakage", True),
+    ("crawl_schedule", True),
+    ("zipf_alpha", True),
+    ("bpe_pair_counts", True),
+    ("perplexity_buckets", True),
+    ("corpus_health", True),
+    ("gate_funnel", True),
+    ("page_metadata", True),
+    ("html_tables", True),
+    ("canonical_collapse", True),
+    ("lang_mismatch", True),
+    ("mojibake", True),
+    ("charset_sniff", True),
+    ("redirect_resolve", True),
+    ("registered_domain", True),
 ]
 
 
@@ -235,8 +214,7 @@ def _ensure_tenx_corpus(spark, sf_dir: str) -> None:
     out.repartition(32).write.mode("overwrite").parquet(
         os.path.join(TENX_DIR, "documents.parquet")
     )
-    for name in ("region", "nation", "customer", "supplier", "part",
-                 "orders", "lineitem", "events", "embeddings"):
+    for name in ("events", "embeddings"):
         dst = os.path.join(TENX_DIR, f"{name}.parquet")
         if not os.path.exists(dst):
             os.symlink(os.path.join(sf_dir, f"{name}.parquet"), dst)
@@ -343,18 +321,18 @@ def main() -> None:
     timings_10x = {k: min(x1[k], x2[k]) for k in x1}
 
     secondary: dict[str, float] = {}
-    for name in SECONDARY:
+    for name, _ in SECONDARY:
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).count()
         secondary[name] = round(time.perf_counter() - t0, 3)
 
-    # SECONDARY_10X rationale at its definition. Best-of-2 like every
+    # 10× flag rationale at SECONDARY's definition. Best-of-2 like every
     # other signal-bearing number here — a single cold sample would put
     # one GC pause straight into the published figure (review find; the
     # r2 false regression was exactly this).
     secondary_10x: dict[str, float] = {}
     for _ in range(2):
-        for name in SECONDARY_10X:
+        for name in [n for n, at_10x in SECONDARY if at_10x]:
             t0 = time.perf_counter()
             qs[name](spark, TENX_DIR).count()
             dt = round(time.perf_counter() - t0, 3)

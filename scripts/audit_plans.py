@@ -1,12 +1,13 @@
-"""Physical-plan audit: dump .explain("formatted") for the headline queries
-and grep for the scale-critical properties (SURVEY.md §4):
+"""Physical-plan audit: count the scale-critical markers (SURVEY.md §4) in
+each audited query's ``.explain("formatted")`` plan:
 
 - PushedFilters / ReadSchema on parquet scans (pushdown + column pruning)
 - BroadcastHashJoin where a small side exists; no accidental CartesianProduct
 - WholeStageCodegen spans around JVM-side expression work
 - AQE enabled (AdaptiveSparkPlan)
 
-Output -> docs/PLANS.md (checked in, regenerated per round).
+Output -> docs/PLANS.md: one signature row per query plus the NOTES below.
+Regenerate with ``python scripts/audit_plans.py``.
 """
 
 from __future__ import annotations
@@ -40,15 +41,7 @@ AUDIT = [
     "ann_lsh_buckets",
     "dedup_simhash",
     "token_count",
-    "multimodal_frame_sample",
     "pdf_extract",
-    "sessionize",
-    "rollup_report",
-    "stratified_sample",
-    "topk_per_group",
-    "pricing_summary",
-    "regional_revenue",
-    "json_props_histogram",
     "outlinks",
     "pagerank",
     "outlinks_pagerank",
@@ -113,7 +106,7 @@ AUDIT = [
     "registered_domain",
 ]
 
-#: caveats rendered under the flags line — mostly for iterative queries,
+#: caveats rendered under the signature table — mostly for iterative queries,
 #: where the printed tree nests InMemoryRelation subplans whose Exchanges
 #: already ran exactly once (materialized by the per-iteration scalar
 #: action) and will NOT re-execute when the returned DataFrame runs.
@@ -193,7 +186,7 @@ NOTES = {
         "a ReusedExchange — one corpus scan, ONE kernel run, asserted on "
         "the isFinalPlan=true dump by tests/test_pipeline.py. All gates "
         "(C4, bad-words, classifier, mix draw) collapse into the single "
-        "Filter (5) fused onto the kernel output; the mixture-rate "
+        "Filter fused onto the kernel output; the mixture-rate "
         "lookup is a literal map, not a join."
     ),
     "recrawl_e2e": (
@@ -240,29 +233,27 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+NEEDLES = ("AdaptiveSparkPlan", "WholeStageCodegen", "PushedFilters",
+           "ReadSchema", "BroadcastHashJoin", "SortMergeJoin",
+           "CartesianProduct", "Exchange")
+
+
+def signature(txt: str) -> str:
+    return ", ".join(f"{n}×{txt.count(n)}" for n in NEEDLES if n in txt) or "none"
+
+
 def main() -> None:
     spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8)
     qs = entry.queries()
-    out = ["# Physical plans — headline queries (`.explain(\"formatted\")`)\n",
-           f"\nInput: `{SF_DIR}`. Regenerate with "
-           "`python scripts/audit_plans.py`.\n"]
+    out = ["# Physical-plan signatures — audited queries\n",
+           f"\nMarker counts in each query's `.explain(\"formatted\")` plan "
+           f"on `{SF_DIR}`. Regenerate with `python scripts/audit_plans.py`.\n",
+           "\n| query | plan signature |\n|---|---|\n"]
     for name in AUDIT:
-        df = qs[name](spark, SF_DIR)
-        txt = plan_text(df)
-        flags = []
-        for needle in ("AdaptiveSparkPlan", "WholeStageCodegen",
-                       "PushedFilters", "ReadSchema", "BroadcastHashJoin",
-                       "SortMergeJoin", "CartesianProduct", "Exchange"):
-            n = txt.count(needle)
-            if n:
-                flags.append(f"{needle}×{n}")
-        note = NOTES.get(name, "")
-        out.append(
-            f"\n## {name}\n\n`{', '.join(flags)}`\n"
-            + (f"\n{note}\n" if note else "")
-            + f"\n```\n{txt}```\n"
-        )
+        out.append(f"| {name} | `{signature(plan_text(qs[name](spark, SF_DIR)))}` |\n")
     spark.stop()
+    out.append("\n## Notes\n")
+    out.extend(f"\n- **{name}**: {note}\n" for name, note in NOTES.items())
     os.makedirs(os.path.join(REPO, "docs"), exist_ok=True)
     with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write("".join(out))

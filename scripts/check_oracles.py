@@ -18,10 +18,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+TABLES = ("events", "documents", "embeddings")
 
 
 def canon_hash(pdf) -> tuple:
@@ -31,7 +28,7 @@ def canon_hash(pdf) -> tuple:
     HUGEINT (int128 → object/float in pandas) vs Spark BIGINT (int64) —
     identical values, different dtype, driver hash_match=false — and (b)
     list-typed columns, which crash the driver's sort_values canonicalizer
-    (round-1 `multimodal_features` err: unhashable type 'list')."""
+    (round-1 err: unhashable type 'list')."""
     cols = sorted(pdf.columns)
     pdf = pdf[cols]
     problem = None
@@ -40,9 +37,8 @@ def canon_hash(pdf) -> tuple:
     for c in cols:
         s = pdf[c]
         # dtype KIND, not width: the round-1 driver passed int32-vs-int64
-        # (multimodal_meta) but failed int64-vs-HUGEINT→float64/object
-        # (error_report etc.), so integer width is invisible to it while
-        # numeric class is not.
+        # but failed int64-vs-HUGEINT→float64/object (error_report etc.),
+        # so integer width is invisible to it while numeric class is not.
         dtypes.append(s.dtype.kind)
         if s.dtype == object and s.map(
             lambda v: isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray"

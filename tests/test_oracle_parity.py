@@ -10,10 +10,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("events", "documents", "embeddings")
 
 
 def _duck(sf_dir):
@@ -102,6 +99,15 @@ def test_driver_window_holds_every_unproven_query():
         f"front({len(front)}) + middle({n_middle}) exceeds the driver's "
         "50-query window — rotate stable queries into _TAIL"
     )
-    # no typos: every pinned name actually exists
+    # no typos: every pinned name actually exists — in the export order
+    # here, and in the plan-audit and bench lists, which only hit a stale
+    # name as a KeyError when their script runs
     assert set(entrymod._FRONT) <= set(names)
     assert set(entrymod._TAIL) <= set(names)
+    import bench
+    from scripts import audit_plans
+
+    assert set(audit_plans.AUDIT) <= set(names)
+    assert set(audit_plans.NOTES) <= set(names)
+    assert set(bench.HEADLINE) <= set(names)
+    assert {name for name, _ in bench.SECONDARY} <= set(names)

@@ -1,6 +1,6 @@
 """Invariant tests for the composed pipeline queries — properties the
 DuckDB oracle cannot catch because it replicates the same math (see the
-MinHash/sessionize precedents): dedup really removes re-crawl dups,
+MinHash precedent): dedup really removes re-crawl dups,
 decontamination really drops every eval doc that survives the gates, and
 window ranks are dense per host."""
 

@@ -37,19 +37,20 @@ assert flag.count() == 500
 sample = {r["url"]: r["extracted_text"] for r in flag.limit(5).collect()}
 assert all(v is None or isinstance(v, str) for v in sample.values())
 
-# a kernel-backed mapInPandas query and a pure-JVM query both run
-assert qs["multimodal_features"](spark, "/root/testdata/sf0.001").count() == 500
+# a second mapInPandas query (outlinks: 5 anchors per wrapped page, 2500
+# on sf0.001) and a pure-JVM query both run
+assert qs["outlinks"](spark, %(sf_dir)r).count() == 2500
 assert qs["run_metrics"](spark, "/root/testdata/sf0.001").count() > 0
 print("VANILLA-OK")
 spark.stop()
 """
 
 
-def test_entry_contract_under_vanilla_session(tmp_path):
+def test_entry_contract_under_vanilla_session(tmp_path, sf_dir):
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the driver exports nothing for us
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT % {"repo": REPO}],
+        [sys.executable, "-c", SCRIPT % {"repo": REPO, "sf_dir": sf_dir}],
         capture_output=True, text=True, timeout=400,
         cwd=str(tmp_path),  # not the repo root — imports must not need cwd
         env=env,
