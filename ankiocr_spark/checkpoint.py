@@ -30,7 +30,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import uuid
-from typing import Iterator, List, Optional, Sequence
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.accumulators import AccumulatorParam
@@ -85,6 +85,30 @@ def _epoch_rows(spark: SparkSession, ledger_dir: str) -> list:
     return rows
 
 
+def _current_epoch(
+    spark: SparkSession, ledger_dir: str, salt_buckets: int
+) -> Tuple[set, bool]:
+    """(buckets done under the current epoch, whether the ledger's LAST
+    row carries a different epoch key) — both answers from ONE ledger
+    read. The second is True when the coming run will be the first to
+    mutate the table under this (kernel, count); an empty ledger has
+    nothing to invalidate. See ``completed_buckets`` for the epoch rule."""
+    done: set = set()
+    stale = False
+    for r in _epoch_rows(spark, ledger_dir):
+        stale = (
+            r["salt_buckets"] != salt_buckets
+            or r["kernel_version"] != KERNEL_VERSION
+        )
+        if stale:
+            # a different-epoch run happened after everything collected
+            # so far — everything before it describes a dead layout
+            done.clear()
+        elif r["status"] == "done":
+            done.add(r["bucket"])
+    return done, stale
+
+
 def completed_buckets(
     spark: SparkSession, ledger_dir: str, salt_buckets: int
 ) -> List[int]:
@@ -100,35 +124,7 @@ def completed_buckets(
     appended after the last different-epoch row reflect the current
     table. The ledger is metadata-sized, so the scan is a driver-side
     pass over collected rows."""
-    done: set = set()
-    for r in _epoch_rows(spark, ledger_dir):
-        if (
-            r["salt_buckets"] != salt_buckets
-            or r["kernel_version"] != KERNEL_VERSION
-        ):
-            # a different-epoch run happened after everything collected
-            # so far — everything before it describes a dead layout
-            done.clear()
-            continue
-        if r["status"] == "done":
-            done.add(r["bucket"])
-    return sorted(done)
-
-
-def _needs_epoch_marker(
-    spark: SparkSession, ledger_dir: str, salt_buckets: int
-) -> bool:
-    """True when the ledger's LAST row (if any) carries a different epoch
-    key than the current run — i.e. the coming run will be the first to
-    mutate the table under this (kernel, count)."""
-    rows = _epoch_rows(spark, ledger_dir)
-    if not rows:
-        return False  # nothing to invalidate yet
-    last = rows[-1]
-    return (
-        last["salt_buckets"] != salt_buckets
-        or last["kernel_version"] != KERNEL_VERSION
-    )
+    return sorted(_current_epoch(spark, ledger_dir, salt_buckets)[0])
 
 
 def _clear_stale_bucket_partitions(output_path: str, salt_buckets: int) -> None:
@@ -249,7 +245,7 @@ def resumable_extract(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     all_buckets = list(range(cfg.salt_buckets))
-    done = set(completed_buckets(spark, ledger_dir, cfg.salt_buckets))
+    done, needs_marker = _current_epoch(spark, ledger_dir, cfg.salt_buckets)
     pending = [b for b in all_buckets if b not in done]
     # CRASH-SAFE epoch transition (review find #2 on the first epoch
     # cut): the marker row records the new (kernel, count) BEFORE any
@@ -259,7 +255,7 @@ def resumable_extract(
     # rows as the ledger's tail, and a revert to that epoch would skip
     # everything over a half-mutated table. With the marker, any such
     # revert sees a different-epoch tail row and recomputes fully.
-    if _needs_epoch_marker(spark, ledger_dir, cfg.salt_buckets):
+    if needs_marker:
         now = _dt.datetime.now()
         _append_ledger(spark, ledger_dir, [
             (run_id, KERNEL_VERSION, cfg.salt_buckets, -1, "layout",

@@ -78,26 +78,28 @@ def make_extract_batches(
     return fn
 
 
-def make_spans_batches(preserve_spaces: bool = False):
-    """Span-level variant — the "tooltip" writeback analog (api.py:230-236):
-    one output row per scored block instead of one per page."""
-    cols = ["url", "block_id", "tag", "text", "n_chars", "link_density", "kept"]
+def page_rows(pages: DataFrame, fn, schema: str) -> DataFrame:
+    """THE page→many-rows stage (span output, outlinks, anchor texts):
+    ``fn(url, html)`` returns the list of one page's row tuples, in
+    ``schema`` order. A NULL-html page adds no rows, and neither does a
+    page whose ``fn`` raises — the text-mode job quarantines such a page
+    with an error row; these stages skip it, in this one place (the
+    reference's log-and-skip, api.py:50-62)."""
+    columns = [f.split()[0] for f in schema.split(",")]  # flat DDL only
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
             rows = []
             for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
                 if html is None:
                     continue
                 try:
-                    for b in extract_spans(html, preserve_spaces=preserve_spaces):
-                        rows.append((url, b.block_id, b.tag, b.text, b.n_chars,
-                                     b.link_density, b.kept))
+                    rows.extend(fn(url, html))
                 except Exception:
-                    continue  # quarantined by the text-mode job; spans skips
-            yield pd.DataFrame(rows, columns=cols)
+                    continue
+            yield pd.DataFrame(rows, columns=columns)
 
-    return fn
+    return pages.select("url", "html").mapInPandas(batches, schema)
 
 
 def bucket_col(url_col, buckets: int) -> "F.Column":
@@ -179,9 +181,13 @@ def run_extract(
     part = part.select("url", "html", *extras)
 
     if cfg.output_mode == "spans":
-        out = part.mapInPandas(
-            make_spans_batches(cfg.preserve_interword_spaces), SPANS_SCHEMA
-        )
+        # the "tooltip" writeback analog (api.py:230-236): one row per
+        # scored block instead of one per page
+        preserve = cfg.preserve_interword_spaces
+        out = page_rows(part, lambda url, html: [
+            (url, b.block_id, b.tag, b.text, b.n_chars, b.link_density, b.kept)
+            for b in extract_spans(html, preserve_spaces=preserve)
+        ], SPANS_SCHEMA)
     else:
         schema = EXTRACT_SCHEMA
         if extras:

@@ -30,11 +30,13 @@ from dataclasses import dataclass
 from html.parser import HTMLParser
 from typing import List, Optional, Tuple
 
+from . import textclean
 from .textclean import clean_text
 
 # ---------------------------------------------------------------------------
 # SPEC constants — changing any of these is a kernel version change and MUST
-# break golden tests (FIXTURES.md §2). KERNEL_VERSION hashes this module.
+# break golden tests (FIXTURES.md §2). KERNEL_VERSION hashes this module
+# and textclean.py.
 # ---------------------------------------------------------------------------
 
 #: Subtrees dropped entirely — the analog of the reference's image-format
@@ -536,13 +538,18 @@ def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> d
 
 
 def _kernel_version() -> str:
-    """Content hash of this module — recorded in the checkpoint ledger so a
-    kernel change invalidates resume lineage (SURVEY.md §7 step 6)."""
+    """Content hash of the kernel's source — this module plus textclean,
+    whose ``clean_text`` shapes every extract — recorded in the checkpoint
+    ledger so a kernel change invalidates resume lineage (SURVEY.md §7
+    step 6)."""
+    h = hashlib.md5()
     try:
-        with open(__file__, "rb") as fh:
-            return hashlib.md5(fh.read()).hexdigest()[:12]
+        for path in (__file__, textclean.__file__):
+            with open(path, "rb") as fh:
+                h.update(fh.read())
     except OSError:
         return "unknown"
+    return h.hexdigest()[:12]
 
 
 KERNEL_VERSION = _kernel_version()

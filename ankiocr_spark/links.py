@@ -15,65 +15,95 @@ Arrow-batched only (mapInPandas), one output row per link.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .job import page_rows
+from .kernel import _decode
 
-class _LinkParser(HTMLParser):
+
+class _AnchorParser(HTMLParser):
+    """Collects (raw href, visible anchor text) per <a href>, document
+    order; an empty or fragment-only href is skipped (the api.py:50-62
+    skip-invalid analog). Anchor text is whitespace-normalized (entities
+    already resolved by convert_charrefs). A second <a> opening before
+    the first closes implicitly closes it (the HTML5 rule browsers
+    apply), and a page truncated inside an anchor still emits the
+    pending pair on close() — so every <a> start tag with a valid href
+    yields exactly one pair, and outlinks and anchor texts see the same
+    links."""
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.hrefs: List[str] = []
+        self.pairs: List[Tuple[str, str]] = []
+        self._href: str | None = None
+        self._buf: List[str] = []
+
+    def _flush(self) -> None:
+        if self._href is not None:
+            self.pairs.append((self._href, " ".join("".join(self._buf).split())))
+            self._href = None
+            self._buf = []
 
     def handle_starttag(self, tag: str, attrs) -> None:
         if tag != "a":
             return
+        self._flush()  # implicit close of a still-open anchor
         for k, v in attrs:
             if k == "href" and v and not v.startswith("#"):
-                self.hrefs.append(v)
+                self._href = v
+                self._buf = []
                 return
+
+    def handle_data(self, data: str) -> None:
+        if self._href is not None:
+            self._buf.append(data)
+
+    def handle_endtag(self, tag: str) -> None:
+        if tag == "a":
+            self._flush()
+
+    def close(self) -> None:
+        super().close()
+        self._flush()  # page truncated mid-anchor
+
+
+def _anchors(html) -> List[Tuple[str, str]]:
+    """(raw_href, anchor_text) per anchor of one page, document order —
+    the one parse behind both link operators. Every payload, bytes or
+    str, decodes through the kernel's ``_decode`` and so gets its
+    ``MAX_HTML_BYTES`` cap."""
+    p = _AnchorParser()
+    p.feed(_decode(html))
+    p.close()
+    return p.pairs
 
 
 def extract_links(base_url: str, html) -> List[Tuple[int, str, str]]:
     """(pos, raw_href, absolute_url) per anchor, document order."""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        from .kernel import _decode
-
-        text = _decode(html)
-    else:
-        text = str(html)
-    p = _LinkParser()
-    p.feed(text)
-    p.close()
     return [
-        (i, href, urljoin(base_url, href)) for i, href in enumerate(p.hrefs)
+        (i, href, urljoin(base_url, href))
+        for i, (href, _) in enumerate(_anchors(html))
     ]
+
+
+def extract_anchor_pairs(base_url: str, html) -> List[Tuple[str, str]]:
+    """(absolute_target, anchor_text) per anchor, document order."""
+    return [(urljoin(base_url, href), anchor) for href, anchor in _anchors(html)]
 
 
 LINKS_SCHEMA = "url string, pos int, href string, target string"
 
 
-def _link_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    cols = ["url", "pos", "href", "target"]
-    for pdf in batches:
-        rows = []
-        for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            if html is None:
-                continue
-            try:
-                for pos, href, target in extract_links(url, html):
-                    rows.append((url, pos, href, target))
-            except Exception:
-                continue  # quarantined by the text-mode job; links skip
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def extract_outlinks(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) → one row per anchor (url, pos, href, target)."""
-    return pages.select("url", "html").mapInPandas(_link_batches, LINKS_SCHEMA)
+    return page_rows(
+        pages,
+        lambda url, html: [(url, *link) for link in extract_links(url, html)],
+        LINKS_SCHEMA,
+    )
 
 
 def q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,84 +504,7 @@ FROM norm
 MAX_ANCHOR_SAMPLE = 8
 
 
-class _AnchorParser(HTMLParser):
-    """Collects (href, visible anchor text) per <a href>, document order.
-    Same stdlib parser + convert_charrefs contract as _LinkParser; anchor
-    text is whitespace-normalized (entities already resolved). A second
-    <a> opening before the first closes implicitly closes it (the HTML5
-    rule browsers apply), and a page truncated inside an anchor still
-    emits the pending pair on close() — otherwise both shapes would
-    silently drop anchors that _LinkParser (starttag-based) counts,
-    making the two link-graph representations disagree on the same page
-    (review find)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.pairs: List[Tuple[str, str]] = []
-        self._href: str | None = None
-        self._buf: List[str] = []
-
-    def _flush(self) -> None:
-        if self._href is not None:
-            self.pairs.append((self._href, " ".join("".join(self._buf).split())))
-            self._href = None
-            self._buf = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag != "a":
-            return
-        self._flush()  # implicit close of a still-open anchor
-        for k, v in attrs:
-            if k == "href" and v and not v.startswith("#"):
-                self._href = v
-                self._buf = []
-                return
-
-    def handle_data(self, data: str) -> None:
-        if self._href is not None:
-            self._buf.append(data)
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag == "a":
-            self._flush()
-
-    def close(self) -> None:
-        super().close()
-        self._flush()  # page truncated mid-anchor
-
-
-def extract_anchor_pairs(base_url: str, html) -> List[Tuple[str, str]]:
-    """(absolute_target, anchor_text) per anchor, document order."""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        from .kernel import _decode
-
-        text = _decode(html)
-    else:
-        text = str(html)
-    p = _AnchorParser()
-    p.feed(text)
-    p.close()
-    return [(urljoin(base_url, href), anchor) for href, anchor in p.pairs]
-
-
 ANCHORS_SCHEMA = "url string, target string, anchor string"
-
-
-def _anchor_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    cols = ["url", "target", "anchor"]
-    for pdf in batches:
-        rows = []
-        for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            if html is None:
-                continue
-            try:
-                for target, anchor in extract_anchor_pairs(url, html):
-                    rows.append((url, target, anchor))
-            except Exception:
-                continue  # quarantined by the text-mode job; anchors skip
-        yield pd.DataFrame(rows, columns=cols)
 
 
 def aggregate_anchor_texts(pages: DataFrame) -> DataFrame:
@@ -568,8 +521,10 @@ def aggregate_anchor_texts(pages: DataFrame) -> DataFrame:
     a '|'-string — the driver canonicalizer rejects array columns)."""
     from pyspark.sql import functions as F
 
-    pairs = pages.select("url", "html").mapInPandas(
-        _anchor_batches, ANCHORS_SCHEMA
+    pairs = page_rows(
+        pages,
+        lambda url, html: [(url, *p) for p in extract_anchor_pairs(url, html)],
+        ANCHORS_SCHEMA,
     )
     return pairs.groupBy("target").agg(
         F.count("*").alias("n_refs"),

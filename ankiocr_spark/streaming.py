@@ -85,25 +85,31 @@ def start_stream_extract(
     output_dir: str,
     checkpoint_dir: str,
     cfg: Optional[ExtractConfig] = None,
-    available_now: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ) -> StreamingQuery:
     """Launch the incremental extraction stream (append sink, partitioned
-    by bucket). With ``available_now`` it drains current files and stops —
-    call again after new dumps land and ONLY the new files process (the
-    resume test asserts this)."""
+    by bucket) under an availableNow trigger: it drains current files and
+    stops — call again after new dumps land and ONLY the new files
+    process (the resume test asserts this)."""
     pages = stream_pages(spark, input_dir, max_files_per_trigger)
-    plan = stream_extract_plan(pages, cfg)
-    writer = (
-        plan.writeStream.format("parquet")
+    return (
+        stream_extract_plan(pages, cfg)
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .partitionBy("bucket")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _drain(q: StreamingQuery, timeout_sec: int = 300) -> None:
+    """Wait for an availableNow query to finish; past ``timeout_sec``,
+    stop it and raise ``TimeoutError``."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(f"stream {q.id} did not drain within {timeout_sec}s")
 
 
 def run_stream_extract_available_now(
@@ -115,12 +121,10 @@ def run_stream_extract_available_now(
     timeout_sec: int = 300,
 ) -> None:
     """Drain-everything-and-stop convenience wrapper (batch parity mode)."""
-    q = start_stream_extract(
-        spark, input_dir, output_dir, checkpoint_dir, cfg, available_now=True
+    _drain(
+        start_stream_extract(spark, input_dir, output_dir, checkpoint_dir, cfg),
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"stream did not drain within {timeout_sec}s")
 
 
 def start_stream_extract_dedup(
@@ -392,9 +396,7 @@ def q_stream_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="10 minutes",
         max_files_per_trigger=1,
     )
-    if not q_handle.awaitTermination(300):
-        q_handle.stop()
-        raise TimeoutError("window-stats stream did not drain")
+    _drain(q_handle)
     return spark.read.parquet(os.path.join(base, "out")).select(
         "window_start", "host", "n_pages"
     )
@@ -458,9 +460,7 @@ def q_stream_host_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, in_dir, os.path.join(base, "out"), os.path.join(base, "ckpt"),
         max_files_per_trigger=1,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("host-tracker stream did not drain")
+    _drain(q)
     out = spark.read.parquet(os.path.join(base, "out"))
     w = Window.partitionBy("host").orderBy(F.col("epoch").desc())
     return (
@@ -514,9 +514,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ExtractConfig(salt_buckets=8, batch_rows=64),
         dedup_horizon="2 days",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("dedup stream did not drain")
+    _drain(q)
     return (
         spark.read.parquet(os.path.join(base, "out"))
         .select("url", "extracted_text")

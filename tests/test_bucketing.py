@@ -286,6 +286,53 @@ def test_incremental_extract_kernel_sees_only_the_delta(spark, sf_dir):
     assert reuse.count() == n_unchanged
 
 
+def test_recrawl_pipeline_null_html_recrawl_matches_incremental(spark):
+    """A page re-crawled with NULL html routes to the kernel under the one
+    re-extract rule, in the composed re-crawl exactly as in
+    incremental_extract: its merged row is the kernel's null_html
+    quarantine (no text), not the stale extract of the old snapshot."""
+    from ankiocr_spark.bucketing import incremental_extract, recrawl_pipeline
+    from ankiocr_spark.config import ExtractConfig
+    from ankiocr_spark.job import run_extract
+
+    body = "<html><body><p>%s</p></body></html>"
+    schema = "url string, html binary"
+    old_pages = spark.createDataFrame([
+        ("u1", (body % ("old text of page one " * 3)).encode()),
+        ("u2", (body % ("unchanged text of page two " * 3)).encode()),
+    ], schema)
+    new_pages = spark.createDataFrame([
+        ("u1", None),
+        ("u2", (body % ("unchanged text of page two " * 3)).encode()),
+    ], schema)
+    cfg = ExtractConfig(salt_buckets=2)
+    old_extracts = run_extract(spark, old_pages, cfg).select(
+        "url", "extracted_text"
+    )
+    merged, to_extract = recrawl_pipeline(
+        spark, old_pages, old_extracts, new_pages, cfg,
+        table_prefix="recrawl_null",
+    )
+    try:
+        got = {r["url"]: r["extracted_text"] for r in merged.collect()}
+        assert [r["url"] for r in to_extract.collect()] == ["u1"]
+        incremental = incremental_extract(
+            spark,
+            old_extracts.join(
+                old_pages.select("url", F.md5("html").alias("digest")), "url"
+            ),
+            new_pages,
+            cfg,
+        )
+        want = {r["url"]: r["extracted_text"] for r in incremental.collect()}
+        assert got == want
+        assert got["u1"] is None
+        assert got["u2"].startswith("unchanged text of page two")
+    finally:
+        for t in ("recrawl_null_target_q", "recrawl_null_delta_q"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_url_latest_picks_max_ts(spark, sf_dir):
     """Latest-wins against an independent recomputation: each url's
     winning digest must be the md5 of the HIGHEST-pass body that url

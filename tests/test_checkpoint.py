@@ -181,6 +181,61 @@ def test_kernel_version_change_invalidates_ledger(spark, pages_dir, tmp_path):
     assert s3["buckets_processed"] == 0 and s3["buckets_skipped"] == 4
 
 
+def test_kernel_version_covers_textclean(tmp_path):
+    """clean_text shapes every extract, so an edit to textclean.py must
+    change KERNEL_VERSION — and so invalidate ledger lineage — just as an
+    edit to kernel.py does. Each version is read by a fresh interpreter
+    over a copy of the two modules."""
+    import shutil
+    import subprocess
+    import sys
+
+    from ankiocr_spark import kernel, textclean
+
+    def version(copy: str, edit_textclean: bool) -> str:
+        pkg = tmp_path / copy / "ankiocr_spark"
+        pkg.mkdir(parents=True)
+        (pkg / "__init__.py").write_text("")
+        for mod in (kernel, textclean):
+            shutil.copy(mod.__file__, pkg)
+        if edit_textclean:
+            with open(pkg / "textclean.py", "a") as fh:
+                fh.write("\n# an edit\n")
+        out = subprocess.run(
+            [sys.executable, "-c", "from ankiocr_spark import kernel; "
+             "print(kernel.KERNEL_VERSION, kernel.__file__)"],
+            cwd=pkg.parent, capture_output=True, text=True, check=True,
+        ).stdout.split()
+        assert out[1].startswith(str(pkg))  # the copy, not the repo
+        return out[0]
+
+    assert version("same", False) == KERNEL_VERSION  # content, not path
+    assert version("edited", True) != KERNEL_VERSION
+
+
+def test_resume_reads_the_ledger_once(spark, pages_dir, tmp_path, monkeypatch):
+    """One ledger read per resumable_extract call answers both the skip
+    set and the epoch-marker decision."""
+    from ankiocr_spark import checkpoint
+
+    reads = []
+    real = checkpoint._epoch_rows
+    monkeypatch.setattr(
+        checkpoint, "_epoch_rows", lambda *a: reads.append(a) or real(*a)
+    )
+    cfg = ExtractConfig(salt_buckets=2, checkpoint_dir=str(tmp_path / "led1"))
+    out = str(tmp_path / "out1")
+    resumable_extract(spark, pages_dir, out, cfg, bucket_groups=1)
+    assert len(reads) == 1
+    # a resume under a new bucket count: skip set AND marker, still one read
+    cfg4 = ExtractConfig(salt_buckets=4, checkpoint_dir=cfg.checkpoint_dir)
+    s = resumable_extract(spark, pages_dir, out, cfg4, bucket_groups=1)
+    assert len(reads) == 2 and s["buckets_processed"] == 4
+    assert spark.read.parquet(cfg.checkpoint_dir).where(
+        (F.col("status") == "layout") & (F.col("salt_buckets") == 4)
+    ).count() == 1
+
+
 def test_config_parity_with_extract_job(spark, pages_dir, tmp_path):
     """ADVICE r2 (medium): resumable_extract must honor the SAME config the
     batch job does — a checkpointed run with preserve_interword_spaces set

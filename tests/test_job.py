@@ -107,6 +107,28 @@ def test_spans_mode(spark, pages_goldens):
     assert bad.count() == 0, bad.limit(5).toPandas().to_dict("records")
 
 
+def test_page_rows_skips_null_and_raising_pages(spark):
+    """The one page→many-rows stage: a NULL-html page and a page whose
+    row function raises add no rows; every other page's rows come out
+    in order, with the schema's column names."""
+    from ankiocr_spark.job import page_rows
+
+    def fn(url, html):
+        if html == b"boom":
+            raise ValueError("malformed page")
+        return [(url, i, html.decode()) for i in range(2)]
+
+    pages = spark.createDataFrame(
+        [("a", b"x"), ("b", None), ("c", b"boom"), ("d", b"y")],
+        "url string, html binary",
+    ).coalesce(1)
+    out = page_rows(pages, fn, "url string, i int, body string")
+    assert out.columns == ["url", "i", "body"]
+    assert [tuple(r) for r in out.collect()] == [
+        ("a", 0, "x"), ("a", 1, "x"), ("d", 0, "y"), ("d", 1, "y"),
+    ]
+
+
 def test_extract_job_end_to_end(spark, tmp_path, pages_goldens):
     """Full job: write pages parquet → extract_job → partitioned output →
     byte-identical per-url vs goldens (the spark-submit contract, §3.2)."""

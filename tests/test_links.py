@@ -437,3 +437,58 @@ def test_registered_domain_matches_python_reference_on_random_hosts(spark):
     assert len(got) == len(hosts)
     for i, h in hosts:
         assert (got[i]["public_suffix"], got[i]["registered_domain"]) == ref(h), h
+
+
+def test_str_payload_gets_the_same_cap_as_bytes(monkeypatch):
+    """A str page decodes through the kernel's capped ``_decode`` like a
+    bytes page: past ``MAX_HTML_BYTES`` neither yields a link or anchor."""
+    from ankiocr_spark import kernel
+    from ankiocr_spark.links import extract_anchor_pairs
+
+    monkeypatch.setattr(kernel, "MAX_HTML_BYTES", 100)
+    page = '<a href="/a">first</a>' + " " * 100 + '<a href="/b">second</a>'
+    for fn in (extract_links, extract_anchor_pairs):
+        as_str = fn("https://e.org/", page)
+        assert as_str == fn("https://e.org/", page.encode()), fn.__name__
+        assert len(as_str) == 1, fn.__name__
+
+
+def test_extract_links_matches_reference_href_parser():
+    """Differential check of the shared anchor parse against an
+    independent start-tag-only href collector: same hrefs, same order, on
+    seeded random fragments with empty and fragment hrefs, duplicate
+    href attributes, self-closing and unclosed anchors, script bodies,
+    comments and truncated tags."""
+    import random
+    from html.parser import HTMLParser
+
+    class RefHrefs(HTMLParser):
+        def __init__(self):
+            super().__init__(convert_charrefs=True)
+            self.hrefs = []
+
+        def handle_starttag(self, tag, attrs):
+            if tag != "a":
+                return
+            for k, v in attrs:
+                if k == "href" and v and not v.startswith("#"):
+                    self.hrefs.append(v)
+                    return
+
+    pieces = [
+        '<a href="/x">x</a>', '<a href="">e</a>', '<a href="#frag">f</a>',
+        '<a href="#f" href="/dup">d</a>', '<a href="/one" href="/two">t</a>',
+        '<a href="/self"/>', '<a/>', '<a href=/bare>', '<A HREF="/Up">u</A>',
+        '<a name="n">', '</a>', '<script>var s = "<a href=\'/s\'>";</script>',
+        '<!-- <a href="/c"> -->', '<a href="/amp?a=1&amp;b=2">',
+        '<p>text</p>', 'plain ', '<div><a href="rel/p">r', '<a href="/t',
+        '<a href="/u" ', '<!--', '<a\nhref="/nl">', '<style>a{}</style>',
+    ]
+    rng = random.Random(1234)
+    for _ in range(2000):
+        page = "".join(rng.choice(pieces) for _ in range(rng.randint(0, 12)))
+        ref = RefHrefs()
+        ref.feed(page)
+        ref.close()
+        got = [h for _, h, _ in extract_links("https://e.org/d/", page)]
+        assert got == ref.hrefs, page

@@ -308,3 +308,24 @@ def test_stream_honors_extract_config(spark, tmp_path):
             ).parquet(in_dir),
             ExtractConfig(output_mode="spans"),
         )
+
+
+def test_drain_stops_and_raises_on_timeout():
+    """A stream that does not finish within the timeout is stopped
+    before the TimeoutError propagates, so it cannot outlive the call."""
+    from ankiocr_spark.streaming import _drain
+
+    class Stuck:
+        id = "q-1"
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = Stuck()
+    with pytest.raises(TimeoutError, match="q-1 did not drain within 5s"):
+        _drain(q, 5)
+    assert q.stopped
