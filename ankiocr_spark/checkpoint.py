@@ -13,10 +13,14 @@ bucket is appended:
     run_id, kernel_version, salt_buckets, bucket, status, rows_in,
     rows_out, n_errors, n_empty, bytes_in, started, finished
 
-On restart, completed buckets (same kernel_version AND same salt_buckets)
-are anti-joined away and only pending buckets recompute. A kernel change
-OR a bucket-count change invalidates the ledger (full recompute): stale
-extracts can never survive a kernel upgrade, and bucket ids can never be
+On restart, completed buckets (same epoch key AND same salt_buckets) are
+anti-joined away and only pending buckets recompute. The epoch key —
+recorded in the ``kernel_version`` column — is the kernel version plus
+every non-default setting that shapes the extracts
+(``preserve_interword_spaces``, ``lang_filter``). A kernel change, a
+change of those settings OR a bucket-count change invalidates the ledger
+(full recompute): stale extracts can never survive a kernel upgrade, one
+table never mixes two configs' extracts, and bucket ids can never be
 reinterpreted modulo a different count — the lineage guarantee.
 
 At 100 TB the ledger stays tiny (one row per bucket per run: 10^4-10^5
@@ -85,21 +89,31 @@ def _epoch_rows(spark: SparkSession, ledger_dir: str) -> list:
     return rows
 
 
+def epoch_key(cfg: ExtractConfig) -> str:
+    """The lineage key a run under ``cfg`` records in the ledger's
+    ``kernel_version`` column: ``KERNEL_VERSION``, plus each setting that
+    changes what the kernel writes when it is not at its default. A
+    default config's key IS the kernel version."""
+    key = KERNEL_VERSION
+    if cfg.preserve_interword_spaces:
+        key += "+preserve_interword_spaces"
+    if cfg.lang_filter:
+        key += "+lang_filter=" + ",".join(sorted(set(cfg.lang_filter)))
+    return key
+
+
 def _current_epoch(
-    spark: SparkSession, ledger_dir: str, salt_buckets: int
+    spark: SparkSession, ledger_dir: str, salt_buckets: int, key: str
 ) -> Tuple[set, bool]:
     """(buckets done under the current epoch, whether the ledger's LAST
-    row carries a different epoch key) — both answers from ONE ledger
-    read. The second is True when the coming run will be the first to
-    mutate the table under this (kernel, count); an empty ledger has
-    nothing to invalidate. See ``completed_buckets`` for the epoch rule."""
+    row carries a different epoch) — both answers from ONE ledger read.
+    The second is True when the coming run will be the first to mutate
+    the table under this (key, count); an empty ledger has nothing to
+    invalidate. See ``completed_buckets`` for the epoch rule."""
     done: set = set()
     stale = False
     for r in _epoch_rows(spark, ledger_dir):
-        stale = (
-            r["salt_buckets"] != salt_buckets
-            or r["kernel_version"] != KERNEL_VERSION
-        )
+        stale = r["salt_buckets"] != salt_buckets or r["kernel_version"] != key
         if stale:
             # a different-epoch run happened after everything collected
             # so far — everything before it describes a dead layout
@@ -112,19 +126,21 @@ def _current_epoch(
 def completed_buckets(
     spark: SparkSession, ledger_dir: str, salt_buckets: int
 ) -> List[int]:
-    """Buckets already extracted under the CURRENT EPOCH — epoch key =
-    (kernel_version, salt_buckets), both lineage (r5 review finds):
-    bucket ids are only meaningful modulo the count they were hashed
-    with, and extracts are only current under the kernel that produced
-    them. The epoch rule (any row — 'done' OR 'layout' marker — with a
-    different key clears everything collected so far) closes the A→B→A
-    holes the per-row filter alone leaves open, for BOTH dimensions:
-    after runs at count/kernel A then B, the on-disk table is B's, so
-    A's old 'done' rows must not satisfy a new A resume; only rows
-    appended after the last different-epoch row reflect the current
-    table. The ledger is metadata-sized, so the scan is a driver-side
-    pass over collected rows."""
-    return sorted(_current_epoch(spark, ledger_dir, salt_buckets)[0])
+    """Buckets already extracted under the CURRENT EPOCH of a default
+    config — epoch = (``epoch_key``, salt_buckets), both lineage (r5
+    review finds): bucket ids are only meaningful modulo the count they
+    were hashed with, and extracts are only current under the kernel and
+    settings that produced them. The epoch rule (any row — 'done' OR
+    'layout' marker — with a different key clears everything collected
+    so far) closes the A→B→A holes the per-row filter alone leaves open,
+    for BOTH dimensions: after runs at count/key A then B, the on-disk
+    table is B's, so A's old 'done' rows must not satisfy a new A resume;
+    only rows appended after the last different-epoch row reflect the
+    current table. The ledger is metadata-sized, so the scan is a
+    driver-side pass over collected rows."""
+    return sorted(
+        _current_epoch(spark, ledger_dir, salt_buckets, KERNEL_VERSION)[0]
+    )
 
 
 def _clear_stale_bucket_partitions(output_path: str, salt_buckets: int) -> None:
@@ -195,7 +211,7 @@ def _extract_batches_with_stats(acc, preserve_spaces: bool = False):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = extract_frame(pdf, preserve_spaces, ("bucket",))
-            if len(out):  # an empty batch's frame has no kernel columns
+            if len(out):  # an empty batch has nothing to count
                 ok = out["error"].isna()
                 per_bucket = pd.DataFrame({
                     "bucket": out["bucket"],
@@ -245,10 +261,11 @@ def resumable_extract(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     all_buckets = list(range(cfg.salt_buckets))
-    done, needs_marker = _current_epoch(spark, ledger_dir, cfg.salt_buckets)
+    key = epoch_key(cfg)
+    done, needs_marker = _current_epoch(spark, ledger_dir, cfg.salt_buckets, key)
     pending = [b for b in all_buckets if b not in done]
     # CRASH-SAFE epoch transition (review find #2 on the first epoch
-    # cut): the marker row records the new (kernel, count) BEFORE any
+    # cut): the marker row records the new (key, count) BEFORE any
     # destructive action — partition clearing below, group writes later.
     # Without it, a run that dies between mutating the table and its
     # first per-group ledger append leaves the PREVIOUS epoch's 'done'
@@ -258,7 +275,7 @@ def resumable_extract(
     if needs_marker:
         now = _dt.datetime.now()
         _append_ledger(spark, ledger_dir, [
-            (run_id, KERNEL_VERSION, cfg.salt_buckets, -1, "layout",
+            (run_id, key, cfg.salt_buckets, -1, "layout",
              0, 0, 0, 0, 0, now, now)
         ])
     # layout hygiene BEFORE any write: partitions numbered past the
@@ -311,7 +328,7 @@ def resumable_extract(
                 b, (0, 0, 0, 0, 0)
             )
             ledger_rows.append(
-                (run_id, KERNEL_VERSION, cfg.salt_buckets, b, "done",
+                (run_id, key, cfg.salt_buckets, b, "done",
                  rows_in, rows_out, n_err, n_empty, bytes_in, started,
                  finished)
             )

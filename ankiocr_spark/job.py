@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import ExtractConfig
-from .kernel import extract_record, extract_spans
+from .kernel import RECORD_FIELDS, extract_row, extract_spans
 
 #: output schema of the fused kernel (FIXTURES.md §4)
 EXTRACT_SCHEMA = (
@@ -57,10 +57,10 @@ def extract_frame(
     positionally — the Arrow analog of the reference's ``batch_mapping``
     positional rejoin (ocr.py:151-161), with zero joins.
     """
-    out = pd.DataFrame.from_records(
-        extract_record(u, h, preserve_spaces=preserve_spaces)
-        for u, h in zip(pdf["url"].tolist(), pdf["html"].tolist())
-    )
+    rows = [extract_row(h, preserve_spaces) for h in pdf["html"].tolist()]
+    # one list per column, so an empty batch still carries every column
+    columns = [list(c) for c in zip(*rows)] if rows else [[]] * 4
+    out = pd.DataFrame(dict(zip(RECORD_FIELDS, [pdf["url"].tolist(), *columns])))
     for c in extra_cols:
         out[c] = pdf[c].values
     return out
@@ -233,9 +233,12 @@ def extract_job(
     # cluster by bucket before the partitioned write: without this, every
     # scan-split task can emit one file per bucket → O(tasks × buckets)
     # small files. The shuffle moves only extracted text (html never leaves
-    # the kernel stage), and caps output at salt_buckets files.
+    # the kernel stage). Hashing on bucket puts each bucket in exactly one
+    # reducer, so output stays ≤ salt_buckets files; with no partition
+    # count given, AQE coalesces the reducers into a few write tasks
+    # instead of one task per bucket.
     (
-        result.repartition(cfg.salt_buckets, F.col("bucket"))
+        result.repartition(F.col("bucket"))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(output_path)

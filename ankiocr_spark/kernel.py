@@ -20,6 +20,11 @@ job.py) — never as a row-at-a-time Spark UDF (BASELINE.json:input_hint
 on the Python worker, which is the vectorization boundary Spark offers for
 opaque binary payloads (the analog of the reference's batch manifest loop,
 ocr.py:90).
+
+Hot path (text mode, ``extract_row``): decode → ``_fused_segments`` into
+(tag, text, link_text) tuples → the one keep rule ``_keep`` on each tuple
+→ ``clean_text`` of the kept texts. No per-segment object is built; span
+mode (``extract_spans``) alone wraps the same tuples in ``Block``s.
 """
 
 from __future__ import annotations
@@ -168,13 +173,18 @@ class _BlockParser(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Fast tokenizer: drives the SAME _BlockParser hooks as the stdlib parser,
-# but skips html.parser's per-attribute parse loop and per-token position
-# bookkeeping (updatepos), which profiling shows is ~70% of kernel time —
-# this engine never reads attributes. It reuses the stdlib's own compiled
-# (linear-time) regexes, and test_kernel_fast_matches_stdlib asserts
-# segment-level equivalence against the stdlib-driven parser on the fixture
-# corpus and randomized html-ish inputs.
+# Fast tokenizer: the SAME segmentation as driving _BlockParser from the
+# stdlib parser, without html.parser's per-attribute parse loop and
+# per-token position bookkeeping (updatepos) — this engine never reads
+# attributes. Three regex tiers, each consuming only what the stdlib would
+# consume the same way, and falling through to the next on anything else:
+#   1. inside a PRUNE_TAGS subtree, one _PRUNE_SKIP match jumps over
+#      text and non-prune tags at C speed;
+#   2. _SIMPLE_TAG reads a plain `<name a="v">` / `</name>` in one match;
+#   3. the general path reuses the stdlib's own compiled (linear-time)
+#      regexes for everything else.
+# test_properties.py holds segment-level equivalence against the
+# stdlib-driven parser on the fixture corpus and a seeded fragment sweep.
 # ---------------------------------------------------------------------------
 
 import html.parser as _hp
@@ -184,6 +194,36 @@ _TAGNAME = _hp.tagfind_tolerant
 _STARTTAG_END = _hp.locatestarttagend_tolerant
 _ENDTAG = _hp.endtagfind
 _COMMENT_CLOSE = _hp.commentclose
+
+# Tiers 1+2 grammar. Whitespace is the explicit ASCII set where the stdlib
+# tag name stops, never `\s` (on str patterns that also matches \xa0,
+# \x0b and \x1c, which the stdlib keeps INSIDE a tag name). Names are a
+# subset of the stdlib's name characters that ends where the stdlib's
+# does; quoted values hold no '<', so a failed match stops at the next
+# tag. Every group is possessive, so a match (or a failure) is linear in
+# what it scans.
+_WS = "[ \t\n\r\f]"
+_NAME = "[a-zA-Z][-.:_a-zA-Z0-9]*+"
+_ATTRS = (
+    f"(?:{_WS}++[a-zA-Z_:][-.:_a-zA-Z0-9]*+"
+    f"""(?:="[^"<]*+"|='[^'<]*+')?)*+{_WS}*+"""
+)
+#: groups: start-tag name, "/" if self-closing, end-tag name
+_SIMPLE_TAG = re.compile(
+    f"<(?:({_NAME}){_ATTRS}(/?)|/({_NAME}){_WS}*+)>", re.ASCII
+).match
+_PRUNE_NAME = f"(?i:{'|'.join(sorted(PRUNE_TAGS))})"
+#: inside a pruned subtree: text, a '<' that opens no markup, and whole
+#: start and end tags of non-prune names — none of them can change state
+#: there. It stops before any prune-tag open or close (so before the
+#: stack top's close, which pops), `<!`, `<?` or a tag it cannot read
+#: whole; the token loop then handles that one token.
+_PRUNE_SKIP = re.compile(
+    "(?:[^<]++|<(?![a-zA-Z/!?])"
+    f"|<(?!{_PRUNE_NAME}(?:{_WS}|[/>])){_NAME}{_ATTRS}/?>"
+    f"|</(?!{_PRUNE_NAME}{_WS}*+>){_NAME}{_WS}*+>)*+",
+    re.ASCII,
+).match
 
 # Full close-tag pattern, exactly stdlib set_cdata_mode's `interesting`
 # regex (r'</\s*%s\s*>'): a mismatched name ('</scriptfoo>') or attributed
@@ -208,8 +248,8 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
     stdlib parser's hook calls (tag names lowercased, attrs never
     materialized, charrefs unescaped in data, script/style content
     consumed raw until the matching close tag), but with the handler hooks
-    INLINED into the scan loop: the ~1.2M bound-method calls per 8k pages
-    were ~25% of kernel time. ``_BlockParser`` + the stdlib parser remain
+    INLINED into the scan loop: every tier yields (start name, "/", end
+    name) for one dispatch. ``_BlockParser`` + the stdlib parser remain
     as the reference implementation this function is equivalence-tested
     against (test_properties.py)."""
     prune_stack: List[str] = []
@@ -252,17 +292,6 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
         emit_data(s[j:k])
         return k
 
-    def end_tag(tag: str) -> None:
-        nonlocal anchor_depth, segment_tag
-        if prune_stack:
-            if tag == prune_stack[-1]:
-                prune_stack.pop()
-        elif tag in BLOCK_TAGS:
-            flush(tag)
-            segment_tag = "body"
-        elif tag == "a" and anchor_depth > 0:
-            anchor_depth -= 1
-
     i, n = 0, len(s)
     cdata_close = None
     while i < n:
@@ -281,119 +310,143 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
             # cdata_close is the full `</\s*elem\s*>` (stdlib
             # set_cdata_mode), so endtagfind necessarily matches the same
             # span here with exactly the cdata element's name.
-            end_tag(_ENDTAG.match(s, m.start()).group(1).lower())
+            tag, slash, etag = None, "", _ENDTAG.match(s, m.start()).group(1)
             i = m.end()
             cdata_close = None
-            continue
-        j = s.find("<", i)
-        if j < 0:
-            emit_data(s[i:])
-            break
-        if j > i and not prune_stack:  # emit_data inlined: hottest site
-            seg = s[i:j]
-            if "&" in seg:
-                seg = _unescape(seg)
-            pieces.append(seg)
-            if anchor_depth:
-                link_pieces.append(seg)
-        if j + 1 >= n:
-            # lone trailing '<': stdlib breaks, then close() flushes the
-            # unprocessed tail as data
-            emit_data("<")
-            break
-        c = s[j + 1]
-        if ("a" <= c <= "z") or ("A" <= c <= "Z"):
-            m = _TAGNAME.match(s, j + 1)
-            tag = m.group(1).lower()
-            # attr-less fast path: tagfind_tolerant consumes trailing
-            # whitespace/non-closing slashes, so for `<p>`, `<p >`, `<br/>`
-            # the next chars are the tag close — skip the attribute regex
-            end = m.end()
-            if not (s.startswith(">", end) or s.startswith("/>", end)):
-                end = _STARTTAG_END.match(s, j).end()
-            if s.startswith(">", end):
-                # inlined handle_starttag
-                if tag in PRUNE_TAGS:
-                    prune_stack.append(tag)
-                elif not prune_stack:
-                    if tag in BLOCK_TAGS:
-                        flush(segment_tag)
-                        segment_tag = tag
-                    elif tag == "a":
-                        anchor_depth += 1
-                    elif tag == "br":
-                        pieces.append(" ")
-                i = end + 1
-                if tag in _CDATA_CLOSE:
-                    cdata_close = _CDATA_CLOSE[tag]
-            elif s.startswith("/>", end):
-                # inlined handle_startendtag (self-closing prune tag has
-                # no subtree, so no prune push; no anchor handling)
-                if tag not in PRUNE_TAGS and not prune_stack:
-                    if tag in BLOCK_TAGS:
-                        flush(segment_tag)
-                        segment_tag = tag
-                    elif tag == "br":
-                        pieces.append(" ")
-                i = end + 2
-            else:
-                # malformed start tag (stdlib check_for_whole_start_tag):
-                # at EOF / mid-attribute / stray '/', fall back to the
-                # incomplete-data path; otherwise emit the partial tag text
-                # raw (parse_starttag's handle_data, no unescape) and
-                # resume right after it
-                c2 = s[end:end + 1]
-                if c2 == "" or c2 in (
-                    "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-                ):
-                    i = emit_incomplete(j)
+        else:
+            if prune_stack:
+                i = _PRUNE_SKIP(s, i).end()
+                if i == n:
+                    break
+            j = s.find("<", i)
+            if j < 0:
+                emit_data(s[i:])
+                break
+            if j > i and not prune_stack:  # emit_data inlined: hottest site
+                seg = s[i:j]
+                if "&" in seg:
+                    seg = _unescape(seg)
+                pieces.append(seg)
+                if anchor_depth:
+                    link_pieces.append(seg)
+            m = _SIMPLE_TAG(s, j)
+            if m is not None:
+                tag, slash, etag = m.groups()
+                i = m.end()
+            elif j + 1 >= n:
+                # lone trailing '<': stdlib breaks, then close() flushes
+                # the unprocessed tail as data
+                emit_data("<")
+                break
+            elif "a" <= (c := s[j + 1]) <= "z" or "A" <= c <= "Z":
+                m = _TAGNAME.match(s, j + 1)
+                tag, etag = m.group(1), None
+                # tagfind_tolerant consumes trailing whitespace and
+                # non-closing slashes: when the tag close follows, the
+                # stdlib ends the tag there (`<p //>` is self-closing)
+                end = m.end()
+                if not (s.startswith(">", end) or s.startswith("/>", end)):
+                    end = _STARTTAG_END.match(s, j).end()
+                if s.startswith(">", end):
+                    slash, i = "", end + 1
+                elif s.startswith("/>", end):
+                    slash, i = "/", end + 2
                 else:
-                    if not prune_stack:
-                        seg = s[j:end]
-                        pieces.append(seg)
-                        if anchor_depth:
-                            link_pieces.append(seg)
-                    i = end
-            continue
-        if s.startswith("</", j):
-            e = _ENDTAG.match(s, j)
-            if e:
-                end_tag(e.group(1).lower())
-                i = e.end()
+                    # malformed start tag (stdlib check_for_whole_start_tag):
+                    # at EOF / mid-attribute / stray '/', fall back to the
+                    # incomplete-data path; otherwise emit the partial tag
+                    # text raw (parse_starttag's handle_data, no unescape)
+                    # and resume right after it
+                    c2 = s[end:end + 1]
+                    if c2 == "" or c2 in (
+                        "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+                    ):
+                        i = emit_incomplete(j)
+                    else:
+                        if not prune_stack:
+                            seg = s[j:end]
+                            pieces.append(seg)
+                            if anchor_depth:
+                                link_pieces.append(seg)
+                        i = end
+                    continue
+            elif s.startswith("</", j):
+                e = _ENDTAG.match(s, j)
+                if e:
+                    tag, slash, etag = None, "", e.group(1)
+                    i = e.end()
+                else:
+                    gt = s.find(">", j + 1)
+                    if gt < 0:  # incomplete at EOF
+                        i = emit_incomplete(j)
+                        continue
+                    nm = _TAGNAME.match(s, j + 2)
+                    if not nm:  # '</>' or bogus comment '</;...>': skipped
+                        i = gt + 1
+                        continue
+                    # tolerant end tag with junk before '>': '</p attr>'
+                    tag, slash, etag = None, "", nm.group(1)
+                    i = s.find(">", nm.end()) + 1
+            elif s.startswith("<!--", j):
+                m = _COMMENT_CLOSE.search(s, j + 4)
+                i = emit_incomplete(j) if not m else m.end()
                 continue
-            gt = s.find(">", j + 1)
-            if gt < 0:  # incomplete at EOF
-                i = emit_incomplete(j)
+            elif s.startswith("<![", j):
+                # marked section (stdlib parse_marked_section)
+                nm = _SECT_NAME.match(s, j + 3)
+                sect = nm.group().lower() if nm else None
+                if sect in _SECT_STD:
+                    m = _MARKED_CLOSE_STD.search(s, j + 3)
+                elif sect in _SECT_MS:
+                    m = _MARKED_CLOSE_MS.search(s, j + 3)
+                else:  # stdlib raises here; degrade to data-skip
+                    m = None
+                i = emit_incomplete(j) if not m else m.end()
                 continue
-            nm = _TAGNAME.match(s, j + 2)
-            if nm:  # tolerant end tag with junk before '>': '</p attr>'
-                end_tag(nm.group(1).lower())
-                i = s.find(">", nm.end()) + 1
-            else:  # '</>' or bogus comment '</;...>': skipped (no hook used)
-                i = gt + 1
+            elif s.startswith("<?", j) or s.startswith("<!", j):
+                nxt = s.find(">", j + 2)
+                i = emit_incomplete(j) if nxt < 0 else nxt + 1
+                continue
+            else:
+                emit_data("<")
+                i = j + 1
+                continue
+
+        # one dispatch for every tier: the inlined _BlockParser hooks
+        if etag is not None:  # handle_endtag
+            etag = etag.lower()
+            if prune_stack:
+                if etag == prune_stack[-1]:
+                    prune_stack.pop()
+            elif etag in BLOCK_TAGS:
+                flush(etag)
+                segment_tag = "body"
+            elif etag == "a" and anchor_depth > 0:
+                anchor_depth -= 1
             continue
-        if s.startswith("<!--", j):
-            m = _COMMENT_CLOSE.search(s, j + 4)
-            i = emit_incomplete(j) if not m else m.end()
+        tag = tag.lower()
+        if slash:
+            # handle_startendtag: a self-closing prune tag has no subtree,
+            # so no prune push; no anchor handling
+            if tag not in PRUNE_TAGS and not prune_stack:
+                if tag in BLOCK_TAGS:
+                    flush(segment_tag)
+                    segment_tag = tag
+                elif tag == "br":
+                    pieces.append(" ")
             continue
-        if s.startswith("<![", j):
-            # marked section (stdlib parse_marked_section)
-            nm = _SECT_NAME.match(s, j + 3)
-            sect = nm.group().lower() if nm else None
-            if sect in _SECT_STD:
-                m = _MARKED_CLOSE_STD.search(s, j + 3)
-            elif sect in _SECT_MS:
-                m = _MARKED_CLOSE_MS.search(s, j + 3)
-            else:  # stdlib raises here; degrade to data-skip
-                m = None
-            i = emit_incomplete(j) if not m else m.end()
-            continue
-        if s.startswith("<?", j) or s.startswith("<!", j):
-            nxt = s.find(">", j + 2)
-            i = emit_incomplete(j) if nxt < 0 else nxt + 1
-            continue
-        emit_data("<")
-        i = j + 1
+        if tag in PRUNE_TAGS:  # handle_starttag
+            prune_stack.append(tag)
+        elif not prune_stack:
+            if tag in BLOCK_TAGS:
+                flush(segment_tag)
+                segment_tag = tag
+            elif tag == "a":
+                anchor_depth += 1
+            elif tag == "br":
+                pieces.append(" ")
+        if tag in _CDATA_CLOSE:
+            cdata_close = _CDATA_CLOSE[tag]
 
     flush(segment_tag)
     return segments
@@ -452,6 +505,37 @@ def _decode(html) -> str:
     return s[:MAX_HTML_BYTES] if len(s) > MAX_HTML_BYTES else s
 
 
+def _link_density(text: str, link_text: str) -> float:
+    """Anchor-text share of a segment's characters, rounded to 6 dp for
+    cross-engine comparability."""
+    return round(min(1.0, len(link_text) / len(text)), 6) if text else 0.0
+
+
+def _keep(tag: str, text: str, link_text: str) -> bool:
+    """THE keep rule: a segment survives iff it meets the length floor
+    (headings get a lower one) AND its rounded link density is below
+    MAX_LINK_DENSITY. Spans mode stores it as ``Block.kept``; text mode
+    applies it to the segment tuples directly."""
+    return len(text) >= (
+        MIN_HEADING_CHARS if tag in HEADING_TAGS else MIN_TEXT_CHARS
+    ) and (not link_text or _link_density(text, link_text) < MAX_LINK_DENSITY)
+
+
+def _segments(html, preserve_spaces: bool, use_fast: bool = True):
+    """Decode + segment one page into (tag, text, link_text) tuples.
+    ``use_fast=False`` routes through the stdlib parser — the reference
+    implementation the fast tokenizer is equivalence-tested against."""
+    s = _decode(html)
+    if use_fast:
+        return _fused_segments(
+            s, _normalize_preserve if preserve_spaces else _normalize
+        )
+    parser = _BlockParser(preserve_spaces=preserve_spaces)
+    parser.feed(s)
+    parser.close()
+    return parser.segments
+
+
 def extract_spans(
     html, _use_fast: bool = True, preserve_spaces: bool = False
 ) -> List[Block]:
@@ -460,30 +544,28 @@ def extract_spans(
     The analog of ``OCRField.parse_images`` (/root/reference/src/anki_ocr/
     api.py:44-77): parse → per-child extraction → validity scoring, emitting
     one record per block instead of one ``OCRImage`` per ``<img>`` tag.
-    ``_use_fast=False`` routes through the stdlib parser — the reference
-    implementation the fast tokenizer is equivalence-tested against.
+    ``_use_fast=False`` routes through the stdlib parser (``_segments``).
     ``preserve_spaces`` is the reference ``preserve_interword_spaces``
     analog (config.json:8): literal space runs inside a block survive.
     """
-    if _use_fast:
-        segments = _fused_segments(
-            _decode(html),
-            _normalize_preserve if preserve_spaces else _normalize,
+    return [
+        Block(i, tag, text, len(text), _link_density(text, link_text),
+              _keep(tag, text, link_text))
+        for i, (tag, text, link_text) in enumerate(
+            _segments(html, preserve_spaces, _use_fast)
         )
-    else:
-        parser = _BlockParser(preserve_spaces=preserve_spaces)
-        parser.feed(_decode(html))
-        parser.close()
-        segments = parser.segments
+    ]
 
-    blocks: List[Block] = []
-    for i, (tag, text, link_text) in enumerate(segments):
-        n = len(text)
-        density = round(min(1.0, len(link_text) / n), 6) if n else 0.0
-        min_chars = MIN_HEADING_CHARS if tag in HEADING_TAGS else MIN_TEXT_CHARS
-        kept = density < MAX_LINK_DENSITY and n >= min_chars
-        blocks.append(Block(i, tag, text, n, density, kept))
-    return blocks
+
+def _kept_text(html, preserve_spaces: bool) -> Tuple[str, int]:
+    """(cleaned extract, number of kept segments): text mode scores the
+    segment tuples inline and builds no ``Block``."""
+    kept = [
+        text
+        for tag, text, link_text in _segments(html, preserve_spaces)
+        if _keep(tag, text, link_text)
+    ]
+    return clean_text("\n".join(kept)), len(kept)
 
 
 def extract_main_text(html, preserve_spaces: bool = False) -> str:
@@ -493,14 +575,18 @@ def extract_main_text(html, preserve_spaces: bool = False) -> str:
     layout-ordered output joined per batch, ocr.py:153), then the reference's
     exact text normalization (textclean.clean_text, ocr.py:141-149).
     """
-    kept = [
-        b.text for b in extract_spans(html, preserve_spaces=preserve_spaces) if b.kept
-    ]
-    return clean_text("\n".join(kept))
+    return _kept_text(html, preserve_spaces)[0]
 
 
-def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> dict:
-    """Kernel wrapper with error quarantine — one output record per page.
+#: the kernel's output columns, in EXTRACT_SCHEMA order
+RECORD_FIELDS = ("url", "extracted_text", "n_blocks", "n_chars", "error")
+
+
+def extract_row(
+    html, preserve_spaces: bool
+) -> Tuple[Optional[str], int, int, Optional[str]]:
+    """One page's (extracted_text, n_blocks, n_chars, error), with error
+    quarantine — the per-row body of ``job.extract_frame``.
 
     Failed rows get ``error`` set instead of raising (replaces the
     reference's log-and-skip, api.py:50-62, and the subprocess kill path).
@@ -508,7 +594,7 @@ def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> d
     while still producing output.
     """
     if html is None:
-        return {"url": url, "extracted_text": None, "n_blocks": 0, "n_chars": 0, "error": "null_html"}
+        return None, 0, 0, "null_html"
     try:
         # bytes measured in bytes, str in chars — both routes through
         # _decode's cap, both flagged (r3 review: str payloads previously
@@ -517,24 +603,16 @@ def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> d
             isinstance(html, (bytes, bytearray, memoryview, str))
             and len(html) > MAX_HTML_BYTES
         )
-        blocks = extract_spans(html, preserve_spaces=preserve_spaces)
-        kept = [b for b in blocks if b.kept]
-        text = clean_text("\n".join(b.text for b in kept))
-        return {
-            "url": url,
-            "extracted_text": text,
-            "n_blocks": len(kept),
-            "n_chars": len(text),
-            "error": "truncated" if truncated else None,
-        }
+        text, n_kept = _kept_text(html, preserve_spaces)
+        return text, n_kept, len(text), "truncated" if truncated else None
     except Exception as exc:  # quarantine, never kill the task
-        return {
-            "url": url,
-            "extracted_text": None,
-            "n_blocks": 0,
-            "n_chars": 0,
-            "error": f"{type(exc).__name__}: {exc}"[:500],
-        }
+        return None, 0, 0, f"{type(exc).__name__}: {exc}"[:500]
+
+
+def extract_record(url: Optional[str], html, preserve_spaces: bool = False) -> dict:
+    """``extract_row`` as one output record (a dict keyed by
+    ``RECORD_FIELDS``) — one record per page."""
+    return dict(zip(RECORD_FIELDS, (url, *extract_row(html, preserve_spaces))))
 
 
 def _kernel_version() -> str:

@@ -181,6 +181,67 @@ def test_kernel_version_change_invalidates_ledger(spark, pages_dir, tmp_path):
     assert s3["buckets_processed"] == 0 and s3["buckets_skipped"] == 4
 
 
+def test_resume_under_flipped_preserve_spaces_recomputes(spark, tmp_path):
+    """The epoch key covers the settings that shape the extracts: a run
+    killed with preserve_interword_spaces off and resumed with it on must
+    recompute every bucket, so the table never mixes collapsed and
+    preserved extracts of the two configs."""
+    from ankiocr_spark.kernel import extract_main_text
+
+    pages = [
+        (f"u{i}", f"<p>page {i} keeps  two   spaces in a long paragraph</p>".encode())
+        for i in range(40)
+    ]
+    pages_dir = str(tmp_path / "pages_ws")
+    spark.createDataFrame(pages, "url string, html binary").write.parquet(pages_dir)
+    out = str(tmp_path / "out_ws")
+    ledger = str(tmp_path / "ledger_ws")
+    off = ExtractConfig(salt_buckets=4, checkpoint_dir=ledger)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        resumable_extract(spark, pages_dir, out, off,
+                          bucket_groups=2, fail_after_groups=1)
+    assert len(completed_buckets(spark, ledger, 4)) == 2
+
+    on = ExtractConfig(salt_buckets=4, checkpoint_dir=ledger,
+                       preserve_interword_spaces=True)
+    s = resumable_extract(spark, pages_dir, out, on, bucket_groups=2)
+    assert s["buckets_skipped"] == 0 and s["buckets_processed"] == 4
+    got = {r["url"]: r["extracted_text"] for r in spark.read.parquet(out).collect()}
+    assert got == {
+        u: extract_main_text(h, preserve_spaces=True) for u, h in pages
+    }
+    # the preserved-spaces epoch has its own key; the default one is gone
+    assert completed_buckets(spark, ledger, 4) == []
+    keys = {r[0] for r in spark.read.parquet(ledger).where(
+        F.col("status") == "done").select("kernel_version").collect()}
+    assert keys == {KERNEL_VERSION, KERNEL_VERSION + "+preserve_interword_spaces"}
+
+
+def test_epoch_key_names_the_output_shaping_settings():
+    """A default config's key is the bare kernel version (so ledgers from
+    before the key grew settings stay current); each output-shaping
+    setting gets its own key, the language list order-insensitively."""
+    from ankiocr_spark.checkpoint import epoch_key
+
+    assert epoch_key(ExtractConfig()) == KERNEL_VERSION
+    assert epoch_key(ExtractConfig(lang_filter=[])) == KERNEL_VERSION
+    keys = {
+        epoch_key(ExtractConfig(preserve_interword_spaces=True)),
+        epoch_key(ExtractConfig(lang_filter=["eng", "deu"])),
+        epoch_key(ExtractConfig(lang_filter=["eng"])),
+        epoch_key(ExtractConfig(preserve_interword_spaces=True,
+                                lang_filter=["eng"])),
+    }
+    assert len(keys) == 4 and KERNEL_VERSION not in keys
+    assert epoch_key(ExtractConfig(lang_filter=["deu", "eng"])) == epoch_key(
+        ExtractConfig(lang_filter=["eng", "deu"])
+    )
+    # settings that do not change the extracts keep the key
+    assert epoch_key(ExtractConfig(batch_rows=7, presalt_shuffle=True)) == (
+        KERNEL_VERSION
+    )
+
+
 def test_kernel_version_covers_textclean(tmp_path):
     """clean_text shapes every extract, so an edit to textclean.py must
     change KERNEL_VERSION — and so invalidate ledger lineage — just as an

@@ -23,7 +23,20 @@ _tagish = st.sampled_from(
      # cdata-mode close-tag lookalikes: mismatched name / attributed close /
      # whitespace-and-case variants must stay raw data inside script/style
      "</scriptfoo>", "</script x>", "</ ScRiPt  >", "<style>", "</style>",
-     "</stylesheet>"]
+     "</stylesheet>",
+     # constructs that can hide a prune close from the skip and simple-tag
+     # regexes: quoted values, comments, marked sections, declarations, PIs
+     '<a title="</nav>">', "<a title='</nav>'>", "<!-- </nav> -->",
+     "<![CDATA[ </nav> ]]>", "<!x </nav>>", "<?pi </nav>?>",
+     # nested / mismatched prune tags, case and whitespace variants
+     "<footer>", "</footer>", "<nav><footer></nav></footer>",
+     '<NAV class="x">', "</ nav>", "</nav >", "</navx>",
+     # tolerant malformed tags
+     '<a x"="y>', "</p </nav>", '</a href="x">',
+     # non-ASCII whitespace inside tags, where the stdlib name does not stop
+     "<p\xa0>", "<nav\x0b>", "</nav\x1c>",
+     # split entities
+     "&am", "p;"]
 )
 _textish = st.text(max_size=40)
 _htmlish = st.lists(st.one_of(_tagish, _textish), max_size=30).map("".join)
@@ -114,6 +127,80 @@ def test_cdata_close_lookalikes_stay_raw():
     # the flagship case extracts exactly the real paragraph
     texts = [b.text for b in extract_spans(cases[0]) if b.kept]
     assert texts == ["real paragraph long enough to clear the keep floor easily"]
+
+
+#: sweep alphabet: the fast tiers' edge cases next to ordinary markup
+_SWEEP_PIECES = (
+    "<nav>", "</nav>", "<footer>", "</footer>", "<header>", "</header>",
+    "<head>", "</head>", '<NAV class="x">', "</NAV>", "</ nav>", "</nav >",
+    "</navx>", "<navx>", "<nav/>", "<script>", "</script>", "<style>",
+    "</style>", '<a title="</nav>">', "<a title='</nav>'>", "<!-- </nav> -->",
+    "<![CDATA[ </nav> ]]>", "<!x </nav>>", "<?pi </nav>?>", "<!--", "-->",
+    '<a x"="y>', "</p </nav>", '</a href="x">', "<p //>", "<br />", "<br/>",
+    '<img src="a.png"/>', "<div class=\"c\" id='d'>", "<input disabled>",
+    "<a href=/x>", '<a\thref="/y"\n>', "<p\xa0>", "<nav\x0b>", "</nav\x1c>",
+    "<a\xa0href='x'>", "</nav\xa0>", "&am", "p;", "&#6", "5;", "&", "<", ">",
+    '"', "'", "=", " ", "/", "\n", "<p>", "</p>", "<div>", "</div>",
+    "<a href='/x'>", "</a>", "<h1>", "</h1>", "<li>", "</li>", "<A HREF='/z'>",
+    "</A>", "text of a block long enough to be kept", "short",
+)
+
+
+def test_fast_paths_match_stdlib_on_seeded_sweep():
+    """Seeded differential sweep (20k fragments) of the fast tokenizer —
+    prune-subtree skip, simple-tag regex, general path — against the
+    stdlib-driven ``_BlockParser``: same segments, and the Block-free text
+    path equals ``clean_text`` of the kept stdlib spans with ``n_blocks``
+    = their count. Fragments the stdlib parser crashes on are skipped."""
+    import random
+
+    from ankiocr_spark.kernel import _fused_segments, _segments, extract_row
+
+    rng = random.Random(20240101)
+    compared = 0
+    for _ in range(20_000):
+        s = "".join(rng.choices(_SWEEP_PIECES, k=rng.randint(1, 14)))
+        try:
+            slow = _segments(s, False, use_fast=False)
+        except Exception:
+            continue
+        assert _fused_segments(s) == slow, repr(s)
+        kept = [b for b in extract_spans(s, _use_fast=False) if b.kept]
+        text, n_blocks, _, _ = extract_row(s, False)
+        assert (text, n_blocks) == (
+            clean_text("\n".join(b.text for b in kept)), len(kept)
+        ), repr(s)
+        compared += 1
+    assert compared > 19_000
+
+
+def test_adversarial_pruned_page_stays_linear():
+    """A ~4 MB page whose <nav> holds an unterminated quoted attribute and
+    a tag with a long whitespace run and no '>' must parse within 5x the
+    time of a benign page of the same size (a ratio: host speed drifts)."""
+    import time
+
+    from ankiocr_spark.kernel import _fused_segments
+
+    size = 4 * 1024 * 1024
+    unit = ('<nav><ul><li><a href="/x">link</a></li></ul></nav>'
+            "<p>paragraph text that is long enough to be kept</p>")
+    benign = unit * (size // len(unit))
+    half = size // 2
+    adversarial = (
+        '<nav><a title="' + ("word " * (half // 5))  # quote never closes
+        + "<div" + " " * half  # whitespace run, no '>'
+    )
+
+    def best_of_3(s):
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            _fused_segments(s)
+            best = min(best, time.perf_counter() - t0)
+        return best
+
+    assert best_of_3(adversarial) < 5 * best_of_3(benign)
 
 
 def test_fast_tokenizer_matches_stdlib_on_fixtures():
