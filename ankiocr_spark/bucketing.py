@@ -22,24 +22,18 @@ from pyspark.sql import functions as F
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int,
-    key: str,
-    sort: bool = True,
-    path: str = None,
+    df: DataFrame, table: str, buckets: int, key: str, path: str = None
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-ordered) table.
-    Sorting by the key lets SortMergeJoin skip its sort too. With ``path``
-    the table is EXTERNAL at that location — use a fresh path for
-    rerun-safe jobs: a managed table's warehouse directory outlives the
-    (per-session) catalog entry, so a second session's identically-named
-    saveAsTable dies with LOCATION_ALREADY_EXISTS."""
+    """Persist ``df`` as a bucketed, key-sorted table. Sorting by the key
+    lets SortMergeJoin skip its sort too. With ``path`` the table is
+    EXTERNAL at that location — use a fresh path for rerun-safe jobs: a
+    managed table's warehouse directory outlives the (per-session) catalog
+    entry, so a second session's identically-named saveAsTable dies with
+    LOCATION_ALREADY_EXISTS."""
     writer = (
-        df.write.mode("overwrite").format("parquet").bucketBy(buckets, key)
+        df.write.mode("overwrite").format("parquet")
+        .bucketBy(buckets, key).sortBy(key)
     )
-    if sort:
-        writer = writer.sortBy(key)
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
@@ -63,12 +57,7 @@ def count_exchanges(df: DataFrame) -> int:
 
 
 def merge_upsert(
-    spark: SparkSession,
-    target_table: str,
-    delta_table: str,
-    key: str = "url",
-    assert_unique_delta: bool = True,
-    eager_check: bool = False,
+    spark: SparkSession, target_table: str, delta_table: str, key: str = "url"
 ) -> DataFrame:
     """Iceberg ``MERGE INTO target USING delta ON key WHEN MATCHED THEN
     UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` re-expressed over
@@ -79,89 +68,53 @@ def merge_upsert(
     sort-ordered on ``key``, the join plans with ZERO Exchange and zero
     Sort — at 100 TB a re-crawl MERGE touches no shuffle at all.
 
-    ``assert_unique_delta`` mirrors MERGE's runtime contract: Iceberg
-    errors when one target row matches multiple delta rows, whereas a
-    full-outer join would silently FAN OUT (one output row per duplicate,
-    corrupting key uniqueness for every later merge — r3 review fix). The
-    check is FOLDED INTO THE MERGE PLAN (VERDICT r3 #5 — previously a
-    separate ``groupBy().count()`` pass scanned the delta twice): a
-    per-key window count rides the delta scan — sharing the bucketed
-    table's hash partitioning, so still no Exchange — and a guarded
-    ``raise_error`` FILTER fires at ACTION time, which is exactly when
-    Iceberg's own multiple-match check fires. A filter (not a guarded
-    projection — column pruning would elide that under ``count()``-style
-    actions) is evaluated under every action. One narrowing vs the eager
-    pre-check it replaced (review find): a PARTIAL action — ``show(5)``,
-    ``limit(k)``, ``first()`` — only evaluates the rows it touches, so an
-    invalid delta whose duplicate rows sort late can pass a peek and only
-    raise on the full materialization; MERGE consumers materialize fully
-    (the write is the action), so the contract holds where it matters.
-    Disable the check for deltas already deduped upstream, e.g. by the
-    streaming url-dedup ingest.
-
-    ``eager_check=True`` restores the r3 behavior for INTERACTIVE use
-    (ADVICE r4): one extra aggregation pass over the delta's key column
-    (bucketed scan, pruned to the key — cheap next to the merge itself)
-    that raises ``ValueError`` immediately at plan-construction time, so
-    a partial action (``show(5)``, ``limit``, ``first``) can never peek
-    past an invalid delta, and callers written against the r3 contract
-    keep catching ValueError. Batch/production MERGEs leave it off: the
-    write is a full materialization, where the in-plan guard fires at
-    exactly the moment Iceberg's own multiple-match check would. A
-    passing eager check SUPERSEDES the in-plan guard (the returned plan
-    carries no second uniqueness window — checking twice per action
-    would be pure duplicated work; r5 review find).
+    Duplicate delta keys raise, mirroring MERGE's runtime contract:
+    Iceberg errors when one target row matches multiple delta rows,
+    whereas a full-outer join would silently FAN OUT (one output row per
+    duplicate, corrupting key uniqueness for every later merge). The
+    check is folded into the merge plan: a per-key window count rides the
+    delta scan — sharing the bucketed table's hash partitioning, so still
+    no Exchange — and a guarded ``raise_error`` FILTER fires at ACTION
+    time, which is exactly when Iceberg's own multiple-match check fires.
+    A filter (not a guarded projection — column pruning would elide that
+    under ``count()``-style actions) is evaluated under every action. A
+    PARTIAL action — ``show(5)``, ``limit(k)``, ``first()`` — only
+    evaluates the rows it touches, so an invalid delta whose duplicate
+    rows sort late can pass a peek and only raise on the full
+    materialization; MERGE consumers materialize fully (the write is the
+    action), so the contract holds where it matters.
 
     NULL keys can never match a target row (the join condition is
     null-rejecting), so multiple NULL-key delta rows cannot fan out —
     they all pass through as inserts, which MERGE accepts."""
-    d_tbl = spark.table(delta_table)
-    if eager_check:
-        dup = (
-            d_tbl.where(F.col(key).isNotNull())
-            .groupBy(key)
-            .count()
-            .where(F.col("count") > 1)
-            .select(key)
-            .first()
-        )
-        if dup is not None:
-            raise ValueError(
-                f"MERGE: delta table {delta_table!r} has duplicate {key!r} "
-                f"keys (e.g. {dup[0]!r}) — MERGE semantics forbid multiple "
-                "matches per target row; dedup the delta (e.g. keep newest "
-                "warc_ts per key) first"
-            )
-        assert_unique_delta = False  # just verified; skip the in-plan guard
-    if assert_unique_delta:
-        d_tbl = d_tbl.withColumn(
-            "_n_delta_rows", F.count("*").over(Window.partitionBy(key))
-        )
+    d = (
+        spark.table(delta_table)
+        .withColumn("_n_delta_rows", F.count("*").over(Window.partitionBy(key)))
+        .alias("d")
+    )
     t = spark.table(target_table).alias("t")
-    d = d_tbl.alias("d")
     val_cols = [c for c in spark.table(target_table).columns if c != key]
     matched = F.col(f"d.{key}").isNotNull()
-    joined = t.join(d, F.col(f"t.{key}") == F.col(f"d.{key}"), "full_outer")
-    if assert_unique_delta:
-        joined = joined.where(
-            F.when(
-                matched & (F.col("d._n_delta_rows") > 1),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"MERGE: delta table {delta_table!r} has duplicate "
-                            f"{key!r} keys (e.g. "
-                        ),
-                        F.col(f"d.{key}"),
-                        F.lit(
-                            ") — MERGE semantics forbid multiple matches per "
-                            "target row; dedup the delta (e.g. keep newest "
-                            "warc_ts per key) first"
-                        ),
-                    )
-                ),
-            ).otherwise(F.lit(True))
+    dup_error = F.raise_error(
+        F.concat(
+            F.lit(
+                f"MERGE: delta table {delta_table!r} has duplicate {key!r} "
+                "keys (e.g. "
+            ),
+            F.col(f"d.{key}"),
+            F.lit(
+                ") — MERGE semantics forbid multiple matches per target row; "
+                "dedup the delta (e.g. keep newest warc_ts per key) first"
+            ),
         )
+    )
+    joined = t.join(
+        d, F.col(f"t.{key}") == F.col(f"d.{key}"), "full_outer"
+    ).where(
+        F.when(matched & (F.col("d._n_delta_rows") > 1), dup_error).otherwise(
+            F.lit(True)
+        )
+    )
     return joined.select(
         F.coalesce(F.col(f"d.{key}"), F.col(f"t.{key}")).alias(key),
         *[

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ankiocr_spark.ops import load
+
 #: PII patterns — intersection of Java-regex and RE2 syntax (character
 #: classes + bounded quantifiers only) so Spark and the DuckDB oracle
 #: compile the SAME automaton. Kept deliberately simple: the operator
@@ -39,12 +41,6 @@ MIN_DISTINCT_RATIO = 0.35
 TFIDF_TOP_K = 3
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ankiocr_spark.ops import load  # this module's shared reader
-
-    return load(spark, sf_dir, "documents")
-
-
 def _tokenized_docs(
     spark: SparkSession, sf_dir: str, extra: tuple = ()
 ) -> DataFrame:
@@ -53,7 +49,7 @@ def _tokenized_docs(
     delimiter and the min-token cutoff are load-bearing for BOTH oracles
     (repetition, lm_perplexity); one definition keeps them in sync."""
     return (
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", *extra, F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= 2)
@@ -68,7 +64,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass streams at I/O speed; the per-class counts are the audit
     columns a compliance report aggregates later. Email is redacted
     before IP so an address's host part can't be half-rewritten."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     pii_text = F.when(
         F.col("doc_id") % PII_MOD == 0,
         F.concat(
@@ -199,7 +195,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parity sweep each round. The engine-exact alternative is the
     integer-quantization discipline dsir_weight/token_entropy use
     (quantize each log term to micro-nats BEFORE aggregation)."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     n_docs = docs.count()  # metadata-only action, same class as pagerank's
     tf = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
@@ -273,7 +269,7 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen rlike fused into the same projection — zero exchanges
     total. Emits the verdicts plus `kept` so downstream re-thresholds
     without recompute (the repetition_filter contract)."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     host = F.concat(
         F.lit("h"), (F.col("doc_id") % 11).cast("string"), F.lit(".example.org")
     )
@@ -389,7 +385,7 @@ def q_domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate 1.0 — silently upsampling exactly the languages the mixture
     excludes (review find; latent because every shipped fixture carries
     only the five target langs)."""
-    docs = _docs(spark, sf_dir).where(
+    docs = load(spark, sf_dir, "documents").where(
         F.col("text").isNotNull() & F.col("lang").isin(list(TARGET_MIX))
     )
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_lang"))
@@ -695,7 +691,7 @@ def q_robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: AnkiOCR's per-note "is this field already
     populated / excluded" guard before OCR (`api.py:252-268`),
     generalized to page-level crawl policy."""
-    from ankiocr_spark.ops import WRAP_PREFIX, WRAP_SUFFIX, doc_url, load
+    from ankiocr_spark.ops import WRAP_PREFIX, WRAP_SUFFIX, doc_url
 
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     meta = F.lit("")
@@ -782,7 +778,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     of fixed OCR artifacts before writeback (`ocr.py:141-149`), lifted
     from per-string constants to corpus-learned per-host templates."""
     docs = (
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select(
             "doc_id",
@@ -901,7 +897,7 @@ def q_dsir_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same tokenize + ≥2-token contract as _tokenized_docs, with lang kept
     # in the projection (joining it back on would shuffle the corpus)
     docs = (
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", "lang", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= 2)
@@ -1075,7 +1071,7 @@ def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: `ocr.py:141-149` (clean_ocr_text) strips blank
     lines and artifact characters per OCR result — the same
     line-filtering writeback step, with C4's published rule set."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     lines = c4_lines(F.col("text"), F.col("doc_id"))
     paged = docs.select("doc_id", "text", lines.alias("_lines")).select(
         "doc_id",
@@ -1140,7 +1136,7 @@ def q_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: the language whitelist AnkiOCR applies before OCR
     (`ocr.py:62`, ISO 639-2 list) — a config-driven allow/deny gate,
     here over content tokens instead of language codes."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select(
         "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("_toks")
     )
@@ -1203,7 +1199,7 @@ def q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact characters from recognized text; mojibake is the crawl-side
     artifact class, detected rather than silently stripped so the fetch
     layer can re-decode."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     corrupted = F.concat(
         F.col("text"),
         F.when(
@@ -1291,7 +1287,7 @@ def q_domain_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog:
     AnkiOCR's per-deck scoping of which notes enter OCR
     (`ocr.py:55-60`) — a container-level gate ahead of per-item work."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     host = F.concat(
         F.lit("h"), (F.col("doc_id") % 11).cast("string"), F.lit(".example.org")
     )
@@ -1436,7 +1432,7 @@ def q_robots_txt_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical inputs. Reference analog: AnkiOCR's pre-OCR exclusion
     guard (`api.py:252-268`) — skip items policy forbids before paying
     for them."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     host = F.concat(
         F.lit("h"), (F.col("doc_id") % 11).cast("string"), F.lit(".example.org")
     )

@@ -12,9 +12,9 @@ Scale notes (the 100 TB design point):
   - SimHash: fixed 32-bit sketch per doc, near-dups share sketch values.
 
 All hashes are md5-derived (`conv(substr(md5(x),1,15),16,10)`) so the
-DuckDB oracle reproduces them exactly; xxhash64 would be faster JVM-side
-but is not available to the oracle. At production scale swap the md5 base
-for xxhash64 — the plan shape is identical. MinHash additionally uses the
+DuckDB oracle reproduces them exactly (one family, ankiocr_spark.hashing;
+xxhash64 would be faster JVM-side but is not available to the oracle).
+MinHash additionally uses the
 textbook one-base-hash + K universal affine transforms (mod 2^31−1; see
 the MINHASH_P field-size rationale) instead of K hash passes, so the
 largest stage hashes each shingle ONCE.
@@ -25,20 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _load_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ankiocr_spark.ops import load
-
-    return load(spark, sf_dir, "documents")
-
-
-# 60-bit deterministic bucketing hash — md5-derived in oracle mode
-# (identical in Spark and DuckDB), xxhash64 in production mode (see
-# ankiocr_spark.hashing for the pluggable family; VERDICT r4 #4).
-def _md5int(col):
-    from ankiocr_spark.hashing import hash60
-
-    return hash60(col)
+from ankiocr_spark.hashing import hash31, hash60
+from ankiocr_spark.ops import load
 
 
 def shingles(
@@ -85,7 +73,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver corpus has no exact duplicates, so the query would match its
     oracle trivially on 0 rows; to keep the check meaningful it unions a
     deterministic duplicated slice (every 10th doc re-keyed) in-flight."""
-    docs = _load_docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     dupes = docs.where(F.col("doc_id") % 10 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1000000
     )
@@ -140,7 +128,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches, so the plan re-scanned the input and re-ran the whole
     shingle pipeline per branch (ReadSchema×3 in the audit). One lineage
     with one extra stream shuffle beats three lineages at any scale."""
-    docs = _load_docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     sh = shingles(docs)
     capped = sh.withColumn(
         "df", F.count("*").over(Window.partitionBy("shingle"))
@@ -233,8 +221,7 @@ LSH_BAND_ROWS = 2    # rows per band → 4 bands
 #: on bigint overflow, so a 61-bit field with wrapping multipliers is not
 #: reproducible there), while A_s ≫ P/2^31 guarantees ~A_s wraps per hash —
 #: a genuinely 2-universal family. 31-bit collisions are immaterial to min
-#: statistics at any realistic shingle-universe size; the production swap
-#: remains xxhash64 (see module docstring).
+#: statistics at any realistic shingle-universe size.
 MINHASH_P = (1 << 31) - 1
 MINHASH_AB = [
     (1094795585, 285419), (1402097911, 887011), (733686109, 613397),
@@ -260,9 +247,7 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
     aggregation and the shuffle moves O(docs) rows of K columns instead
     of O(docs × K) rows. The K permutations are universal-hash transforms
     of ONE md5 base hash (MINHASH_AB above), not K separate md5 passes."""
-    from ankiocr_spark.hashing import hash31
-
-    base = hash31(F.col("shingle"))  # == md5-derived % MINHASH_P in oracle mode
+    base = hash31(F.col("shingle"))  # == md5-derived % MINHASH_P
     hashed = sh.select("doc_id", base.alias("hb"))
     mins = [
         F.min((F.lit(a) * F.col("hb") + F.lit(b)) % F.lit(MINHASH_P)).alias(
@@ -304,7 +289,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     band keys. Band keys are a pure projection over the K signature
     columns (md5 of the band's minhashes), so the only shuffles left are
     the signature agg and the bucket agg."""
-    docs = _load_docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     sig = minhash_signatures(shingles(docs, distinct=False))
     bands = lsh_bands(sig)
     # Pair enumeration WITHOUT a self-join: collect each bucket's (sorted)
@@ -387,7 +372,7 @@ def q_crossdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     enforces the cap runs over the (small) reference band table, never
     the corpus. Output keeps ALL new docs (left join) so both verdicts
     are value-checked."""
-    docs = _load_docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     bands = lsh_bands(minhash_signatures(shingles(docs, distinct=False)))
     ref = bands.where(F.col("doc_id") % 2 == 0).select(
         F.col("doc_id").alias("ref_id"), "band", "band_key"
@@ -466,7 +451,7 @@ def simhash_sketch(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
     ).where(F.col("token") != "")
-    tok_hash = toks.select("doc_id", _md5int(F.col("token")).alias("h"))
+    tok_hash = toks.select("doc_id", hash60(F.col("token")).alias("h"))
     per_bit = [
         F.sum(
             F.expr(f"shiftright(h, {b})").bitwiseAND(F.lit(1)) * 2 - 1
@@ -481,7 +466,7 @@ def simhash_sketch(docs: DataFrame) -> DataFrame:
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_sketch(_load_docs(spark, sf_dir))
+    return simhash_sketch(load(spark, sf_dir, "documents"))
 
 
 ORACLE_DEDUP_SIMHASH = f"""
@@ -523,7 +508,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic near-dup slice is unioned in-flight: every 10th doc
     re-keyed with ONE token appended — a handful of sketch bits flip and
     the pair must surface within the hamming radius."""
-    docs = _load_docs(spark, sf_dir).select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     neardups = docs.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" neardup")).alias("text"),
@@ -630,7 +615,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics move into the post-probe aggregate (``countDistinct``),
     which only ever sees the HITS. At 10^12 training docs this is one
     scan + one broadcast; the only exchange carries the tiny hit set."""
-    docs = _load_docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     ev = (
         shingles(docs.where(F.col("doc_id") % EVAL_DOC_MOD == 0),
                  n=DECONTAM_NGRAM, distinct=False)
@@ -704,7 +689,7 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     to grouping by md5(paragraph) minus the collision caveat; a 100-TB
     run that only needs doc refs would group by the 16-byte md5 and drop
     the text from the shuffle."""
-    docs = _load_docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     dupes = docs.where(F.col("doc_id") % PARA_DUP_MOD == 0).withColumn(
         "doc_id", F.col("doc_id") + 2000000
     )
@@ -892,7 +877,7 @@ def _keeper_over(
     """Keeper policy body shared by the inline and staged variants: rank
     the augmented corpus members of each cluster by (n_tokens desc,
     doc_id asc); rank 1 is the keeper."""
-    base = _load_docs(spark, sf_dir).select("doc_id", "text")
+    base = load(spark, sf_dir, "documents").select("doc_id", "text")
     neardups = base.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" neardup")).alias("text"),
@@ -1018,7 +1003,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an inline split(text) would re-tokenize the whole doc PER WINDOW —
     # O(tokens²) on long docs (r4 review find)
     docs = (
-        _load_docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", F.split("text", " ").alias("_toks"))
     )
@@ -1027,7 +1012,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(0), F.size(toks) - SUBSTR_W),
         lambda i: F.struct(
             i.alias("start"),
-            _md5int(F.array_join(F.slice(toks, i + 1, SUBSTR_W), " ")).alias("h"),
+            hash60(F.array_join(F.slice(toks, i + 1, SUBSTR_W), " ")).alias("h"),
         ),
     )
     exploded = (

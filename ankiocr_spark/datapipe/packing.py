@@ -32,7 +32,7 @@ driver-trivial); it is a fixed small constant here so every shipped sf
 exercises multiple buckets.
 
 ``train_val_split`` is pure map-side hashing (md5 bucket per doc, same
-2-engine hash as dedup's ``_md5int``) plus a 3-row aggregate: zero
+2-engine ``hashing.hash60`` as dedup) plus a 3-row aggregate: zero
 corpus shuffle beyond the final tiny groupBy.
 """
 
@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ankiocr_spark.ops import load
 
 #: tokens per packed training sequence (fixture docs run 10-99 ws-tokens,
 #: so chunks hold ~2-3 docs and most docs straddle a boundary — both code
@@ -65,12 +67,6 @@ MAX_OFFSET_BUCKETS = 1_000_000
 SPLIT_BUCKETS = 100
 TRAIN_LT = 90
 VAL_LT = 95
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ankiocr_spark.ops import load
-
-    return load(spark, sf_dir, "documents")
 
 
 def _ws_tokens() -> "F.Column":
@@ -196,7 +192,7 @@ def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query: concat-and-chunk packing of the raw corpus (see
     ``pack_chunks`` for the algorithm and scale shape)."""
     return pack_chunks(
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", _ws_tokens().alias("n"))
     )
@@ -247,7 +243,7 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("test"))
     )
     d = (
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select(split.alias("split"), _ws_tokens().alias("n"))
     )
@@ -323,7 +319,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ankiocr_spark.datapipe.dedup import shingles
     from ankiocr_spark.hashing import hash60
 
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     injected = docs.select(
         "doc_id",
         F.when(
@@ -420,7 +416,7 @@ def q_rag_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not CSE inside downstream expressions; an inline split would
     re-tokenize per chunk row)."""
     base = (
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", F.split("text", " ").alias("_toks"))
     )

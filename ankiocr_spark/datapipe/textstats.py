@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ankiocr_spark.ops import load
+
 #: function-word markers for the n-gram/stopword language heuristic
 EN_MARKERS = ("the", "a", "row", "line")
 
@@ -14,12 +16,6 @@ EN_MARKERS = ("the", "a", "row", "line")
 BPE_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 LANG_RATIO_THRESHOLD = 0.04
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ankiocr_spark.ops import load
-
-    return load(spark, sf_dir, "documents")
 
 
 def marker_ratio_col(tokens) -> "F.Column":
@@ -46,7 +42,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: ratio of English function-word tokens.
     (A real model would be a pandas UDF; the heuristic keeps this JVM-side
     and oracle-checkable — the plumbing is what transfers to 100 TB.)"""
-    docs = _docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     tokens = F.split("text", " ")
     ratio = marker_ratio_col(tokens)
     return docs.select(
@@ -75,7 +71,7 @@ FROM documents
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score from length + lexical-diversity ratios —
     the standard cheap pre-filter before expensive pipeline stages."""
-    docs = _docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     tokens = F.split("text", " ")
     n_tokens = F.size(tokens)
     distinct_ratio = F.size(F.array_distinct(tokens)) / n_tokens
@@ -99,7 +95,7 @@ FROM documents
 
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + BPE-ish pre-tokens per document."""
-    docs = _docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda x: x != "")).alias("ws_tokens"),
@@ -127,7 +123,7 @@ def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the vocabulary it is documented to share (the _tokenized_docs
     sync discipline; review find). The split delimiter and the
     empty-token filter are load-bearing for all three oracles."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select(
         F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("token")
     )
@@ -367,7 +363,7 @@ def q_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept exact here for the value oracle. Float means ride as
     exact quantized-integer sums (see ``_HEALTH_Q``) divided once on the
     one-row result; every other column is a pure integer."""
-    docs = _docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
     quality_q = F.round(quality_col(F.split("text", " ")) * _HEALTH_Q).cast(
         "bigint"
@@ -473,7 +469,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps). A production engine adds
     an inverted index (`tfidf_top_terms` is the posting builder); this is
     the scorer, exact by construction."""
-    base = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    base = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # token array projected ONCE below its consumers (HOF lambdas have no
     # codegen CSE)
     toks = base.select(
@@ -571,7 +567,7 @@ ORACLE_BM25 = _bm25_oracle()
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic document fingerprint: hash of normalized prefix +
     length — the cheap first-pass near-dup key (rolling-hash analog)."""
-    docs = _docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.md5(
@@ -618,7 +614,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: `ocr.py:141-149` drops degenerate OCR output with
     fixed string rules; this is the distributional form of that gate."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select(
         "doc_id",
         F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias(
@@ -693,7 +689,7 @@ def q_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: the reference reports only per-run progress counts
     (`api.py:252-268` NotesQuery / QueryOp progress); this generalizes
     that reporting surface to corpus-level statistics."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     tokens = F.split("text", " ")
     x_side = docs.select(
         "doc_id",
@@ -835,7 +831,7 @@ def q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: AnkiOCR gates what reaches a note by fixed config
     (language whitelist, `ocr.py:62`; text scrub, `ocr.py:141-149`);
     this lifts that fixed gate to a per-document learned score."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select(
         "doc_id",
         F.filter(F.split("text", " "), lambda x: x != "").alias("_toks"),
@@ -979,7 +975,7 @@ def q_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     train half `classifier_score` was missing (its scoring row consumes
     these engine-fitted weights, not hash-derived stand-ins)."""
     labeled = (
-        _docs(spark, sf_dir)
+        load(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select(
             "doc_id",
@@ -1034,7 +1030,7 @@ def q_training_set_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup group-by on the content hash. At 10^12 docs this is the
     'shrink first' stage that every expensive operator (MinHash, ANN,
     extraction re-runs) reads from instead of the raw crawl."""
-    docs = _docs(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
     tokens = F.split("text", " ")
     lang_ok = marker_ratio_col(tokens) >= LANG_RATIO_THRESHOLD
     gated = docs.where(
@@ -1080,7 +1076,7 @@ def q_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     group). The 100-TB path swaps in ``approx_percentile(col, p, acc)``
     (bounded GK-sketch state, partial-aggregatable) — one identifier, same
     plan shape; the exact form stays here as the value contract."""
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     tokens = F.split("text", " ")
     return (
         docs.select("lang", quality_col(tokens).alias("quality"))

@@ -1,32 +1,19 @@
-"""Pluggable deterministic hash family for bucketing/sketch operators.
+"""The deterministic hash family for bucketing/sketch operators.
 
-Two modes, one plan shape (VERDICT r4 #4):
+One family: md5-derived integers via ``conv(substr(md5(x), 1, k), 16, 10)``
+— reproducible bit-exactly by the DuckDB oracles
+(``('0x' || substr(md5(x), 1, k))::BIGINT``), which is what makes every
+dedup/bucketing driver query value-checkable. ``hash60`` and ``hash31``
+are the only definitions, so swapping in a cheaper JVM-native hash (e.g.
+``F.xxhash64``, which skips the hex-string materialization and base parse
+per row) is an edit to these two functions plus a matching oracle — not a
+runtime switch.
 
-- **oracle** (default): md5-derived integers via
-  ``conv(substr(md5(x), 1, k), 16, 10)`` — reproducible bit-exactly by
-  the DuckDB oracles (``('0x' || substr(md5(x), 1, k))::BIGINT``), which
-  is what makes every dedup/bucketing driver query value-checkable.
-- **production**: ``F.xxhash64`` — the JVM-native 64-bit hash Spark
-  itself shuffles with. No hex-string materialization, no base
-  conversion: on the shingle stream (the single largest stage at 10^12
-  docs — ~10^14 hashed rows) this removes a string allocation + parse
-  per row. NOT reproducible in DuckDB, so production mode is exercised
-  by plan-equality + distribution tests and the bench delta, never by
-  the value oracles.
-
-The mode is a module-level switch consulted at PLAN-BUILD time (the
-returned Column embeds the chosen expression; flipping the mode never
-mutates an existing DataFrame). Both modes emit the same column type
-(non-negative BIGINT), so swapping changes zero downstream schema and —
-asserted by tests/test_dedup.py — zero physical plan structure.
-
-Hash quality note: md5's 60 truncated bits and xxhash64 are both far
-past the collision needs of 4096-bucket feature spaces, 2^31-1 minhash
-fields, and 100-bucket split ledgers; the swap is purely a CPU-cost
-choice. Sites hashing for CONTENT IDENTITY (dedup_exact's
-``md5(text)`` digest, crawl digests) intentionally stay md5 in both
-modes — digests are an interface with external systems, not a bucketing
-device.
+Hash quality note: md5's 60 truncated bits are far past the collision
+needs of 4096-bucket feature spaces, 2^31-1 minhash fields, and
+100-bucket split ledgers. Sites hashing for CONTENT IDENTITY
+(dedup_exact's ``md5(text)`` digest, crawl digests) call md5 directly —
+digests are an interface with external systems, not a bucketing device.
 
 Reference analog: the reference pins all identity to note ids
 (`api.py:252-268`); hashing strategy is pure Spark machinery with no
@@ -35,46 +22,20 @@ reference counterpart.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 #: Mersenne field for minhash bases — see dedup.MINHASH_P rationale
 _P31 = (1 << 31) - 1
 
-_MODE = "oracle"
-
-
-def mode() -> str:
-    return _MODE
-
-
-@contextmanager
-def production_hash():
-    """Build plans with xxhash64-based bucketing hashes inside this
-    context. Affects only plans CONSTRUCTED inside the block."""
-    global _MODE
-    prev = _MODE
-    _MODE = "production"
-    try:
-        yield
-    finally:
-        _MODE = prev
-
 
 def hash60(col) -> "F.Column":
     """Non-negative 60-bit integer hash of a column (strings are hashed
     as-is; cast other types to string first for oracle parity)."""
-    if _MODE == "production":
-        # top 60 bits of xxhash64, shifted unsigned → always non-negative
-        return F.shiftrightunsigned(F.xxhash64(col), 4).cast("bigint")
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
 def hash31(col) -> "F.Column":
     """Hash into the Mersenne field [0, 2^31-1) — the minhash base."""
-    if _MODE == "production":
-        return F.pmod(F.xxhash64(col), F.lit(_P31)).cast("bigint")
     return (
         F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
         % F.lit(_P31)

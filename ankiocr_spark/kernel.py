@@ -29,6 +29,7 @@ mode (``extract_spans``) alone wraps the same tuples in ``Block``s.
 
 from __future__ import annotations
 
+import codecs
 import hashlib
 import re
 from dataclasses import dataclass
@@ -461,6 +462,10 @@ _META_CHARSET = re.compile(
     re.IGNORECASE,
 )
 _SNIFF_BYTES = 2048
+#: codec names that decode ASCII to itself but are no web charset
+_NOT_CHARSETS = frozenset(
+    ("idna", "unicode-escape", "raw-unicode-escape", "utf-7")
+)
 
 
 def detect_encoding(raw: bytes) -> str:
@@ -474,20 +479,23 @@ def detect_encoding(raw: bytes) -> str:
     m = _META_CHARSET.search(raw[:_SNIFF_BYTES])
     if m:
         label = m.group(1).decode("ascii").lower()
-        import codecs
-
+        # HTML5 encoding sniffing: a label found by an ASCII prescan must
+        # name an ASCII-compatible TEXT charset — the bytes it was read
+        # from are ASCII. So the codec must decode the meta markup back to
+        # itself. That rejects UTF-16/UTF-32 under any registry alias (the
+        # spec maps utf-16 labels to UTF-8; genuine UTF-16 cannot carry an
+        # ASCII-visible <meta>), EBCDIC code pages, which garble ASCII, and
+        # bytes-to-bytes codecs (hex, base64, zip, ...), which are no text
+        # encoding at all. The Python-only transforms in _NOT_CHARSETS pass
+        # that round trip and are rejected by name.
+        probe = b'<meta charset="' + m.group(1) + b'">'
         try:
-            # HTML5 encoding sniffing: an ASCII-visible <meta> cannot occur
-            # in genuine UTF-16/UTF-32, so such a label means the bytes are
-            # really 8-bit — the spec maps utf-16 labels to UTF-8 (and has
-            # no utf-32 label at all; same impossibility argument). Compare
-            # the CANONICAL codec name, not the raw label: the registry
-            # also accepts aliases like 'utf16'/'u16'/'u32' that a prefix
-            # check on the label would miss (r3 review fix).
-            if codecs.lookup(label).name.startswith(("utf-16", "utf-32")):
-                return "utf-8"
-            return label
-        except LookupError:
+            if (
+                codecs.lookup(label).name not in _NOT_CHARSETS
+                and probe.decode(label) == probe.decode("ascii")
+            ):
+                return label
+        except (LookupError, UnicodeError):
             pass  # unknown label → UTF-8 fallback, never an error row
     return "utf-8"
 

@@ -8,7 +8,7 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 The flagship metric of this engine is documents/sec through the fused
 HTML→extracted-text kernel (BASELINE.json), reported as extra keys
 (docs_per_sec, kernel_docs_per_sec) alongside the required seconds. The
-per-query, secondary, 10× and hash-family tables go to BENCH/detail.json.
+per-query, secondary and 10× tables go to BENCH/detail.json.
 """
 
 from __future__ import annotations
@@ -224,74 +224,6 @@ def _ensure_tenx_corpus(spark, sf_dir: str) -> None:
         fh.write(sf_dir)
 
 
-#: rows for the isolated hash-stage microbench: big enough that the hash
-#: expression (not scan/agg overhead) dominates — the shingle stream is
-#: ~10^14 rows at the 10^12-doc design point, so per-row hash cost is the
-#: relevant figure, not the sf0.1 end-to-end delta where fixed costs mask it
-HASH_MICRO_ROWS = 20_000_000
-
-
-def _hash_family_delta(qs, spark, sf_dir) -> dict:
-    """Quantify the md5→xxhash64 production swap (VERDICT r4 #4): best-of-2
-    end-to-end minhash/simhash timings in both modes at this sf, plus an
-    isolated hash31 microbench at shingle-stream row counts."""
-    from pyspark.sql import functions as F
-
-    from ankiocr_spark import hashing
-
-    def run_query(name, mode, d):
-        if mode == "production":
-            with hashing.production_hash():
-                df = qs[name](spark, d)
-        else:
-            df = qs[name](spark, d)
-        t0 = time.perf_counter()
-        df.count()
-        return time.perf_counter() - t0
-
-    out: dict = {}
-    targets = [
-        ("dedup_minhash_lsh", sf_dir, "dedup_minhash_lsh"),
-        ("dedup_simhash", sf_dir, "dedup_simhash"),
-        # the shingle stream grows linearly with docs, so the swap's
-        # end-to-end effect is best read at the 10× scale point
-        ("dedup_minhash_lsh", TENX_DIR, "dedup_minhash_lsh_10x"),
-    ]
-    for name, d, label in targets:
-        best = {"oracle": float("inf"), "production": float("inf")}
-        for _ in range(2):
-            for mode in best:
-                best[mode] = min(best[mode], run_query(name, mode, d))
-        out[label] = {m: round(v, 3) for m, v in best.items()}
-        out[label]["speedup"] = round(best["oracle"] / best["production"], 2)
-
-    base = spark.range(HASH_MICRO_ROWS).select(
-        F.concat(F.lit("shingle token stream "), F.col("id").cast("string")).alias("t")
-    )
-
-    def run_micro(mode):
-        if mode == "production":
-            with hashing.production_hash():
-                col = hashing.hash31(F.col("t"))
-        else:
-            col = hashing.hash31(F.col("t"))
-        t0 = time.perf_counter()
-        base.select(col.alias("h")).agg(F.max("h")).collect()
-        return time.perf_counter() - t0
-
-    best = {"oracle": float("inf"), "production": float("inf")}
-    run_micro("oracle")  # warm
-    for _ in range(2):
-        for mode in best:
-            best[mode] = min(best[mode], run_micro(mode))
-    out["hash31_micro"] = {
-        "rows": HASH_MICRO_ROWS,
-        **{m: round(v, 3) for m, v in best.items()},
-        "speedup": round(best["oracle"] / best["production"], 2),
-    }
-    return out
-
-
 #: the keys of the printed line; a line that outgrows a log-tail capture
 #: parses as nothing, so the tables go to DETAIL_PATH instead
 SUMMARY_KEYS = (
@@ -359,8 +291,6 @@ def main() -> None:
             dt = round(time.perf_counter() - t0, 3)
             secondary_10x[name] = min(secondary_10x.get(name, dt), dt)
 
-    hash_family = _hash_family_delta(qs, spark, sf_dir)
-
     kernel_dps = round(KERNEL_BENCH_DOCS / min(kernel_secs), 1)
 
     total = round(sum(timings.values()), 3)
@@ -383,9 +313,6 @@ def main() -> None:
         # fixture corpus (the sf tables are too small to saturate the box)
         "kernel_bench_docs": KERNEL_BENCH_DOCS,
         "kernel_docs_per_sec": kernel_dps,
-        # md5 (oracle mode) vs xxhash64 (production mode) on the hash
-        # stages — see ankiocr_spark/hashing.py and BENCH/BASELINE.md §hash
-        "hash_family": hash_family,
         # same basket over the 10× documents corpus (embeddings symlinked
         # at 1× — ann_topk_bruteforce therefore measures 1× there)
         "docs_10x": n_docs_10x,

@@ -23,7 +23,6 @@ def test_bench_line_is_short_and_detail_keeps_every_table(tmp_path, monkeypatch)
         "docs_per_sec": 7496.3,
         "kernel_bench_docs": bench.KERNEL_BENCH_DOCS,
         "kernel_docs_per_sec": 12345.6,
-        "hash_family": {"hash31_micro": {"rows": 1, "speedup": 1.0}},
         "docs_10x": 50000,
         "value_10x": 1234.567,
         "queries_10x": queries,

@@ -112,15 +112,6 @@ def test_merge_upsert_rejects_duplicate_delta_keys(spark):
     try:
         with pytest.raises(Exception, match="duplicate"):
             merge_upsert(spark, "m_t2", "m_d2").count()
-        # eager mode (ADVICE r4): raises ValueError at plan-construction
-        # time — a partial action can never peek past an invalid delta,
-        # and r3-era callers keep catching ValueError
-        with pytest.raises(ValueError, match="duplicate"):
-            merge_upsert(spark, "m_t2", "m_d2", eager_check=True)
-        # opting out reproduces the raw fan-out join (documented escape)
-        assert merge_upsert(
-            spark, "m_t2", "m_d2", assert_unique_delta=False
-        ).count() == 2
         # NULL keys never match the join condition, so duplicate NULLs
         # cannot fan out — the check must accept them (MERGE does)
         nulls = spark.createDataFrame(
@@ -128,8 +119,6 @@ def test_merge_upsert_rejects_duplicate_delta_keys(spark):
         )
         write_bucketed(nulls, "m_d2n", 2, "url")
         assert merge_upsert(spark, "m_t2", "m_d2n").count() == 3
-        # eager mode must accept duplicate NULL keys too
-        assert merge_upsert(spark, "m_t2", "m_d2n", eager_check=True).count() == 3
     finally:
         spark.sql("DROP TABLE IF EXISTS m_t2")
         spark.sql("DROP TABLE IF EXISTS m_d2")

@@ -1,12 +1,8 @@
-"""The pluggable hash family (VERDICT r4 #4): oracle mode must stay
-bit-identical to the md5 contract the DuckDB oracles replicate, and
-production (xxhash64) mode must change ONLY the hash expression — same
-column types, same physical plan structure, same statistical behavior."""
+"""The bucketing hash family must stay bit-identical to the md5 contract
+the DuckDB oracles replicate."""
 
 import hashlib
-import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from ankiocr_spark import hashing
@@ -24,67 +20,3 @@ def test_oracle_mode_matches_md5_contract(spark):
         hexd = hashlib.md5(r["t"].encode()).hexdigest()
         assert r["h60"] == int(hexd[:15], 16)
         assert r["h31"] == int(hexd[:8], 16) % ((1 << 31) - 1)
-
-
-def test_production_mode_is_nonnegative_uniform_and_scoped(spark):
-    df = spark.range(20000).select(F.col("id").cast("string").alias("t"))
-    with hashing.production_hash():
-        assert hashing.mode() == "production"
-        cols = df.select(
-            hashing.hash60(F.col("t")).alias("h60"),
-            hashing.hash31(F.col("t")).alias("h31"),
-        )
-    # plans built inside the context keep production exprs after exit
-    assert hashing.mode() == "oracle"
-    agg = cols.select(
-        F.min("h60").alias("lo60"), F.max("h60").alias("hi60"),
-        F.min("h31").alias("lo31"), F.max("h31").alias("hi31"),
-    ).first()
-    assert 0 <= agg["lo60"] and agg["hi60"] < (1 << 60)
-    assert 0 <= agg["lo31"] and agg["hi31"] < (1 << 31) - 1
-    buckets = (
-        cols.groupBy((F.col("h60") % 16).alias("b")).count().collect()
-    )
-    assert len(buckets) == 16
-    for r in buckets:
-        assert abs(r["count"] - 20000 / 16) < 0.3 * 20000 / 16
-
-
-def _node_sequence(df) -> list:
-    """Physical-plan operator sequence, expressions stripped."""
-    out = []
-    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
-        m = re.match(r"[\s:+*-]*\(?\d*\)?\s*([A-Za-z][A-Za-z0-9]*)", line)
-        if m:
-            out.append(m.group(1))
-    return out
-
-
-@pytest.mark.parametrize(
-    "qname",
-    ["dedup_minhash_lsh", "dedup_simhash", "classifier_score", "dsir_weight",
-     "train_val_split"],
-)
-def test_production_swap_preserves_plan_structure(spark, sf_dir, qname):
-    """Swapping md5 → xxhash64 must leave the operator tree untouched —
-    same exchanges, same aggregates, same joins; only the hash expression
-    inside projections changes. This is the 'plan equality' contract that
-    lets production flip the switch without re-auditing plans."""
-    import __spark_entry__ as entry
-
-    q = entry.queries()[qname]
-    oracle_nodes = _node_sequence(q(spark, sf_dir))
-    with hashing.production_hash():
-        prod_df = q(spark, sf_dir)
-    prod_nodes = _node_sequence(prod_df)
-    assert oracle_nodes == prod_nodes
-    # and the swap really took: no md5 left in the production plan's
-    # bucketing expressions (content digests are exempt, but none of the
-    # parametrized queries digests content)
-    prod_plan = prod_df._jdf.queryExecution().executedPlan().toString()
-    oracle_plan_has_md5 = "md5" in (
-        q(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    )
-    if qname != "dedup_minhash_lsh":  # lsh band keys stay md5 (doc'd)
-        assert oracle_plan_has_md5 and "md5" not in prod_plan
-    assert "xxhash64" in prod_plan

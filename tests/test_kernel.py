@@ -6,6 +6,7 @@ import random
 
 from ankiocr_spark.kernel import (
     extract_main_text,
+    extract_row,
     extract_spans,
     extract_record,
     MAX_HTML_BYTES,
@@ -138,7 +139,7 @@ def test_charset_sniffing():
         assert "﻿" not in extracted
     # HTML5 prescan: an ASCII-visible meta utf-16 label is a lie (genuine
     # UTF-16 can't contain it) — mapped to utf-8 per the spec; registry
-    # ALIASES (utf16, u16) must be caught too, via the canonical codec name
+    # ALIASES (utf16, u16) must be caught too, by the ASCII round trip
     for label in ("utf-16", "utf-16le", "UTF-16BE", "utf16", "u16",
                   "utf-32", "utf32", "u32"):
         lied = (f'<meta charset="{label}">' + body).encode("utf-8")
@@ -153,3 +154,13 @@ def test_charset_sniffing():
     assert "caf" in extract_main_text(junk)
     # undeclared stays utf-8 (existing behavior unchanged)
     assert detect_encoding(body.encode()) == "utf-8"
+    # labels the codec registry knows but that name no ASCII-compatible
+    # text charset: bytes-to-bytes codecs, Python-only transforms and
+    # EBCDIC → utf-8 fallback, extracted exactly like the plain page
+    plain = extract_row(body.encode(), False)
+    for label in ("hex", "base64", "rot13", "zip", "bz2", "uu", "quopri",
+                  "idna", "undefined", "punycode", "unicode-escape",
+                  "raw-unicode-escape", "utf-7", "cp037"):
+        page = (f'<meta charset="{label}">' + body).encode("utf-8")
+        assert detect_encoding(page) == "utf-8", label
+        assert extract_row(page, False) == plain, label

@@ -22,6 +22,21 @@ def test_resolution_and_order():
     ]
 
 
+def test_non_charset_meta_label_keeps_the_anchors():
+    """A meta label that names a codec but no text charset (bytes-to-bytes
+    ``hex``, the ``punycode`` transform) falls back to UTF-8: the page's
+    anchors come back instead of the page raising or decoding to nothing."""
+    for label in ("hex", "punycode"):
+        html = (
+            f'<html><head><meta charset="{label}"></head><body>'
+            '<a href="/one">one</a><a href="two.html">two</a></body></html>'
+        ).encode()
+        links = extract_links("https://e.org/d/", html)
+        assert [t for _, _, t in links] == [
+            "https://e.org/one", "https://e.org/d/two.html"
+        ], label
+
+
 def test_invalid_hrefs_skipped():
     html = (
         b'<a>no href</a><a href="">empty</a><a href="#frag">frag</a>'
