@@ -6,7 +6,10 @@ col.save() at ocr.py:248-251). The north_rule requires the opposite:
 "resumable from checkpoint with per-partition lineage + metrics".
 
 Design: the unit of resume is the salt bucket (= output partition).
-A run processes pending buckets in groups; after each group's output
+Buckets are dealt into ``bucket_groups`` fixed slices of bucket ids
+(``range(salt_buckets)[i::bucket_groups]``); a run processes the slices
+that still hold pending buckets, one rescan of the input each, so a
+resume runs only the slices a kill left. After each group's output
 commits (dynamic partition overwrite → idempotent), one ledger row per
 bucket is appended:
 
@@ -37,6 +40,7 @@ import uuid
 from typing import Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +60,7 @@ LEDGER_SCHEMA = (
     "status string, rows_in long, rows_out long, n_errors long, "
     "n_empty long, bytes_in long, started timestamp, finished timestamp"
 )
+LEDGER_COLUMNS = [c.split()[0] for c in LEDGER_SCHEMA.split(", ")]
 
 
 def read_ledger(spark: SparkSession, ledger_dir: str) -> Optional[DataFrame]:
@@ -166,10 +171,29 @@ def _clear_stale_bucket_partitions(output_path: str, salt_buckets: int) -> None:
             shutil.rmtree(os.path.join(output_path, name))
 
 
+def _ledger_frame(spark: SparkSession, rows: Sequence[tuple]) -> DataFrame:
+    """Ledger rows as a DataFrame built from a pyarrow Table: it plans as a
+    ``LocalTableScan`` in any session, whatever its Arrow confs. A list of
+    tuples becomes an RDD of pickled rows (``Scan ExistingRDD``) and made
+    each 16-row append cost ~0.7-1.1 s against ~0.15 s (4-core VM); a
+    pandas frame falls back to that path when the session has Arrow off.
+    Arrow reads a naive timestamp in the session time zone (UTC under
+    ``session.BASE_CONFS``), the tuple path in the process's local zone,
+    so each ``datetime`` is made UTC-aware first (a naive one as local
+    time, as the tuple path read it): the ``finished`` order the epoch
+    rule relies on keeps its instant under any ``TZ``."""
+    return spark.createDataFrame(
+        pa.Table.from_pylist([
+            {c: v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
+             for c, v in zip(LEDGER_COLUMNS, row)}
+            for row in rows
+        ]),
+        LEDGER_SCHEMA,
+    )
+
+
 def _append_ledger(spark: SparkSession, ledger_dir: str, rows: Sequence[tuple]) -> None:
-    spark.createDataFrame(list(rows), LEDGER_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(ledger_dir)
+    _ledger_frame(spark, rows).coalesce(1).write.mode("append").parquet(ledger_dir)
 
 
 class _BucketStatsParam(AccumulatorParam):
@@ -289,10 +313,12 @@ def resumable_extract(
         bucket_col(F.col("url"), cfg.salt_buckets).alias("bucket"),
     )
 
-    groups: List[List[int]] = [
-        pending[i::bucket_groups] for i in range(bucket_groups)
-    ]
-    groups = [g for g in groups if g]
+    # groups are fixed slices of bucket ids, dealt before the skip: a
+    # resume runs exactly the slices the kill left, each one rescan
+    groups: List[List[int]] = [g for g in (
+        [b for b in all_buckets[i::bucket_groups] if b not in done]
+        for i in range(bucket_groups)
+    ) if g]
 
     processed_groups = 0
     for group in groups:

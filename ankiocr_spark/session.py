@@ -93,6 +93,13 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def local_cpus() -> str:
+    """Threads for a ``local[n]`` master: ``$SPARK_GRAFT_CPUS`` when set,
+    else the CPUs this process may run on, so a tool that sets nothing
+    never runs more tasks at once than the machine has cores."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "ankiocr_spark",
     master: str | None = None,
@@ -100,8 +107,7 @@ def get_spark(
     extra: dict | None = None,
 ) -> SparkSession:
     _export_package_path()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{local_cpus()}]"
     if shuffle_partitions is None:
         # first bracketed number only: 'local[4,2]' means 4 threads with 2
         # task retries (concatenating every digit would read 42), and

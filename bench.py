@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry  # noqa: E402
-from ankiocr_spark.session import get_spark  # noqa: E402
+from ankiocr_spark.session import get_spark, local_cpus  # noqa: E402
 
 #: headline set: the flagship extraction hot path, the composed
 #: end-to-end training pipeline (the query a real 100-TB user runs), and
@@ -297,7 +297,7 @@ def main() -> None:
     flagship_s = timings.get("flagship_extract", 0.0) or 1e-9
     out = {
         "metric": "headline query wall time (sf%.3g, local[%s])"
-        % (sf, os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        % (sf, local_cpus()),
         "value": total,
         "unit": "sec",
         "queries": timings,

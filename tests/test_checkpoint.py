@@ -297,6 +297,99 @@ def test_resume_reads_the_ledger_once(spark, pages_dir, tmp_path, monkeypatch):
     ).count() == 1
 
 
+def test_resume_runs_only_the_groups_the_kill_left(
+    spark, pages_dir, tmp_path, monkeypatch
+):
+    """Groups are fixed slices of bucket ids: after a kill at k of G groups
+    the resume commits exactly the G - k slices left, one ledger append
+    (and one input rescan) each, instead of re-dealing the pending buckets
+    over G smaller groups."""
+    from ankiocr_spark import checkpoint
+
+    G, k = 4, 1
+    done_appends = []
+    real = checkpoint._append_ledger
+
+    def spy(spark_, ledger_dir, rows):
+        # LEDGER_SCHEMA order: column 3 is bucket, column 4 status
+        done_appends.append([r[3] for r in rows if r[4] == "done"])
+        real(spark_, ledger_dir, rows)
+
+    monkeypatch.setattr(checkpoint, "_append_ledger", spy)
+    cfg = ExtractConfig(salt_buckets=BUCKETS,
+                        checkpoint_dir=str(tmp_path / "led_g"))
+    out = str(tmp_path / "out_g")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        resumable_extract(spark, pages_dir, out, cfg,
+                          bucket_groups=G, fail_after_groups=k)
+    killed = [g for g in done_appends if g]
+    done_appends.clear()
+    resumable_extract(spark, pages_dir, out, cfg, bucket_groups=G)
+    resumed = [g for g in done_appends if g]
+
+    slices = [list(range(BUCKETS))[i::G] for i in range(G)]
+    assert len(killed) == k and len(resumed) == G - k
+    assert sorted(killed + resumed) == slices
+    result = spark.read.parquet(out)
+    assert result.count() == result.select("url").distinct().count() == N
+
+
+def _ledger_rows(now):
+    return [("r", KERNEL_VERSION, 4, b, "done", 10, 9, 1, 0, 100, now, now)
+            for b in range(4)]
+
+
+def test_ledger_frame_is_a_local_table_in_any_session(spark):
+    """A ledger append plans as a LocalTableScan (no RDD of pickled rows,
+    no pickled-row RDD), also in a session with Arrow conversion off,
+    the default of a caller-built vanilla session."""
+    import datetime as dt
+
+    from ankiocr_spark.checkpoint import _ledger_frame
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            df = _ledger_frame(spark, _ledger_rows(dt.datetime.now()))
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_ledger_timestamps_keep_their_instant_under_local_tz(spark, tmp_path):
+    """Ledger rows appended with a naive local now() read back equal to the
+    same rows written by the tuple-list createDataFrame path (the
+    reference), under a process time zone far from the session's UTC:
+    the epoch rule orders rows by ``finished``."""
+    import datetime as dt
+    import os
+    import time
+
+    from ankiocr_spark.checkpoint import LEDGER_SCHEMA, _append_ledger, read_ledger
+
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Tokyo"
+    time.tzset()
+    try:
+        now = dt.datetime.now()
+        rows = _ledger_rows(now)
+        got_dir, ref_dir = str(tmp_path / "led_tz"), str(tmp_path / "ref_tz")
+        _append_ledger(spark, got_dir, rows)
+        spark.createDataFrame(rows, LEDGER_SCHEMA).write.parquet(ref_dir)
+        got = sorted(read_ledger(spark, got_dir).collect())
+        assert got == sorted(read_ledger(spark, ref_dir).collect())
+        assert {r["finished"] for r in got} == {now}
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+
+
 def test_config_parity_with_extract_job(spark, pages_dir, tmp_path):
     """ADVICE r2 (medium): resumable_extract must honor the SAME config the
     batch job does — a checkpointed run with preserve_interword_spaces set

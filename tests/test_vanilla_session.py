@@ -57,3 +57,14 @@ def test_entry_contract_under_vanilla_session(tmp_path, sf_dir):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "VANILLA-OK" in proc.stdout
+
+
+def test_default_master_is_sized_from_this_machine(monkeypatch):
+    """Unset SPARK_GRAFT_CPUS sizes local[n] by the CPUs this process may
+    run on (a tool that sets nothing used to run 32 tasks on any box)."""
+    from ankiocr_spark.session import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == "3"
