@@ -23,6 +23,7 @@ row↔result alignment is free, so no separate split/zip operator exists here.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -204,6 +205,38 @@ def run_extract(
     return out.withColumn("bucket", bucket_col(F.col("url"), cfg.salt_buckets))
 
 
+def hadoop_path(spark: SparkSession, uri: str):
+    """THE resolver for files the driver touches itself (the checkpoint
+    ledger, stale output partitions): ``uri`` as the (Hadoop FileSystem,
+    qualified Path) that Spark's own reads and writes resolve it to (the
+    session's default filesystem, the JVM's working directory), so a
+    driver-side file op lands on the files Spark wrote, on any scheme
+    Spark can write. A scheme Hadoop cannot open raises here, before the
+    caller has changed anything."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(path)
+
+
+def clear_stale_buckets(fs, path, salt_buckets: int) -> None:
+    """Remove the output partitions outside ``range(salt_buckets)``, through
+    the Hadoop FileSystem of ``hadoop_path`` (no Spark job). Dynamic
+    partition overwrite only replaces the partitions a run writes, so a
+    re-run with FEWER buckets would otherwise leave the old higher-numbered
+    partitions next to the rewritten 0..n-1 range, and every url they hold
+    would appear twice (8→4 buckets read 302 rows for 200 urls). A failed
+    delete raises: a duplicate partition left in place must never pass as
+    a finished run. On a catalog table this is ALTER TABLE DROP PARTITION
+    over the same predicate."""
+    if not fs.exists(path):
+        return
+    for status in fs.listStatus(path):
+        part = status.getPath()
+        m = re.fullmatch(r"bucket=(\d+)", part.getName())
+        if m and int(m.group(1)) >= salt_buckets and not fs.delete(part, True):
+            raise OSError(f"could not delete stale partition {part.toString()}")
+
+
 def extract_job(
     spark: SparkSession,
     input_path: str,
@@ -213,9 +246,11 @@ def extract_job(
     """End-to-end batch job: the spark-submit entry (SURVEY.md §3.2).
 
     Compute-then-commit ordering (CHANGELOG.md:83 analog): the write is the
-    only side effect, and dynamic partition overwrite makes re-runs
-    idempotent per bucket. With Iceberg catalogs this becomes
-    ``writeTo(...).overwritePartitions()`` — same plan, transactional sink.
+    commit, and dynamic partition overwrite makes re-runs idempotent per
+    bucket; after it, partitions a larger earlier ``salt_buckets`` left
+    behind are removed (``clear_stale_buckets``). With Iceberg catalogs
+    this becomes ``writeTo(...).overwritePartitions()`` — same plan,
+    transactional sink.
     """
     from .errors import preflight
 
@@ -227,6 +262,7 @@ def extract_job(
     # deletes every other bucket's output (r3 review; checkpoint.py
     # already guards its own write the same way)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    output = hadoop_path(spark, output_path)
     pages = spark.read.parquet(input_path)
     preflight(spark, pages)  # fail fast before any executor work
     result = run_extract(spark, pages, cfg)
@@ -243,3 +279,5 @@ def extract_job(
         .partitionBy("bucket")
         .parquet(output_path)
     )
+    # after the commit, so a failed write leaves the old table whole
+    clear_stale_buckets(*output, cfg.salt_buckets)

@@ -134,8 +134,9 @@ def test_resume_survives_static_overwrite_conf(spark, pages_dir, tmp_path):
 
 def test_one_scan_per_group(spark, pages_dir, tmp_path):
     """Regression (round-1 VERDICT #4): the ledger metrics must ride the
-    write job's single input scan (accumulator), not separate agg jobs.
-    One bucket group ⇒ the write job + the ledger-append job only."""
+    write job's single input scan (accumulator), not separate agg jobs,
+    and the ledger is read and appended on the driver. One bucket group ⇒
+    the input schema read + the write job only."""
     out = str(tmp_path / "out_jobs")
     cfg = ExtractConfig(salt_buckets=4, checkpoint_dir=str(tmp_path / "led_jobs"))
     sc = spark.sparkContext
@@ -145,8 +146,9 @@ def test_one_scan_per_group(spark, pages_dir, tmp_path):
     finally:
         sc.setJobGroup("", "")
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("ckpt-one-scan")
-    # old shape: in-stats collect + write + out-stats collect + ledger ≥ 4
-    assert len(jobs) <= 3, f"expected ≤3 jobs (write + ledger), got {len(jobs)}"
+    # in/out-stats collects, or a ledger append or epoch read run as a
+    # Spark job, would each add one
+    assert len(jobs) <= 2, f"expected ≤2 jobs (schema read + write), got {len(jobs)}"
     # and the metrics are still real: rows_in matches the actual input
     led = spark.read.parquet(str(tmp_path / "led_jobs"))
     assert led.agg(F.sum("rows_in")).collect()[0][0] == N
@@ -339,24 +341,191 @@ def _ledger_rows(now):
             for b in range(4)]
 
 
-def test_ledger_frame_is_a_local_table_in_any_session(spark):
-    """A ledger append plans as a LocalTableScan (no RDD of pickled rows,
-    no pickled-row RDD), also in a session with Arrow conversion off,
-    the default of a caller-built vanilla session."""
+def test_ledger_append_and_epoch_read_start_no_spark_job(spark, tmp_path):
+    """A ledger commit and an epoch read are driver-side pyarrow file ops:
+    the status tracker sees no job for either."""
     import datetime as dt
 
-    from ankiocr_spark.checkpoint import _ledger_frame
+    from ankiocr_spark.checkpoint import _append_ledger, _epoch_rows
 
-    conf = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(conf)
+    ledger = str(tmp_path / "led_nojob")
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-ledger-io", "ledger append and read")
     try:
-        for arrow in ("true", "false"):
-            spark.conf.set(conf, arrow)
-            df = _ledger_frame(spark, _ledger_rows(dt.datetime.now()))
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        _append_ledger(spark, ledger, _ledger_rows(dt.datetime.now()))
+        rows = _epoch_rows(spark, ledger)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("ckpt-ledger-io") == []
+    assert sorted(r["bucket"] for r in rows) == [0, 1, 2, 3]
+    assert completed_buckets(spark, ledger, 4) == [0, 1, 2, 3]
+
+
+def _spark_epoch_rows(spark, ledger_dir):
+    """The epoch read as a Spark job collected it: the reference the
+    driver-side pyarrow read must agree with."""
+    import datetime as dt
+
+    from ankiocr_spark.checkpoint import read_ledger
+
+    ledger = read_ledger(spark, ledger_dir)
+    rows = [] if ledger is None else ledger.select(
+        "kernel_version", "salt_buckets", "bucket", "status", "finished"
+    ).collect()
+    rows.sort(key=lambda r: (r["finished"] is not None, r["finished"] or dt.datetime.min))
+    return rows
+
+
+def test_spark_written_ledger_gives_the_same_answer(
+    spark, tmp_path, monkeypatch
+):
+    """Ledgers written by Spark jobs — INT96 timestamps (Spark's default
+    parquet output type), an 11-column file from before ``salt_buckets``
+    existed, and a mix of both with driver-written files — give the same
+    ``completed_buckets`` answer through the driver-side read as through
+    the Spark collect it replaced. Rows are written out of time order, so
+    the answer depends on reading each ``finished`` instant right."""
+    import datetime as dt
+
+    from ankiocr_spark import checkpoint
+    from ankiocr_spark.checkpoint import LEDGER_SCHEMA, _append_ledger
+
+    old_schema = (
+        "run_id string, kernel_version string, bucket int, status string, "
+        "rows_in long, rows_out long, n_errors long, n_empty long, "
+        "bytes_in long, started timestamp, finished timestamp"
+    )
+    t = [dt.datetime(2026, 1, 1, 0, 0, s) for s in range(4)]
+
+    def done(n, b, ts):
+        return ("r", KERNEL_VERSION, n, b, "done", 10, 9, 1, 0, 100, ts, ts)
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        # count 4, then a count-8 marker, then count 4 again → only the
+        # rows after the marker are current
+        epochs = str(tmp_path / "int96")
+        spark.createDataFrame([
+            done(4, 2, t[2]), ("m", KERNEL_VERSION, 8, -1, "layout",
+                               0, 0, 0, 0, 0, t[1], t[1]),
+            done(4, 0, t[0]), done(4, 3, t[3]), done(4, 1, t[0]),
+        ], LEDGER_SCHEMA).coalesce(1).write.parquet(epochs)
+        # an 11-column file (NULL salt_buckets invalidates), then a
+        # current row written by a Spark job and one written on the driver
+        old = str(tmp_path / "pre_salt")
+        spark.createDataFrame(
+            [("o", KERNEL_VERSION, b, "done", 10, 10, 0, 0, 100, t[0], t[0])
+             for b in range(4)], old_schema,
+        ).write.parquet(old)
+        spark.createDataFrame([done(4, 1, t[1])], LEDGER_SCHEMA) \
+            .write.mode("append").parquet(old)
     finally:
         spark.conf.set(conf, prev)
+    _append_ledger(spark, old, [done(4, 2, t[2])])
+
+    expected = {epochs: [2, 3], old: [1, 2]}
+    for ledger, want in expected.items():
+        assert completed_buckets(spark, ledger, 4) == want
+    monkeypatch.setattr(checkpoint, "_epoch_rows", _spark_epoch_rows)
+    for ledger, want in expected.items():
+        assert completed_buckets(spark, ledger, 4) == want
+
+
+def test_leftover_tmp_file_is_ignored(spark, tmp_path):
+    """A commit that died mid-write leaves only a ``_tmp-`` file, which
+    neither the driver-side epoch read nor the Spark view reads."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from ankiocr_spark.checkpoint import _append_ledger, _epoch_rows, read_ledger
+
+    ledger = str(tmp_path / "led_tmp")
+    _append_ledger(spark, ledger, _ledger_rows(dt.datetime.now())[:2])
+    scratch = str(tmp_path / "other")
+    _append_ledger(spark, scratch, _ledger_rows(dt.datetime.now())[2:])
+    (part,) = os.listdir(scratch)
+    shutil.copy(os.path.join(scratch, part), os.path.join(ledger, "_tmp-dead.parquet"))
+
+    assert sorted(r["bucket"] for r in _epoch_rows(spark, ledger)) == [0, 1]
+    assert sorted(r["bucket"] for r in read_ledger(spark, ledger).collect()) == [0, 1]
+    assert completed_buckets(spark, ledger, 4) == [0, 1]
+
+
+def test_unopenable_scheme_raises_before_any_change(spark, pages_dir, tmp_path):
+    """A ledger or output uri no filesystem here can open fails the run
+    before the marker append or the stale-partition clear touch
+    anything."""
+    import os
+
+    out = str(tmp_path / "out_scheme")
+    stale = os.path.join(out, "bucket=7")
+    os.makedirs(stale)
+    ledger = str(tmp_path / "led_scheme")
+    for cfg, output in [
+        (ExtractConfig(salt_buckets=4, checkpoint_dir="nosuchfs://h/led"), out),
+        (ExtractConfig(salt_buckets=4, checkpoint_dir=ledger), "nosuchfs://h/out"),
+    ]:
+        with pytest.raises(Exception, match="nosuchfs"):
+            resumable_extract(spark, pages_dir, output, cfg, bucket_groups=1)
+    assert os.listdir(out) == ["bucket=7"] and os.listdir(stale) == []
+    assert not os.path.exists(ledger)
+
+
+def test_file_uri_ledger_and_output_shrink_cleanly(spark, pages_dir, tmp_path):
+    """``file:`` URIs name the same files as plain paths: the ledger reads
+    back and a shrink clears the partitions past the new count (the
+    cleanup used to skip any path ``os.path.isdir`` did not know)."""
+    out = "file:" + str(tmp_path / "out_uri")
+    ledger = "file:" + str(tmp_path / "led_uri")
+    for n in (8, 4):
+        s = resumable_extract(
+            spark, pages_dir, out,
+            ExtractConfig(salt_buckets=n, checkpoint_dir=ledger), bucket_groups=2,
+        )
+        assert s["buckets_processed"] == n
+    assert completed_buckets(spark, ledger, 4) == [0, 1, 2, 3]
+    result = spark.read.parquet(out)
+    assert result.count() == result.select("url").distinct().count() == N
+    assert result.select("bucket").distinct().count() == 4
+
+
+def test_output_on_a_scheme_pyarrow_cannot_open_shrinks_cleanly(
+    spark, pages_dir, tmp_path
+):
+    """The output side goes through Hadoop's FileSystem only: an output
+    Spark can write but pyarrow cannot open (here a Hadoop ``viewfs``
+    mount of a local directory; s3a and hdfs are the real cases) is
+    written and shrunk by both entries. Only the ledger is opened with
+    pyarrow."""
+    import os
+
+    import pyarrow.fs as pafs
+
+    from ankiocr_spark.job import extract_job
+
+    local = tmp_path / "viewfs_out"
+    local.mkdir()
+    spark._jsc.hadoopConfiguration().set(
+        "fs.viewfs.mounttable.cleanup.link./data", "file://" + str(local)
+    )
+    out = "viewfs://cleanup/data/t"
+    with pytest.raises(OSError):
+        pafs.FileSystem.from_uri(out)
+    ledger = str(tmp_path / "led_viewfs")
+    extract_job(spark, pages_dir, out, ExtractConfig(salt_buckets=8))
+    s = resumable_extract(
+        spark, pages_dir, out,
+        ExtractConfig(salt_buckets=4, checkpoint_dir=ledger), bucket_groups=2,
+    )
+    assert s["buckets_processed"] == 4
+    assert sorted(os.listdir(local / "t")) == [f"bucket={b}" for b in range(4)]
+    extract_job(spark, pages_dir, out, ExtractConfig(salt_buckets=2))
+    assert sorted(os.listdir(local / "t")) == ["bucket=0", "bucket=1"]
+    result = spark.read.parquet(str(local / "t"))
+    assert result.count() == result.select("url").distinct().count() == N
 
 
 def test_ledger_timestamps_keep_their_instant_under_local_tz(spark, tmp_path):
@@ -557,10 +726,8 @@ def test_epoch_marker_protects_crash_window(spark, pages_dir, tmp_path):
     4..7 already deleted by the crashed shrink)."""
     import datetime as dt
 
-    from ankiocr_spark.checkpoint import (
-        _append_ledger,
-        _clear_stale_bucket_partitions,
-    )
+    from ankiocr_spark.checkpoint import _append_ledger
+    from ankiocr_spark.job import clear_stale_buckets, hadoop_path
 
     out = str(tmp_path / "out_cw")
     ledger = str(tmp_path / "ledger_cw")
@@ -576,7 +743,7 @@ def test_epoch_marker_protects_crash_window(spark, pages_dir, tmp_path):
     _append_ledger(spark, ledger, [
         ("crashed", KERNEL_VERSION, 4, -1, "layout", 0, 0, 0, 0, 0, now, now)
     ])
-    _clear_stale_bucket_partitions(out, 4)
+    clear_stale_buckets(*hadoop_path(spark, out), 4)
     assert completed_buckets(spark, ledger, 8) == []  # marker invalidates
 
     # revert to 8: must be a FULL recompute (skipping would report

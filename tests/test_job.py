@@ -165,6 +165,47 @@ def test_extract_job_output_not_fragmented(spark, tmp_path, pages_goldens):
     assert 0 < len(data_files) <= 8, f"{len(data_files)} files"
 
 
+@pytest.mark.parametrize("scheme", ["", "file:"])
+def test_extract_job_rerun_with_fewer_buckets_leaves_no_stale_partition(
+    spark, tmp_path, pages_goldens, scheme
+):
+    """Regression: dynamic overwrite replaces only the partitions a run
+    writes, so an 8→4 bucket re-run kept bucket=4..7 and read 302 rows
+    for 200 urls. The re-run clears them, also behind a ``file:`` URI."""
+    import os
+
+    pages, goldens = pages_goldens
+    in_dir = str(tmp_path / "pages_shrink")
+    out_dir = str(tmp_path / "out_shrink")
+    pages.write.parquet(in_dir)
+    for n in (8, 4):
+        extract_job(spark, in_dir, scheme + out_dir, ExtractConfig(salt_buckets=n))
+    assert sorted(d for d in os.listdir(out_dir) if d.startswith("bucket=")) == [
+        f"bucket={b}" for b in range(4)
+    ]
+    result = spark.read.parquet(out_dir)
+    assert result.count() == result.select("url").distinct().count() == N_PAGES
+    assert _mismatches(result, goldens).count() == 0
+
+
+def test_extract_job_rejects_an_unopenable_output_before_writing(
+    spark, tmp_path, pages_goldens
+):
+    """An output uri no filesystem here can open fails before the write,
+    not after it with the stale partitions left in place."""
+    pages, _ = pages_goldens
+    in_dir = str(tmp_path / "pages_scheme")
+    pages.write.parquet(in_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("job-bad-scheme", "extract_job into an unknown scheme")
+    try:
+        with pytest.raises(Exception, match="nosuchfs"):
+            extract_job(spark, in_dir, "nosuchfs://h/out", ExtractConfig())
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("job-bad-scheme") == []
+
+
 def test_passthrough_and_preserve_spaces(spark):
     """extra_passthrough_cols rides the Arrow batch (positional rejoin, no
     join); preserve_interword_spaces threads config → kernel."""
