@@ -30,8 +30,10 @@ The ledger is read and written on the driver with pyarrow, never by a
 Spark job: each commit is one parquet file written under a hidden
 ``_tmp-`` name and renamed into place, so a crash leaves nothing Spark or
 pyarrow would read, and a commit costs milliseconds instead of the ~0.15
-s of a Spark write job (4-core VM). ``read_ledger`` is the Spark view of
-the same files for SQL consumers.
+s of a Spark write job (4-core VM). A commit that leaves more than
+``_FOLD_AT`` files folds them into one, so a read opens a bounded number
+of files. ``read_ledger`` is the Spark view of the same files for SQL
+consumers.
 
 At 100 TB the ledger stays tiny (one row per bucket per run: 10^4-10^5
 rows), the anti-join is a driver-side set difference over those rows,
@@ -107,6 +109,14 @@ def read_ledger(spark: SparkSession, ledger_dir: str) -> Optional[DataFrame]:
         return None  # first run — no ledger yet
 
 
+def _ledger_dataset(fs: pafs.FileSystem, path: str) -> ds.FileSystemDataset:
+    """The ledger's files (``_``/``.``-prefixed names skipped, as Spark
+    skips them) under ``LEDGER_ARROW_SCHEMA``."""
+    return ds.dataset(
+        path, schema=LEDGER_ARROW_SCHEMA, format="parquet", filesystem=fs
+    )
+
+
 def _epoch_rows(spark: SparkSession, ledger_dir: str) -> list:
     """ALL ledger rows (done + markers) as dicts, time-ordered, read on
     the driver. The explicit schema reads a column an older file lacks
@@ -118,9 +128,7 @@ def _epoch_rows(spark: SparkSession, ledger_dir: str) -> list:
     fs, path = _ledger_fs(spark, ledger_dir)
     if fs.get_file_info(path).type != pafs.FileType.Directory:
         return []  # first run — no ledger yet
-    rows = ds.dataset(
-        path, schema=LEDGER_ARROW_SCHEMA, format="parquet", filesystem=fs
-    ).to_table(
+    rows = _ledger_dataset(fs, path).to_table(
         columns=["kernel_version", "salt_buckets", "bucket", "status", "finished"]
     ).to_pylist()
     rows.sort(key=lambda r: r["finished"] or _NO_TIME)
@@ -181,14 +189,41 @@ def completed_buckets(
     )
 
 
+#: a commit that leaves the ledger with more files than this folds them
+#: into one, so an epoch read opens at most this many files however many
+#: commits the ledger has taken
+_FOLD_AT = 16
+
+
+def _write_ledger_file(fs: pafs.FileSystem, path: str, table: pa.Table) -> None:
+    """Write ``table`` as one new ledger file under a ``_tmp-`` name,
+    which Spark and pyarrow both skip, then rename it into place, so a
+    crash mid-write leaves nothing either would read."""
+    name = uuid.uuid4().hex
+    tmp = f"{path}/_tmp-{name}.parquet"
+    pq.write_table(table, tmp, filesystem=fs)
+    fs.move(tmp, f"{path}/part-{name}.parquet")
+
+
+def _fold_ledger(
+    fs: pafs.FileSystem, path: str, ledger: ds.FileSystemDataset
+) -> None:
+    """Fold the ``ledger`` files into one file holding all of their rows.
+    The folded file is renamed into place before any file it replaces is
+    deleted: a crash in between leaves those rows twice, which the epoch
+    rule reads as it reads them once, never a lost row."""
+    _write_ledger_file(fs, path, ledger.to_table())
+    for f in ledger.files:
+        fs.delete_file(f)
+
+
 def _append_ledger(spark: SparkSession, ledger_dir: str, rows: Sequence[tuple]) -> None:
     """Commit ``rows`` (``LEDGER_SCHEMA`` order) as one parquet file,
-    written on the driver: no Spark job. The file is written under a
-    ``_tmp-`` name, which Spark and pyarrow both skip, then renamed into
-    place, so a crash mid-write leaves nothing either would read. Each
+    written on the driver: no Spark job (``_write_ledger_file``). Each
     ``datetime`` is made UTC-aware first (a naive one as local time), so
     the ``finished`` order the epoch rule relies on keeps its instant
-    under any ``TZ``."""
+    under any ``TZ``. Past ``_FOLD_AT`` files, the commit folds the
+    ledger into one file (``_fold_ledger``)."""
     fs, path = _ledger_fs(spark, ledger_dir)
     table = pa.Table.from_pylist([
         {c: v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
@@ -196,10 +231,10 @@ def _append_ledger(spark: SparkSession, ledger_dir: str, rows: Sequence[tuple]) 
         for row in rows
     ], schema=LEDGER_ARROW_SCHEMA)
     fs.create_dir(path)
-    name = uuid.uuid4().hex
-    tmp = f"{path}/_tmp-{name}.parquet"
-    pq.write_table(table, tmp, filesystem=fs)
-    fs.move(tmp, f"{path}/part-{name}.parquet")
+    _write_ledger_file(fs, path, table)
+    ledger = _ledger_dataset(fs, path)
+    if len(ledger.files) > _FOLD_AT:
+        _fold_ledger(fs, path, ledger)
 
 
 class _BucketStatsParam(AccumulatorParam):

@@ -6,8 +6,10 @@ as a pure, deterministic Python function over HTML payloads
 (BASELINE.json:north_star: "lxml DOM parse, readability/trafilatura-style
 boilerplate stripping (text-density + link-density scoring per block, tag
 whitelist/blacklist pruning)"). lxml is not available in this container, so
-the DOM walk uses the stdlib ``html.parser`` — which is *better* for the
-per-url byte-identical invariant: zero external parser-version dependence.
+the kernel tokenizes with its own regex tiers (``_fused_segments``), held
+segment-for-segment equal to a walk of the stdlib ``html.parser``
+(``_BlockParser``, the reference) — which is *better* for the per-url
+byte-identical invariant: zero external parser-version dependence.
 
 Determinism contract: same bytes in → same bytes out. No dict ordering,
 locale, wall clock, or library-version dependence. The golden fixtures
@@ -21,7 +23,9 @@ on the Python worker, which is the vectorization boundary Spark offers for
 opaque binary payloads (the analog of the reference's batch manifest loop,
 ocr.py:90).
 
-Hot path (text mode, ``extract_row``): decode → ``_fused_segments`` into
+Hot path (text mode, ``extract_row``): decode → ``_fused_segments`` (one
+``re.split`` of the page into text and plain tags, one dispatch loop over
+the parts, a hand-off to the general loop for anything else) into
 (tag, text, link_text) tuples → the one keep rule ``_keep`` on each tuple
 → ``clean_text`` of the kept texts. No per-segment object is built; span
 mode (``extract_spans``) alone wraps the same tuples in ``Block``s.
@@ -177,13 +181,25 @@ class _BlockParser(HTMLParser):
 # Fast tokenizer: the SAME segmentation as driving _BlockParser from the
 # stdlib parser, without html.parser's per-attribute parse loop and
 # per-token position bookkeeping (updatepos) — this engine never reads
-# attributes. Three regex tiers, each consuming only what the stdlib would
-# consume the same way, and falling through to the next on anything else:
-#   1. inside a PRUNE_TAGS subtree, one _PRUNE_SKIP match jumps over
+# attributes. Four regex tiers, each consuming only what the stdlib would
+# consume the same way:
+#   1. one _SPLIT call per page cuts it into text parts and plain tags
+#      (plus `<!decl>` / `<?pi>`, which the stdlib skips), and one loop
+#      walks the parts, dispatching each tag with one _KIND lookup and
+#      jumping over a script/style raw-text element with one search. A
+#      text part that still holds '<' (a comment, a marked section, a
+#      malformed or unquoted-attribute tag, a lone '<') is read by the
+#      general loop from that part's first character, with the whole
+#      segmenter state; tier 1 then picks up again at the first character
+#      the general loop has not read, so a page is never read twice.
+#      Tiers 2-4 are that general loop (_Segmenter.general):
+#   2. inside a PRUNE_TAGS subtree, one _PRUNE_SKIP match jumps over
 #      text and non-prune tags at C speed;
-#   2. _SIMPLE_TAG reads a plain `<name a="v">` / `</name>` in one match;
-#   3. the general path reuses the stdlib's own compiled (linear-time)
-#      regexes for everything else.
+#   3. _SIMPLE_TAG reads a plain `<name a="v">` / `</name>` in one match;
+#   4. the general path reuses the stdlib's own compiled (linear-time)
+#      regexes for everything else; a search that found no close once is
+#      not repeated from a later position, so a run of unclosed
+#      constructs costs one scan, not one per construct.
 # test_properties.py holds segment-level equivalence against the
 # stdlib-driven parser on the fixture corpus and a seeded fragment sweep.
 # ---------------------------------------------------------------------------
@@ -196,7 +212,7 @@ _STARTTAG_END = _hp.locatestarttagend_tolerant
 _ENDTAG = _hp.endtagfind
 _COMMENT_CLOSE = _hp.commentclose
 
-# Tiers 1+2 grammar. Whitespace is the explicit ASCII set where the stdlib
+# Tiers 1-3 grammar. Whitespace is the explicit ASCII set where the stdlib
 # tag name stops, never `\s` (on str patterns that also matches \xa0,
 # \x0b and \x1c, which the stdlib keeps INSIDE a tag name). Names are a
 # subset of the stdlib's name characters that ends where the stdlib's
@@ -213,6 +229,30 @@ _ATTRS = (
 _SIMPLE_TAG = re.compile(
     f"<(?:({_NAME}){_ATTRS}(/?)|/({_NAME}){_WS}*+)>", re.ASCII
 ).match
+#: tier 1: split on a whole token (group 1) — a plain tag as _SIMPLE_TAG
+#: reads it (groups 2 and 3: start-tag name, end-tag name; a start tag
+#: is self-closing iff its token ends in "/>"), or a `<!decl>` / `<?pi>`
+#: that holds no '<', which the stdlib skips up to the first '>' (both
+#: names None). `<!--` and `<![` open a comment or a marked section
+#: instead, so they stay in the text, as does a `<!`/`<?` that holds a
+#: '<': a failed match then stops at the next tag, so the split is linear.
+_SPLIT = re.compile(
+    f"(<(?:({_NAME}){_ATTRS}/?|/({_NAME}){_WS}*+"
+    "|\\?[^<>]*+|!(?!--|\\[)[^<>]*+)>)",
+    re.ASCII,
+).split
+#: pads the split's last text part into a whole (text, token, names)
+#: record with an empty token that dispatches nothing
+_TAIL = ("", None, None)
+_PRUNE, _BLOCK, _ANCHOR, _BR = range(1, 5)
+#: tier 1's one dispatch lookup, keyed by lowercase name; a name it lacks
+#: is looked up once more lowercased, and then needs no dispatch
+_KIND = {
+    **dict.fromkeys(PRUNE_TAGS, _PRUNE),
+    **dict.fromkeys(BLOCK_TAGS, _BLOCK),
+    "a": _ANCHOR,
+    "br": _BR,
+}
 _PRUNE_NAME = f"(?i:{'|'.join(sorted(PRUNE_TAGS))})"
 #: inside a pruned subtree: text, a '<' that opens no markup, and whole
 #: start and end tags of non-prune names — none of them can change state
@@ -226,11 +266,15 @@ _PRUNE_SKIP = re.compile(
     re.ASCII,
 ).match
 
-# Full close-tag pattern, exactly stdlib set_cdata_mode's `interesting`
-# regex (r'</\s*%s\s*>'): a mismatched name ('</scriptfoo>') or attributed
-# close ('</script x>') is raw data and does NOT end cdata mode.
+# Full close-tag pattern, stdlib set_cdata_mode's `interesting` regex
+# (r'</\s*%s\s*>'): a mismatched name ('</scriptfoo>') or attributed
+# close ('</script x>') is raw data and does NOT end cdata mode. Its
+# re.I also folds non-ASCII letters ('</ſcript>', '</scrıpt>'); the
+# stdlib's parse_endtag then finds no ASCII name there and keeps that
+# close as raw data too, so the name here folds ASCII case only.
 _CDATA_CLOSE = {
-    t: re.compile(r"</\s*%s\s*>" % t, re.IGNORECASE) for t in ("script", "style")
+    t: re.compile(r"</\s*%s\s*>" % "".join(f"[{c}{c.upper()}]" for c in t))
+    for t in ("script", "style")
 }
 # marked-section machinery mirrored from _markupbase: ']]>' closes the
 # standard sections, ']>' closes the MS-Office conditional ones; unknown
@@ -243,213 +287,365 @@ _SECT_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
 _SECT_MS = frozenset({"if", "else", "endif"})
 
 
-def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
-    """Single-pass tokenize + block-segment of ``s`` — the production hot
-    path. Semantically identical to driving ``_BlockParser`` with the
-    stdlib parser's hook calls (tag names lowercased, attrs never
-    materialized, charrefs unescaped in data, script/style content
-    consumed raw until the matching close tag), but with the handler hooks
-    INLINED into the scan loop: every tier yields (start name, "/", end
-    name) for one dispatch. ``_BlockParser`` + the stdlib parser remain
-    as the reference implementation this function is equivalence-tested
-    against (test_properties.py)."""
-    prune_stack: List[str] = []
-    anchor_depth = 0
-    pieces: List[str] = []
-    link_pieces: List[str] = []
-    segment_tag = "body"
-    segments: List[Tuple[str, str, str]] = []
+def _flush(segments, pieces, link_pieces, tag: str, norm) -> None:
+    """Close the current segment (inlined ``_BlockParser._flush``); both
+    tiers share the piece lists, so they are cleared in place."""
+    text = norm("".join(pieces))
+    if text:
+        segments.append(
+            (tag, text, norm("".join(link_pieces)) if link_pieces else "")
+        )
+    pieces.clear()
+    link_pieces.clear()
 
-    def flush(tag_for_segment: str) -> None:
-        nonlocal pieces, link_pieces
-        text = norm("".join(pieces))
-        if text:
-            segments.append((tag_for_segment, text, norm("".join(link_pieces))))
-        pieces = []
-        link_pieces = []
 
-    def emit_data(seg: str) -> None:
-        # inlined _BlockParser.handle_data incl. the charref unescape the
-        # tokenizer applied before the hook; pruned text skips BOTH
-        if prune_stack or not seg:
+class _Segmenter:
+    """One page's segmenter state, shared by the tokenizer tiers: the
+    lists ``_fused_segments`` (tier 1) and ``general`` (tiers 2-4) both
+    append to, the prune stack, and ``general``'s memory of searches that
+    found nothing."""
+
+    __slots__ = ("s", "norm", "segments", "prune_stack", "pieces",
+                 "link_pieces", "last_gt", "last_nul", "misses")
+
+    def __init__(self, s: str, norm=_normalize) -> None:
+        self.s = s
+        self.norm = norm
+        self.segments: List[Tuple[str, str, str]] = []  # (tag, text, link_text)
+        self.prune_stack: List[str] = []
+        self.pieces: List[str] = []
+        self.link_pieces: List[str] = []
+        self.last_gt = s.rfind(">")  # no '>' after it: those finds fail at once
+        self.last_nul = None  # s.rfind("\x00"), once a tail past last_gt needs it
+        self.misses = {}  # pattern -> a position after which it matches nowhere
+
+    def emit(self, seg: str, anchor_depth: int) -> None:
+        """``_BlockParser.handle_data`` incl. the charref unescape the
+        tokenizer applied before the hook; pruned text skips BOTH."""
+        if self.prune_stack or not seg:
             return
         if "&" in seg:
             seg = _unescape(seg)
-        pieces.append(seg)
+        self.pieces.append(seg)
         if anchor_depth:
-            link_pieces.append(seg)
+            self.link_pieces.append(seg)
 
-    def emit_incomplete(j: int) -> int:
+    def find_gt(self, k: int) -> int:
+        """``s.find(">", k)``, failing at once past the page's last '>'."""
+        return self.s.find(">", k) if k <= self.last_gt else -1
+
+    def search(self, pattern, k: int):
+        """``pattern.search(s, k)``; a pattern found nowhere after k is
+        found nowhere after any later position either."""
+        if k >= self.misses.get(pattern, len(self.s) + 1):
+            return None
+        m = pattern.search(self.s, k)
+        if m is None:
+            self.misses[pattern] = k
+        return m
+
+    def emit_incomplete(self, j: int, anchor_depth: int) -> int:
         """stdlib goahead's end-of-feed fallback for a construct that
         failed to parse: emit up to the next '>' (inclusive) / next '<' /
         one char as data, resume from there."""
-        k = s.find(">", j + 1)
+        k = self.find_gt(j + 1)
         if k < 0:
-            k = s.find("<", j + 1)
+            k = self.s.find("<", j + 1)
             if k < 0:
                 k = j + 1
         else:
             k += 1
-        emit_data(s[j:k])
+        self.emit(self.s[j:k], anchor_depth)
         return k
 
-    i, n = 0, len(s)
-    cdata_close = None
-    while i < n:
-        if cdata_close is not None:
-            m = cdata_close.search(s, i)
-            if not m:
-                break  # unterminated raw-text element: stdlib drops the rest
-            if m.start() > i and not prune_stack:
-                # raw cdata data, never unescaped (stdlib skips unescape
-                # in cdata mode) — script/style are PRUNE_TAGS so this only
-                # matters if the blacklist ever changes
-                seg = s[i:m.start()]
-                pieces.append(seg)
-                if anchor_depth:
-                    link_pieces.append(seg)
-            # cdata_close is the full `</\s*elem\s*>` (stdlib
-            # set_cdata_mode), so endtagfind necessarily matches the same
-            # span here with exactly the cdata element's name.
-            tag, slash, etag = None, "", _ENDTAG.match(s, m.start()).group(1)
-            i = m.end()
-            cdata_close = None
-        else:
-            if prune_stack:
-                i = _PRUNE_SKIP(s, i).end()
-                if i == n:
-                    break
-            j = s.find("<", i)
-            if j < 0:
-                emit_data(s[i:])
-                break
-            if j > i and not prune_stack:  # emit_data inlined: hottest site
-                seg = s[i:j]
-                if "&" in seg:
-                    seg = _unescape(seg)
-                pieces.append(seg)
-                if anchor_depth:
-                    link_pieces.append(seg)
-            m = _SIMPLE_TAG(s, j)
-            if m is not None:
-                tag, slash, etag = m.groups()
-                i = m.end()
-            elif j + 1 >= n:
-                # lone trailing '<': stdlib breaks, then close() flushes
-                # the unprocessed tail as data
-                emit_data("<")
-                break
-            elif "a" <= (c := s[j + 1]) <= "z" or "A" <= c <= "Z":
-                m = _TAGNAME.match(s, j + 1)
-                tag, etag = m.group(1), None
-                # tagfind_tolerant consumes trailing whitespace and
-                # non-closing slashes: when the tag close follows, the
-                # stdlib ends the tag there (`<p //>` is self-closing)
-                end = m.end()
-                if not (s.startswith(">", end) or s.startswith("/>", end)):
-                    end = _STARTTAG_END.match(s, j).end()
-                if s.startswith(">", end):
-                    slash, i = "", end + 1
-                elif s.startswith("/>", end):
-                    slash, i = "/", end + 2
-                else:
-                    # malformed start tag (stdlib check_for_whole_start_tag):
-                    # at EOF / mid-attribute / stray '/', fall back to the
-                    # incomplete-data path; otherwise emit the partial tag
-                    # text raw (parse_starttag's handle_data, no unescape)
-                    # and resume right after it
-                    c2 = s[end:end + 1]
-                    if c2 == "" or c2 in (
-                        "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-                    ):
-                        i = emit_incomplete(j)
-                    else:
-                        if not prune_stack:
-                            seg = s[j:end]
-                            pieces.append(seg)
-                            if anchor_depth:
-                                link_pieces.append(seg)
-                        i = end
-                    continue
-            elif s.startswith("</", j):
-                e = _ENDTAG.match(s, j)
-                if e:
-                    tag, slash, etag = None, "", e.group(1)
-                    i = e.end()
-                else:
-                    gt = s.find(">", j + 1)
-                    if gt < 0:  # incomplete at EOF
-                        i = emit_incomplete(j)
-                        continue
-                    nm = _TAGNAME.match(s, j + 2)
-                    if not nm:  # '</>' or bogus comment '</;...>': skipped
-                        i = gt + 1
-                        continue
-                    # tolerant end tag with junk before '>': '</p attr>'
-                    tag, slash, etag = None, "", nm.group(1)
-                    i = s.find(">", nm.end()) + 1
-            elif s.startswith("<!--", j):
-                m = _COMMENT_CLOSE.search(s, j + 4)
-                i = emit_incomplete(j) if not m else m.end()
-                continue
-            elif s.startswith("<![", j):
-                # marked section (stdlib parse_marked_section)
-                nm = _SECT_NAME.match(s, j + 3)
-                sect = nm.group().lower() if nm else None
-                if sect in _SECT_STD:
-                    m = _MARKED_CLOSE_STD.search(s, j + 3)
-                elif sect in _SECT_MS:
-                    m = _MARKED_CLOSE_MS.search(s, j + 3)
-                else:  # stdlib raises here; degrade to data-skip
-                    m = None
-                i = emit_incomplete(j) if not m else m.end()
-                continue
-            elif s.startswith("<?", j) or s.startswith("<!", j):
-                nxt = s.find(">", j + 2)
-                i = emit_incomplete(j) if nxt < 0 else nxt + 1
-                continue
-            else:
-                emit_data("<")
-                i = j + 1
-                continue
+    def general(self, i: int, stop: int, anchor_depth: int, segment_tag: str):
+        """Tokenize + segment from ``i`` until the position reaches
+        ``stop``; it may pass it, as a token or a raw-text element is
+        never cut. Returns ``(i, anchor_depth, segment_tag)``; ``i`` is
+        ``len(s)`` once the page is done, also at the stdlib's early
+        stops (unterminated raw text, a lone trailing '<')."""
+        s, norm, last_gt = self.s, self.norm, self.last_gt
+        segments, prune_stack = self.segments, self.prune_stack
+        pieces, link_pieces = self.pieces, self.link_pieces
+        n = len(s)
+        cdata_close = None
 
-        # one dispatch for every tier: the inlined _BlockParser hooks
-        if etag is not None:  # handle_endtag
-            etag = etag.lower()
-            if prune_stack:
-                if etag == prune_stack[-1]:
-                    prune_stack.pop()
-            elif etag in BLOCK_TAGS:
-                flush(etag)
-                segment_tag = "body"
-            elif etag == "a" and anchor_depth > 0:
-                anchor_depth -= 1
-            continue
-        tag = tag.lower()
-        if slash:
-            # handle_startendtag: a self-closing prune tag has no subtree,
-            # so no prune push; no anchor handling
-            if tag not in PRUNE_TAGS and not prune_stack:
+        while i < stop or cdata_close is not None:
+            if cdata_close is not None:
+                m = cdata_close.search(s, i)
+                if not m:
+                    i = n  # unterminated raw-text element: stdlib drops the rest
+                    break
+                if m.start() > i and not prune_stack:
+                    # raw cdata data, never unescaped (stdlib skips unescape
+                    # in cdata mode) — script/style are PRUNE_TAGS so this only
+                    # matters if the blacklist ever changes
+                    seg = s[i:m.start()]
+                    pieces.append(seg)
+                    if anchor_depth:
+                        link_pieces.append(seg)
+                # cdata_close is the full `</\s*elem\s*>` (stdlib
+                # set_cdata_mode), so endtagfind necessarily matches the same
+                # span here with exactly the cdata element's name.
+                tag, slash, etag = None, "", _ENDTAG.match(s, m.start()).group(1)
+                i = m.end()
+                cdata_close = None
+            else:
+                if i > last_gt:
+                    if self.last_nul is None:
+                        self.last_nul = s.rfind("\x00")
+                    if i > self.last_nul:
+                        # No '>' and no NUL from here on: no tag, comment
+                        # or declaration can close, and a start tag's scan
+                        # (locatestarttagend_tolerant) only stops at a NUL
+                        # or at an '=' whose value does not parse, so every
+                        # construct ends in the incomplete-data fallback.
+                        # The rest is data, cut only at '<', which no
+                        # charref spans: one piece gives the same text,
+                        # where a scan per unclosed construct would be
+                        # quadratic in a run of them.
+                        self.emit(s[i:], anchor_depth)
+                        i = n
+                        break
+                if prune_stack:
+                    i = _PRUNE_SKIP(s, i).end()
+                    if i == n:
+                        break
+                j = s.find("<", i)
+                if j < 0:
+                    self.emit(s[i:], anchor_depth)
+                    i = n
+                    break
+                if j > i and not prune_stack:  # self.emit inlined: hottest site
+                    seg = s[i:j]
+                    if "&" in seg:
+                        seg = _unescape(seg)
+                    pieces.append(seg)
+                    if anchor_depth:
+                        link_pieces.append(seg)
+                m = _SIMPLE_TAG(s, j)
+                if m is not None:
+                    tag, slash, etag = m.groups()
+                    i = m.end()
+                elif j + 1 >= n:
+                    # lone trailing '<': stdlib breaks, then close() flushes
+                    # the unprocessed tail as data
+                    self.emit("<", anchor_depth)
+                    i = n
+                    break
+                elif "a" <= (c := s[j + 1]) <= "z" or "A" <= c <= "Z":
+                    m = _TAGNAME.match(s, j + 1)
+                    tag, etag = m.group(1), None
+                    # tagfind_tolerant consumes trailing whitespace and
+                    # non-closing slashes: when the tag close follows, the
+                    # stdlib ends the tag there (`<p //>` is self-closing)
+                    end = m.end()
+                    if not (s.startswith(">", end) or s.startswith("/>", end)):
+                        end = _STARTTAG_END.match(s, j).end()
+                    if s.startswith(">", end):
+                        slash, i = "", end + 1
+                    elif s.startswith("/>", end):
+                        slash, i = "/", end + 2
+                    else:
+                        # malformed start tag (stdlib check_for_whole_start_tag):
+                        # at EOF / mid-attribute / stray '/', fall back to the
+                        # incomplete-data path; otherwise emit the partial tag
+                        # text raw (parse_starttag's handle_data, no unescape)
+                        # and resume right after it
+                        c2 = s[end:end + 1]
+                        if c2 == "" or c2 in (
+                            "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+                        ):
+                            i = self.emit_incomplete(j, anchor_depth)
+                        else:
+                            if not prune_stack:
+                                seg = s[j:end]
+                                pieces.append(seg)
+                                if anchor_depth:
+                                    link_pieces.append(seg)
+                            i = end
+                        continue
+                elif s.startswith("</", j):
+                    e = _ENDTAG.match(s, j)
+                    if e:
+                        tag, slash, etag = None, "", e.group(1)
+                        i = e.end()
+                    else:
+                        gt = self.find_gt(j + 1)
+                        if gt < 0:  # incomplete at EOF
+                            i = self.emit_incomplete(j, anchor_depth)
+                            continue
+                        nm = _TAGNAME.match(s, j + 2)
+                        if not nm:  # '</>' or bogus comment '</;...>': skipped
+                            i = gt + 1
+                            continue
+                        # tolerant end tag with junk before '>': '</p attr>'
+                        tag, slash, etag = None, "", nm.group(1)
+                        i = s.find(">", nm.end()) + 1
+                elif s.startswith("<!--", j):
+                    m = self.search(_COMMENT_CLOSE, j + 4)
+                    i = self.emit_incomplete(j, anchor_depth) if not m else m.end()
+                    continue
+                elif s.startswith("<![", j):
+                    # marked section (stdlib parse_marked_section)
+                    nm = _SECT_NAME.match(s, j + 3)
+                    sect = nm.group().lower() if nm else None
+                    if sect in _SECT_STD:
+                        m = self.search(_MARKED_CLOSE_STD, j + 3)
+                    elif sect in _SECT_MS:
+                        m = self.search(_MARKED_CLOSE_MS, j + 3)
+                    else:  # stdlib raises here; degrade to data-skip
+                        m = None
+                    i = self.emit_incomplete(j, anchor_depth) if not m else m.end()
+                    continue
+                elif s.startswith("<?", j) or s.startswith("<!", j):
+                    nxt = self.find_gt(j + 2)
+                    i = self.emit_incomplete(j, anchor_depth) if nxt < 0 else nxt + 1
+                    continue
+                else:
+                    self.emit("<", anchor_depth)
+                    i = j + 1
+                    continue
+
+            # one dispatch for every tier: the inlined _BlockParser hooks
+            if etag is not None:  # handle_endtag
+                etag = etag.lower()
+                if prune_stack:
+                    if etag == prune_stack[-1]:
+                        prune_stack.pop()
+                elif etag in BLOCK_TAGS:
+                    _flush(segments, pieces, link_pieces, etag, norm)
+                    segment_tag = "body"
+                elif etag == "a" and anchor_depth > 0:
+                    anchor_depth -= 1
+                continue
+            tag = tag.lower()
+            if slash:
+                # handle_startendtag: a self-closing prune tag has no subtree,
+                # so no prune push; no anchor handling
+                if tag not in PRUNE_TAGS and not prune_stack:
+                    if tag in BLOCK_TAGS:
+                        _flush(segments, pieces, link_pieces, segment_tag, norm)
+                        segment_tag = tag
+                    elif tag == "br":
+                        pieces.append(" ")
+                continue
+            if tag in PRUNE_TAGS:  # handle_starttag
+                prune_stack.append(tag)
+            elif not prune_stack:
                 if tag in BLOCK_TAGS:
-                    flush(segment_tag)
+                    _flush(segments, pieces, link_pieces, segment_tag, norm)
                     segment_tag = tag
+                elif tag == "a":
+                    anchor_depth += 1
                 elif tag == "br":
                     pieces.append(" ")
-            continue
-        if tag in PRUNE_TAGS:  # handle_starttag
-            prune_stack.append(tag)
-        elif not prune_stack:
-            if tag in BLOCK_TAGS:
-                flush(segment_tag)
-                segment_tag = tag
-            elif tag == "a":
-                anchor_depth += 1
-            elif tag == "br":
-                pieces.append(" ")
-        if tag in _CDATA_CLOSE:
-            cdata_close = _CDATA_CLOSE[tag]
+            if tag in _CDATA_CLOSE:
+                cdata_close = _CDATA_CLOSE[tag]
 
-    flush(segment_tag)
+        return i, anchor_depth, segment_tag
+
+
+def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
+    """Single-pass tokenize + block-segment of ``s`` — the production hot
+    path (tier 1, handing off to ``_Segmenter.general``). Semantically
+    identical to driving ``_BlockParser`` with the stdlib parser's hook
+    calls (tag names lowercased, attrs never materialized, charrefs
+    unescaped in data, script/style content consumed raw until the
+    matching close tag), with the handler hooks INLINED into the scan.
+    ``_BlockParser`` + the stdlib parser remain as the reference
+    implementation this function is equivalence-tested against
+    (test_properties.py)."""
+    seg = _Segmenter(s, norm)
+    general = seg.general
+    segments, prune_stack = seg.segments, seg.prune_stack
+    pieces, link_pieces = seg.pieces, seg.link_pieces
+    anchor_depth = 0
+    segment_tag = "body"
+    parts = _SPLIT(s)
+    parts += _TAIL
+    it = iter(parts)
+    # pos: end of the current (text, token) pair; done: how far the page
+    # is read ahead of the pairs (by the general loop or a raw-text
+    # skip), while that is past the pair's start (else 0)
+    pos = done = 0
+    for text, token, name, ename in zip(it, it, it, it):
+        pos += len(text) + len(token)
+        if done:
+            if done >= pos:
+                continue
+            tag_at = pos - len(token)
+            if done > tag_at:  # it stopped inside this token: finish it
+                done, anchor_depth, segment_tag = general(
+                    done, pos, anchor_depth, segment_tag
+                )
+                continue
+            if done > tag_at - len(text):
+                text = s[done:tag_at]
+            done = 0
+        if text:
+            if "<" in text:
+                tag_at = pos - len(token)
+                done, anchor_depth, segment_tag = general(
+                    tag_at - len(text), tag_at, anchor_depth, segment_tag
+                )
+                if done > tag_at:
+                    if done < pos:
+                        done, anchor_depth, segment_tag = general(
+                            done, pos, anchor_depth, segment_tag
+                        )
+                    continue
+                done = 0
+            elif not prune_stack:  # _BlockParser.handle_data
+                if "&" in text:
+                    text = _unescape(text)
+                pieces.append(text)
+                if anchor_depth:
+                    link_pieces.append(text)
+        if name is not None:  # start tag
+            kind = _KIND.get(name)
+            if kind is None:
+                name = name.lower()
+                kind = _KIND.get(name)
+                if kind is None:
+                    continue
+            if kind == _PRUNE:
+                if token[-2] == "/":  # self-closing: no subtree
+                    continue
+                if name in _CDATA_CLOSE:
+                    # raw text up to the full close, whatever tokens the
+                    # split saw in it: it is pruned (script and style are
+                    # PRUNE_TAGS), and the close pops the push, so only
+                    # the position moves; unterminated, the stdlib drops
+                    # the rest of the page
+                    m = _CDATA_CLOSE[name].search(s, pos)
+                    done = m.end() if m else len(s)
+                    continue
+                prune_stack.append(name)
+            elif prune_stack:
+                continue
+            elif kind == _BLOCK:
+                _flush(segments, pieces, link_pieces, segment_tag, norm)
+                segment_tag = name
+            elif kind == _ANCHOR:
+                if token[-2] != "/":
+                    anchor_depth += 1
+            else:  # _BR
+                pieces.append(" ")
+        elif ename is not None:  # end tag
+            kind = _KIND.get(ename)
+            if kind is None:
+                ename = ename.lower()
+                kind = _KIND.get(ename)
+            if prune_stack:
+                if kind == _PRUNE and ename == prune_stack[-1]:
+                    prune_stack.pop()
+            elif kind == _BLOCK:
+                _flush(segments, pieces, link_pieces, ename, norm)
+                segment_tag = "body"
+            elif kind == _ANCHOR and anchor_depth:
+                anchor_depth -= 1
+    _flush(segments, pieces, link_pieces, segment_tag, norm)
     return segments
 
 

@@ -454,6 +454,73 @@ def test_leftover_tmp_file_is_ignored(spark, tmp_path):
     assert completed_buckets(spark, ledger, 4) == [0, 1]
 
 
+def test_ledger_fold_keeps_every_row_and_the_epoch_answer(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that leaves more than ``_FOLD_AT`` ledger files folds them
+    into one. Every row is kept, and ``_current_epoch`` gives the same
+    answers (two epochs, a marker back to the first) before the fold,
+    after it, and after a crash between the folded file's rename and the
+    deletes, which leaves every row twice."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from ankiocr_spark import checkpoint
+    from ankiocr_spark.checkpoint import (
+        _append_ledger, _current_epoch, _epoch_rows, _fold_ledger,
+        _ledger_dataset, _ledger_fs,
+    )
+
+    t = [dt.datetime(2026, 1, 1, 0, 0, s) for s in range(8)]
+    a, b = KERNEL_VERSION, "another-kernel"
+
+    def row(key, n, bucket, status, ts):
+        return ("r", key, n, bucket, status, 10, 9, 1, 0, 100, ts, ts)
+
+    commits = [
+        [row(a, 4, 0, "done", t[0]), row(a, 4, 1, "done", t[0])],
+        [row(b, 8, -1, "layout", t[1])],
+        [row(b, 8, 0, "done", t[2]), row(b, 8, 5, "done", t[2])],
+        [row(a, 4, -1, "layout", t[3])],
+        [row(a, 4, 2, "done", t[4])],
+        [row(a, 4, 3, "done", t[5])],
+    ]
+    n_rows = sum(map(len, commits))
+    monkeypatch.setattr(checkpoint, "_FOLD_AT", len(commits))
+    ledger = str(tmp_path / "led_fold")
+    for c in commits:
+        _append_ledger(spark, ledger, c)
+
+    def answers():
+        return [_current_epoch(spark, ledger, n, key)
+                for n, key in ((4, a), (8, b), (4, b))]
+
+    before = answers()
+    assert before == [({2, 3}, False), (set(), True), (set(), True)]
+    assert len(os.listdir(ledger)) == len(commits)
+    backup = tmp_path / "led_fold_backup"
+    shutil.copytree(ledger, backup)
+
+    fs, path = _ledger_fs(spark, ledger)
+    _fold_ledger(fs, path, _ledger_dataset(fs, path))
+    assert len(os.listdir(ledger)) == 1
+    assert len(_epoch_rows(spark, ledger)) == n_rows
+    assert answers() == before
+
+    # crash after the rename, before the deletes: old files and the fold
+    for f in os.listdir(backup):
+        shutil.copy(backup / f, ledger)
+    assert len(_epoch_rows(spark, ledger)) == 2 * n_rows
+    assert answers() == before
+
+    # the next commit passes _FOLD_AT files and folds all of them
+    _append_ledger(spark, ledger, [row(a, 4, 0, "done", t[6])])
+    assert len(os.listdir(ledger)) == 1
+    assert len(_epoch_rows(spark, ledger)) == 2 * n_rows + 1
+    assert answers()[0] == ({0, 2, 3}, False)
+
+
 def test_unopenable_scheme_raises_before_any_change(spark, pages_dir, tmp_path):
     """A ledger or output uri no filesystem here can open fails the run
     before the marker append or the stale-partition clear touch

@@ -119,6 +119,11 @@ def test_cdata_close_lookalikes_stay_raw():
         b"<script>x</ ScRiPt  >"
         b"<p>case and whitespace tolerant close, long enough to keep it</p>",
         b"<script>unterminated </scri",
+        # re.I folds non-ASCII letters: '</\xc5\xbfcript>' (long s) and
+        # '</scr\xc4\xb1pt>' (dotless i) are raw data to the stdlib, not
+        # closes
+        "<script>a</\u017fcript>b</scr\u0131pt>c</script>"
+        "<p>paragraph after two non-ASCII lookalike closes, kept</p>".encode(),
     ]
     for payload in cases:
         fast = extract_spans(payload, _use_fast=True)
@@ -143,15 +148,25 @@ _SWEEP_PIECES = (
     '"', "'", "=", " ", "/", "\n", "<p>", "</p>", "<div>", "</div>",
     "<a href='/x'>", "</a>", "<h1>", "</h1>", "<li>", "</li>", "<A HREF='/z'>",
     "</A>", "text of a block long enough to be kept", "short",
+    # the split tier's hand-off points: comments (one hiding tags),
+    # a bogus comment close, raw-text closes the split cannot read, a
+    # declaration in raw text, an unquoted attribute, upper-case names,
+    # an entity split by a tag, an unterminated raw-text element, a NUL,
+    # a quoted '>' (a hand-off can stop inside that tag) and a
+    # self-closing anchor
+    "<!-- x -->", "<!-- <p> </nav> -->", "--!>", "</ script>",
+    "<script><!x </script>", "<P>", "</SCRIPT>", "&am<b>p;",
+    "<script>unterminated", "\x00", '<p title="a>b">', "<a/>",
 )
 
 
 def test_fast_paths_match_stdlib_on_seeded_sweep():
     """Seeded differential sweep (20k fragments) of the fast tokenizer —
-    prune-subtree skip, simple-tag regex, general path — against the
-    stdlib-driven ``_BlockParser``: same segments, and the Block-free text
-    path equals ``clean_text`` of the kept stdlib spans with ``n_blocks``
-    = their count. Fragments the stdlib parser crashes on are skipped."""
+    split tier and each of its hand-offs, prune-subtree skip, simple-tag
+    regex, general path — against the stdlib-driven ``_BlockParser``:
+    same segments, same spans, and the Block-free text path equals
+    ``clean_text`` of the kept stdlib spans with ``n_blocks`` = their
+    count. Fragments the stdlib parser crashes on are skipped."""
     import random
 
     from ankiocr_spark.kernel import _fused_segments, _segments, extract_row
@@ -165,7 +180,9 @@ def test_fast_paths_match_stdlib_on_seeded_sweep():
         except Exception:
             continue
         assert _fused_segments(s) == slow, repr(s)
-        kept = [b for b in extract_spans(s, _use_fast=False) if b.kept]
+        spans = extract_spans(s, _use_fast=False)
+        assert extract_spans(s) == spans, repr(s)
+        kept = [b for b in spans if b.kept]
         text, n_blocks, _, _ = extract_row(s, False)
         assert (text, n_blocks) == (
             clean_text("\n".join(b.text for b in kept)), len(kept)
@@ -174,33 +191,100 @@ def test_fast_paths_match_stdlib_on_seeded_sweep():
     assert compared > 19_000
 
 
+_PAGE_4MB = 4 * 1024 * 1024
+_BENIGN_UNIT = ('<nav><ul><li><a href="/x">link</a></li></ul></nav>'
+                "<p>paragraph text that is long enough to be kept</p>")
+_BENIGN_4MB = _BENIGN_UNIT * (_PAGE_4MB // len(_BENIGN_UNIT))
+
+
+def _best_time(f, pages, repeat=3):
+    """Best wall time of ``repeat`` runs of ``f`` over ``pages``."""
+    import time
+
+    best = float("inf")
+    for _ in range(repeat):
+        t0 = time.perf_counter()
+        for s in pages:
+            f(s)
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
 def test_adversarial_pruned_page_stays_linear():
     """A ~4 MB page whose <nav> holds an unterminated quoted attribute and
     a tag with a long whitespace run and no '>' must parse within 5x the
     time of a benign page of the same size (a ratio: host speed drifts)."""
-    import time
-
     from ankiocr_spark.kernel import _fused_segments
 
-    size = 4 * 1024 * 1024
-    unit = ('<nav><ul><li><a href="/x">link</a></li></ul></nav>'
-            "<p>paragraph text that is long enough to be kept</p>")
-    benign = unit * (size // len(unit))
-    half = size // 2
+    half = _PAGE_4MB // 2
     adversarial = (
         '<nav><a title="' + ("word " * (half // 5))  # quote never closes
         + "<div" + " " * half  # whitespace run, no '>'
     )
+    assert _best_time(_fused_segments, [adversarial]) < 5 * _best_time(
+        _fused_segments, [_BENIGN_4MB]
+    )
 
-    def best_of_3(s):
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _fused_segments(s)
-            best = min(best, time.perf_counter() - t0)
-        return best
 
-    assert best_of_3(adversarial) < 5 * best_of_3(benign)
+def test_split_tier_adversarial_pages_stay_linear():
+    """~4 MB pages aimed at the split tier's hand-offs: ~100k unterminated
+    `<!--` (alone, and each followed by a plain tag, so each is its own
+    hand-off), a run of `<a` with no '>', and a page that hands off at its
+    first byte. Each parses within 5x the time of a benign page of the
+    same size: a search that found no close is not repeated from a later
+    position, and a tail with no '>' is read once."""
+    from ankiocr_spark.kernel import _fused_segments
+
+    benign = _best_time(_fused_segments, [_BENIGN_4MB])
+    pages = {
+        "comments": ("<!--" + "x" * 36) * (_PAGE_4MB // 40),
+        "comments_and_tags": ("<!--<p>" + "x" * 33) * (_PAGE_4MB // 40),
+        "lt_a_run": "<a" * (_PAGE_4MB // 2),
+        "first_byte": "<!--" + _BENIGN_4MB,
+    }
+    for name, page in pages.items():
+        assert _best_time(_fused_segments, [page]) < 5 * benign, name
+
+
+def _general_only(s):
+    """The general loop (tiers 2-4) run over the whole page from position
+    0, as the split tier's hand-off target reads it."""
+    from ankiocr_spark.kernel import _Segmenter, _flush, _normalize
+
+    seg = _Segmenter(s)
+    _, _, segment_tag = seg.general(0, len(s), 0, "body")
+    _flush(seg.segments, seg.pieces, seg.link_pieces, segment_tag, _normalize)
+    return seg.segments
+
+
+def test_split_tier_keeps_its_speed_on_pages_that_hand_off():
+    """Seeded fixture pages with a comment after every third paragraph,
+    and with every href value unquoted, hand off to the general loop
+    again and again. The split tier must take at most 1.2x the time of
+    the general loop run over each whole page from position 0, so it
+    has to pick up again after each construct it hands off."""
+    from ankiocr_spark.fixtures import gen_rows
+    from ankiocr_spark.kernel import _decode, _fused_segments
+
+    pages = [_decode(r["html"]) for r in gen_rows(300, seed=13)
+             if r["html"] is not None]
+    commented = [
+        "</p>".join(p + ("<!-- note -->" if k % 3 == 2 else "")
+                    for k, p in enumerate(page.split("</p>")))
+        for page in pages
+    ]
+    unquoted = [p.replace('href="', "href=").replace('">', ">") for p in pages]
+    for name, corpus, marker in (
+        ("comments", commented, "<!-- note -->"),
+        ("unquoted", unquoted, "<a href=/"),
+    ):
+        assert sum(marker in s for s in corpus) > len(corpus) // 2, name
+        for s in corpus:
+            assert _fused_segments(s) == _general_only(s), name
+        ratio = _best_time(_fused_segments, corpus, 5) / _best_time(
+            _general_only, corpus, 5
+        )
+        assert ratio <= 1.2, (name, ratio)
 
 
 def test_fast_tokenizer_matches_stdlib_on_fixtures():
