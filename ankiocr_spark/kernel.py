@@ -6,10 +6,10 @@ as a pure, deterministic Python function over HTML payloads
 (BASELINE.json:north_star: "lxml DOM parse, readability/trafilatura-style
 boilerplate stripping (text-density + link-density scoring per block, tag
 whitelist/blacklist pruning)"). lxml is not available in this container, so
-the kernel tokenizes with its own regex tiers (``_fused_segments``), held
-segment-for-segment equal to a walk of the stdlib ``html.parser``
-(``_BlockParser``, the reference) — which is *better* for the per-url
-byte-identical invariant: zero external parser-version dependence.
+the kernel tokenizes with its own two regex tiers (``_fused_segments``),
+held segment-for-segment equal to a walk of the stdlib ``html.parser``
+(tests/stdlib_reference.py, the reference) — which is *better* for the
+per-url byte-identical invariant: zero external parser-version dependence.
 
 Determinism contract: same bytes in → same bytes out. No dict ordering,
 locale, wall clock, or library-version dependence. The golden fixtures
@@ -37,7 +37,6 @@ import codecs
 import hashlib
 import re
 from dataclasses import dataclass
-from html.parser import HTMLParser
 from typing import List, Optional, Tuple
 
 from . import textclean
@@ -104,101 +103,26 @@ class Block:
     kept: bool
 
 
-class _BlockParser(HTMLParser):
-    """Linear block segmenter: splits the document's text at block-tag
-    boundaries, tracking anchor-text length per segment for link-density
-    scoring. Prune-tag subtrees contribute nothing."""
-
-    def __init__(self, preserve_spaces: bool = False) -> None:
-        super().__init__(convert_charrefs=True)
-        self._prune_stack: List[str] = []
-        self._anchor_depth = 0
-        self._pieces: List[str] = []
-        self._link_pieces: List[str] = []
-        self._segment_tag = "body"
-        self._norm = _normalize_preserve if preserve_spaces else _normalize
-        self.segments: List[Tuple[str, str, str]] = []  # (tag, text, link_text)
-
-    # -- segment management -------------------------------------------------
-    def _flush(self, tag_for_segment: str) -> None:
-        text = self._norm("".join(self._pieces))
-        if text:
-            link_text = self._norm("".join(self._link_pieces))
-            self.segments.append((tag_for_segment, text, link_text))
-        self._pieces = []
-        self._link_pieces = []
-
-    # -- HTMLParser hooks ----------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in PRUNE_TAGS:
-            self._prune_stack.append(tag)
-            return
-        if self._prune_stack:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush(self._segment_tag)
-            self._segment_tag = tag
-        elif tag == "a":
-            self._anchor_depth += 1
-        elif tag == "br":
-            self._pieces.append(" ")
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        if tag in PRUNE_TAGS:
-            return  # self-closing prune tag has no subtree
-        if self._prune_stack:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush(self._segment_tag)
-            self._segment_tag = tag
-        elif tag == "br":
-            self._pieces.append(" ")
-
-    def handle_endtag(self, tag: str) -> None:
-        if self._prune_stack:
-            if tag == self._prune_stack[-1]:
-                self._prune_stack.pop()
-            return
-        if tag in BLOCK_TAGS:
-            self._flush(tag)
-            self._segment_tag = "body"
-        elif tag == "a" and self._anchor_depth > 0:
-            self._anchor_depth -= 1
-
-    def handle_data(self, data: str) -> None:
-        if self._prune_stack or not data:
-            return
-        self._pieces.append(data)
-        if self._anchor_depth > 0:
-            self._link_pieces.append(data)
-
-    def close(self) -> None:  # flush trailing text
-        super().close()
-        self._flush(self._segment_tag)
-
-
 # ---------------------------------------------------------------------------
-# Fast tokenizer: the SAME segmentation as driving _BlockParser from the
-# stdlib parser, without html.parser's per-attribute parse loop and
-# per-token position bookkeeping (updatepos) — this engine never reads
-# attributes. Four regex tiers, each consuming only what the stdlib would
-# consume the same way:
+# Fast tokenizer: the SAME segmentation as driving the stdlib parser with
+# block-segmenting handler hooks (tests/stdlib_reference.py), without
+# html.parser's per-attribute parse loop and per-token position
+# bookkeeping (updatepos) — this engine never reads attributes. Two
+# tiers, each consuming only what the stdlib would consume the same way:
 #   1. one _SPLIT call per page cuts it into text parts and plain tags
 #      (plus `<!decl>` / `<?pi>`, which the stdlib skips), and one loop
 #      walks the parts, dispatching each tag with one _KIND lookup and
-#      jumping over a script/style raw-text element with one search. A
-#      text part that still holds '<' (a comment, a marked section, a
+#      jumping over a script/style raw-text element with one search;
+#   2. a text part that still holds '<' (a comment, a marked section, a
 #      malformed or unquoted-attribute tag, a lone '<') is read by the
-#      general loop from that part's first character, with the whole
-#      segmenter state; tier 1 then picks up again at the first character
-#      the general loop has not read, so a page is never read twice.
-#      Tiers 2-4 are that general loop (_Segmenter.general):
-#   2. inside a PRUNE_TAGS subtree, one _PRUNE_SKIP match jumps over
-#      text and non-prune tags at C speed;
-#   3. _SIMPLE_TAG reads a plain `<name a="v">` / `</name>` in one match;
-#   4. the general path reuses the stdlib's own compiled (linear-time)
-#      regexes for everything else; a search that found no close once is
-#      not repeated from a later position, so a run of unclosed
+#      general loop (_Segmenter.general) from that part's first
+#      character, with the whole segmenter state and the stdlib's own
+#      compiled (linear-time) regexes. It returns at the first '<' at or
+#      past the part's end, so tier 1 dispatches every tag the split
+#      delimited and picks up again at the first character the general
+#      loop has not read: a page is never read twice. A search that
+#      found no close once is not repeated from a later position, and a
+#      tail with no '>' is read in one pass, so a run of unclosed
 #      constructs costs one scan, not one per construct.
 # test_properties.py holds segment-level equivalence against the
 # stdlib-driven parser on the fixture corpus and a seeded fragment sweep.
@@ -207,12 +131,13 @@ class _BlockParser(HTMLParser):
 import html.parser as _hp
 from html import unescape as _unescape
 
+_STARTTAG_OPEN = _hp.starttagopen
 _TAGNAME = _hp.tagfind_tolerant
 _STARTTAG_END = _hp.locatestarttagend_tolerant
 _ENDTAG = _hp.endtagfind
 _COMMENT_CLOSE = _hp.commentclose
 
-# Tiers 1-3 grammar. Whitespace is the explicit ASCII set where the stdlib
+# Tier 1 grammar. Whitespace is the explicit ASCII set where the stdlib
 # tag name stops, never `\s` (on str patterns that also matches \xa0,
 # \x0b and \x1c, which the stdlib keeps INSIDE a tag name). Names are a
 # subset of the stdlib's name characters that ends where the stdlib's
@@ -225,13 +150,9 @@ _ATTRS = (
     f"(?:{_WS}++[a-zA-Z_:][-.:_a-zA-Z0-9]*+"
     f"""(?:="[^"<]*+"|='[^'<]*+')?)*+{_WS}*+"""
 )
-#: groups: start-tag name, "/" if self-closing, end-tag name
-_SIMPLE_TAG = re.compile(
-    f"<(?:({_NAME}){_ATTRS}(/?)|/({_NAME}){_WS}*+)>", re.ASCII
-).match
-#: tier 1: split on a whole token (group 1) — a plain tag as _SIMPLE_TAG
-#: reads it (groups 2 and 3: start-tag name, end-tag name; a start tag
-#: is self-closing iff its token ends in "/>"), or a `<!decl>` / `<?pi>`
+#: tier 1: split on a whole token (group 1) — a plain start or end tag
+#: (groups 2 and 3: start-tag name, end-tag name; a start tag is
+#: self-closing iff its token ends in "/>"), or a `<!decl>` / `<?pi>`
 #: that holds no '<', which the stdlib skips up to the first '>' (both
 #: names None). `<!--` and `<![` open a comment or a marked section
 #: instead, so they stay in the text, as does a `<!`/`<?` that holds a
@@ -253,18 +174,6 @@ _KIND = {
     "a": _ANCHOR,
     "br": _BR,
 }
-_PRUNE_NAME = f"(?i:{'|'.join(sorted(PRUNE_TAGS))})"
-#: inside a pruned subtree: text, a '<' that opens no markup, and whole
-#: start and end tags of non-prune names — none of them can change state
-#: there. It stops before any prune-tag open or close (so before the
-#: stack top's close, which pops), `<!`, `<?` or a tag it cannot read
-#: whole; the token loop then handles that one token.
-_PRUNE_SKIP = re.compile(
-    "(?:[^<]++|<(?![a-zA-Z/!?])"
-    f"|<(?!{_PRUNE_NAME}(?:{_WS}|[/>])){_NAME}{_ATTRS}/?>"
-    f"|</(?!{_PRUNE_NAME}{_WS}*+>){_NAME}{_WS}*+>)*+",
-    re.ASCII,
-).match
 
 # Full close-tag pattern, stdlib set_cdata_mode's `interesting` regex
 # (r'</\s*%s\s*>'): a mismatched name ('</scriptfoo>') or attributed
@@ -286,10 +195,17 @@ _MARKED_CLOSE_MS = re.compile(r"]\s*>")
 _SECT_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
 _SECT_MS = frozenset({"if", "else", "endif"})
 
+#: _Segmenter.tail: a NUL after a last tag-name character (tagfind_tolerant)
+#: from which the attribute scan (locatestarttagend_tolerant) cannot go
+#: on, as it is neither a quote nor whitespace
+_RAW_NAME_END = re.compile("[^\\s'\"/>\\x00](?=\\x00)")
+#: the characters that end a tag-name run, '>' aside
+_NAME_STOPS = "\t\n\r\f /\x00"
+
 
 def _flush(segments, pieces, link_pieces, tag: str, norm) -> None:
-    """Close the current segment (inlined ``_BlockParser._flush``); both
-    tiers share the piece lists, so they are cleared in place."""
+    """Close the current segment (the reference's ``BlockParser._flush``);
+    both tiers share the piece lists, so they are cleared in place."""
     text = norm("".join(pieces))
     if text:
         segments.append(
@@ -300,13 +216,13 @@ def _flush(segments, pieces, link_pieces, tag: str, norm) -> None:
 
 
 class _Segmenter:
-    """One page's segmenter state, shared by the tokenizer tiers: the
-    lists ``_fused_segments`` (tier 1) and ``general`` (tiers 2-4) both
+    """One page's segmenter state, shared by the two tokenizer tiers: the
+    lists ``_fused_segments`` (tier 1) and ``general`` (tier 2) both
     append to, the prune stack, and ``general``'s memory of searches that
     found nothing."""
 
     __slots__ = ("s", "norm", "segments", "prune_stack", "pieces",
-                 "link_pieces", "last_gt", "last_nul", "misses")
+                 "link_pieces", "last_gt", "misses")
 
     def __init__(self, s: str, norm=_normalize) -> None:
         self.s = s
@@ -316,15 +232,15 @@ class _Segmenter:
         self.pieces: List[str] = []
         self.link_pieces: List[str] = []
         self.last_gt = s.rfind(">")  # no '>' after it: those finds fail at once
-        self.last_nul = None  # s.rfind("\x00"), once a tail past last_gt needs it
         self.misses = {}  # pattern -> a position after which it matches nowhere
 
-    def emit(self, seg: str, anchor_depth: int) -> None:
-        """``_BlockParser.handle_data`` incl. the charref unescape the
-        tokenizer applied before the hook; pruned text skips BOTH."""
+    def emit(self, seg: str, anchor_depth: int, raw: bool = False) -> None:
+        """The reference's ``handle_data`` incl. the charref unescape the
+        stdlib tokenizer applies before the hook unless the data is
+        ``raw``; pruned text skips BOTH."""
         if self.prune_stack or not seg:
             return
-        if "&" in seg:
+        if "&" in seg and not raw:
             seg = _unescape(seg)
         self.pieces.append(seg)
         if anchor_depth:
@@ -358,156 +274,125 @@ class _Segmenter:
         self.emit(self.s[j:k], anchor_depth)
         return k
 
+    def tail(self, i: int, anchor_depth: int) -> None:
+        """Emit the page from ``i`` on, where no '>' follows. No tag,
+        comment or declaration can close there, so the stdlib reads each
+        construct as data through its incomplete-data fallback, cut only
+        at '<', which no charref spans. One start tag differs: when its
+        name run ends at a NUL right after a character that is neither a
+        quote nor whitespace, its attribute scan stops at that NUL, and
+        the stdlib emits ``<name`` raw (parse_starttag's handle_data, no
+        unescape). Every '<' in a name run reaches the same NUL, so the
+        first one opens the raw piece. Each such NUL and the run before
+        it are read once: a run of unclosed constructs costs one pass,
+        where a scan per construct would be quadratic."""
+        s = self.s
+        lo = i  # no name run crosses lo: it is i or a NUL
+        while (m := _RAW_NAME_END.search(s, lo)) is not None:
+            nul = m.end()
+            run = max(lo, *(s.rfind(c, lo, nul) + 1 for c in _NAME_STOPS))
+            tag = _STARTTAG_OPEN.search(s, run, nul)
+            if tag is not None:
+                self.emit(s[i:tag.start()], anchor_depth)
+                self.emit(s[tag.start():nul], anchor_depth, raw=True)
+                i = nul
+            lo = nul
+        self.emit(s[i:], anchor_depth)
+
     def general(self, i: int, stop: int, anchor_depth: int, segment_tag: str):
-        """Tokenize + segment from ``i`` until the position reaches
-        ``stop``; it may pass it, as a token or a raw-text element is
-        never cut. Returns ``(i, anchor_depth, segment_tag)``; ``i`` is
-        ``len(s)`` once the page is done, also at the stdlib's early
-        stops (unterminated raw text, a lone trailing '<')."""
+        """Tokenize + segment from ``i`` with the stdlib's own regexes, up
+        to the first '<' at or past ``stop``: the data before it is
+        emitted, the construct there is left to the caller. A construct
+        or raw-text element that starts before ``stop`` is read whole, so
+        that '<' may lie past ``stop``. Returns ``(i, anchor_depth,
+        segment_tag)``; ``i`` is ``len(s)`` once the page is done, also
+        at the stdlib's early stop on unterminated raw text."""
         s, norm, last_gt = self.s, self.norm, self.last_gt
         segments, prune_stack = self.segments, self.prune_stack
         pieces, link_pieces = self.pieces, self.link_pieces
         n = len(s)
-        cdata_close = None
 
-        while i < stop or cdata_close is not None:
-            if cdata_close is not None:
-                m = cdata_close.search(s, i)
-                if not m:
-                    i = n  # unterminated raw-text element: stdlib drops the rest
-                    break
-                if m.start() > i and not prune_stack:
-                    # raw cdata data, never unescaped (stdlib skips unescape
-                    # in cdata mode) — script/style are PRUNE_TAGS so this only
-                    # matters if the blacklist ever changes
-                    seg = s[i:m.start()]
-                    pieces.append(seg)
-                    if anchor_depth:
-                        link_pieces.append(seg)
-                # cdata_close is the full `</\s*elem\s*>` (stdlib
-                # set_cdata_mode), so endtagfind necessarily matches the same
-                # span here with exactly the cdata element's name.
-                tag, slash, etag = None, "", _ENDTAG.match(s, m.start()).group(1)
-                i = m.end()
-                cdata_close = None
-            else:
-                if i > last_gt:
-                    if self.last_nul is None:
-                        self.last_nul = s.rfind("\x00")
-                    if i > self.last_nul:
-                        # No '>' and no NUL from here on: no tag, comment
-                        # or declaration can close, and a start tag's scan
-                        # (locatestarttagend_tolerant) only stops at a NUL
-                        # or at an '=' whose value does not parse, so every
-                        # construct ends in the incomplete-data fallback.
-                        # The rest is data, cut only at '<', which no
-                        # charref spans: one piece gives the same text,
-                        # where a scan per unclosed construct would be
-                        # quadratic in a run of them.
-                        self.emit(s[i:], anchor_depth)
-                        i = n
-                        break
-                if prune_stack:
-                    i = _PRUNE_SKIP(s, i).end()
-                    if i == n:
-                        break
-                j = s.find("<", i)
-                if j < 0:
-                    self.emit(s[i:], anchor_depth)
-                    i = n
-                    break
-                if j > i and not prune_stack:  # self.emit inlined: hottest site
-                    seg = s[i:j]
-                    if "&" in seg:
-                        seg = _unescape(seg)
-                    pieces.append(seg)
-                    if anchor_depth:
-                        link_pieces.append(seg)
-                m = _SIMPLE_TAG(s, j)
-                if m is not None:
-                    tag, slash, etag = m.groups()
-                    i = m.end()
-                elif j + 1 >= n:
-                    # lone trailing '<': stdlib breaks, then close() flushes
-                    # the unprocessed tail as data
-                    self.emit("<", anchor_depth)
-                    i = n
-                    break
-                elif "a" <= (c := s[j + 1]) <= "z" or "A" <= c <= "Z":
-                    m = _TAGNAME.match(s, j + 1)
-                    tag, etag = m.group(1), None
-                    # tagfind_tolerant consumes trailing whitespace and
-                    # non-closing slashes: when the tag close follows, the
-                    # stdlib ends the tag there (`<p //>` is self-closing)
-                    end = m.end()
-                    if not (s.startswith(">", end) or s.startswith("/>", end)):
-                        end = _STARTTAG_END.match(s, j).end()
-                    if s.startswith(">", end):
-                        slash, i = "", end + 1
-                    elif s.startswith("/>", end):
-                        slash, i = "/", end + 2
-                    else:
-                        # malformed start tag (stdlib check_for_whole_start_tag):
-                        # at EOF / mid-attribute / stray '/', fall back to the
-                        # incomplete-data path; otherwise emit the partial tag
-                        # text raw (parse_starttag's handle_data, no unescape)
-                        # and resume right after it
-                        c2 = s[end:end + 1]
-                        if c2 == "" or c2 in (
-                            "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-                        ):
-                            i = self.emit_incomplete(j, anchor_depth)
-                        else:
-                            if not prune_stack:
-                                seg = s[j:end]
-                                pieces.append(seg)
-                                if anchor_depth:
-                                    link_pieces.append(seg)
-                            i = end
-                        continue
-                elif s.startswith("</", j):
-                    e = _ENDTAG.match(s, j)
-                    if e:
-                        tag, slash, etag = None, "", e.group(1)
-                        i = e.end()
-                    else:
-                        gt = self.find_gt(j + 1)
-                        if gt < 0:  # incomplete at EOF
-                            i = self.emit_incomplete(j, anchor_depth)
-                            continue
-                        nm = _TAGNAME.match(s, j + 2)
-                        if not nm:  # '</>' or bogus comment '</;...>': skipped
-                            i = gt + 1
-                            continue
-                        # tolerant end tag with junk before '>': '</p attr>'
-                        tag, slash, etag = None, "", nm.group(1)
-                        i = s.find(">", nm.end()) + 1
-                elif s.startswith("<!--", j):
-                    m = self.search(_COMMENT_CLOSE, j + 4)
-                    i = self.emit_incomplete(j, anchor_depth) if not m else m.end()
-                    continue
-                elif s.startswith("<![", j):
-                    # marked section (stdlib parse_marked_section)
-                    nm = _SECT_NAME.match(s, j + 3)
-                    sect = nm.group().lower() if nm else None
-                    if sect in _SECT_STD:
-                        m = self.search(_MARKED_CLOSE_STD, j + 3)
-                    elif sect in _SECT_MS:
-                        m = self.search(_MARKED_CLOSE_MS, j + 3)
-                    else:  # stdlib raises here; degrade to data-skip
-                        m = None
-                    i = self.emit_incomplete(j, anchor_depth) if not m else m.end()
-                    continue
-                elif s.startswith("<?", j) or s.startswith("<!", j):
-                    nxt = self.find_gt(j + 2)
-                    i = self.emit_incomplete(j, anchor_depth) if nxt < 0 else nxt + 1
-                    continue
+        while True:
+            if i > last_gt:
+                self.tail(i, anchor_depth)
+                return n, anchor_depth, segment_tag
+            j = s.find("<", i)
+            if j < 0:
+                j = n
+            self.emit(s[i:j], anchor_depth)
+            if j >= stop:
+                return j, anchor_depth, segment_tag
+            if _STARTTAG_OPEN.match(s, j):
+                m = _TAGNAME.match(s, j + 1)
+                tag, etag = m.group(1), None
+                # tagfind_tolerant consumes trailing whitespace and
+                # non-closing slashes: when the tag close follows, the
+                # stdlib ends the tag there (`<p //>` is self-closing)
+                end = m.end()
+                if not (s.startswith(">", end) or s.startswith("/>", end)):
+                    end = _STARTTAG_END.match(s, j).end()
+                if s.startswith(">", end):
+                    slash, i = "", end + 1
+                elif s.startswith("/>", end):
+                    slash, i = "/", end + 2
                 else:
-                    self.emit("<", anchor_depth)
-                    i = j + 1
+                    # malformed start tag (stdlib check_for_whole_start_tag):
+                    # at EOF / mid-attribute / stray '/', fall back to the
+                    # incomplete-data path; otherwise emit the partial tag
+                    # text raw (parse_starttag's handle_data, no unescape)
+                    # and resume right after it
+                    c2 = s[end:end + 1]
+                    if c2 == "" or c2 in (
+                        "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+                    ):
+                        i = self.emit_incomplete(j, anchor_depth)
+                    else:
+                        self.emit(s[j:end], anchor_depth, raw=True)
+                        i = end
                     continue
+            elif s.startswith("</", j):
+                e = _ENDTAG.match(s, j)
+                if e:
+                    tag, slash, etag = None, "", e.group(1)
+                    i = e.end()
+                else:
+                    gt = self.find_gt(j + 1)
+                    if gt < 0:  # incomplete at EOF
+                        i = self.emit_incomplete(j, anchor_depth)
+                        continue
+                    nm = _TAGNAME.match(s, j + 2)
+                    if not nm:  # '</>' or bogus comment '</;...>': skipped
+                        i = gt + 1
+                        continue
+                    # tolerant end tag with junk before '>': '</p attr>'
+                    tag, slash, etag = None, "", nm.group(1)
+                    i = s.find(">", nm.end()) + 1
+            elif s.startswith("<!--", j):
+                m = self.search(_COMMENT_CLOSE, j + 4)
+                i = self.emit_incomplete(j, anchor_depth) if not m else m.end()
+                continue
+            elif s.startswith("<![", j):
+                # marked section (stdlib parse_marked_section)
+                nm = _SECT_NAME.match(s, j + 3)
+                sect = nm.group().lower() if nm else None
+                if sect in _SECT_STD:
+                    m = self.search(_MARKED_CLOSE_STD, j + 3)
+                elif sect in _SECT_MS:
+                    m = self.search(_MARKED_CLOSE_MS, j + 3)
+                else:  # stdlib raises here; degrade to data-skip
+                    m = None
+                i = self.emit_incomplete(j, anchor_depth) if not m else m.end()
+                continue
+            elif s.startswith("<?", j) or s.startswith("<!", j):
+                nxt = self.find_gt(j + 2)
+                i = self.emit_incomplete(j, anchor_depth) if nxt < 0 else nxt + 1
+                continue
+            else:
+                self.emit("<", anchor_depth)
+                i = j + 1
+                continue
 
-            # one dispatch for every tier: the inlined _BlockParser hooks
+            # the reference's tag hooks, inlined
             if etag is not None:  # handle_endtag
                 etag = etag.lower()
                 if prune_stack:
@@ -530,7 +415,16 @@ class _Segmenter:
                     elif tag == "br":
                         pieces.append(" ")
                 continue
-            if tag in PRUNE_TAGS:  # handle_starttag
+            if tag in _CDATA_CLOSE:
+                # raw text up to the full `</\s*elem\s*>` (stdlib
+                # set_cdata_mode): it is pruned (script and style are
+                # PRUNE_TAGS), and the close pops the push, so only the
+                # position moves; unterminated, the stdlib drops the rest
+                m = _CDATA_CLOSE[tag].search(s, i)
+                if not m:
+                    return n, anchor_depth, segment_tag
+                i = m.end()
+            elif tag in PRUNE_TAGS:  # handle_starttag
                 prune_stack.append(tag)
             elif not prune_stack:
                 if tag in BLOCK_TAGS:
@@ -540,22 +434,17 @@ class _Segmenter:
                     anchor_depth += 1
                 elif tag == "br":
                     pieces.append(" ")
-            if tag in _CDATA_CLOSE:
-                cdata_close = _CDATA_CLOSE[tag]
-
-        return i, anchor_depth, segment_tag
 
 
 def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
     """Single-pass tokenize + block-segment of ``s`` — the production hot
     path (tier 1, handing off to ``_Segmenter.general``). Semantically
-    identical to driving ``_BlockParser`` with the stdlib parser's hook
-    calls (tag names lowercased, attrs never materialized, charrefs
-    unescaped in data, script/style content consumed raw until the
-    matching close tag), with the handler hooks INLINED into the scan.
-    ``_BlockParser`` + the stdlib parser remain as the reference
-    implementation this function is equivalence-tested against
-    (test_properties.py)."""
+    identical to driving the stdlib parser with block-segmenting hooks
+    (tag names lowercased, attrs never materialized, charrefs unescaped
+    in data, script/style content consumed raw until the matching close
+    tag), with the hooks INLINED into the scan. That stdlib walk is the
+    reference this function is equivalence-tested against
+    (tests/stdlib_reference.py, test_properties.py)."""
     seg = _Segmenter(s, norm)
     general = seg.general
     segments, prune_stack = seg.segments, seg.prune_stack
@@ -567,21 +456,17 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
     it = iter(parts)
     # pos: end of the current (text, token) pair; done: how far the page
     # is read ahead of the pairs (by the general loop or a raw-text
-    # skip), while that is past the pair's start (else 0)
+    # skip), while that is past the pair's start (else 0). It never falls
+    # inside a token: the general loop stops at a '<' or the page's end,
+    # a raw-text skip right after a close tag, and neither a token nor a
+    # close tag holds a '<' past its first character.
     pos = done = 0
     for text, token, name, ename in zip(it, it, it, it):
         pos += len(text) + len(token)
         if done:
             if done >= pos:
                 continue
-            tag_at = pos - len(token)
-            if done > tag_at:  # it stopped inside this token: finish it
-                done, anchor_depth, segment_tag = general(
-                    done, pos, anchor_depth, segment_tag
-                )
-                continue
-            if done > tag_at - len(text):
-                text = s[done:tag_at]
+            text = s[done:pos - len(token)]
             done = 0
         if text:
             if "<" in text:
@@ -590,13 +475,9 @@ def _fused_segments(s: str, norm=_normalize) -> List[Tuple[str, str, str]]:
                     tag_at - len(text), tag_at, anchor_depth, segment_tag
                 )
                 if done > tag_at:
-                    if done < pos:
-                        done, anchor_depth, segment_tag = general(
-                            done, pos, anchor_depth, segment_tag
-                        )
                     continue
                 done = 0
-            elif not prune_stack:  # _BlockParser.handle_data
+            elif not prune_stack:  # the reference's handle_data
                 if "&" in text:
                     text = _unescape(text)
                 pieces.append(text)
@@ -725,30 +606,19 @@ def _keep(tag: str, text: str, link_text: str) -> bool:
     ) and (not link_text or _link_density(text, link_text) < MAX_LINK_DENSITY)
 
 
-def _segments(html, preserve_spaces: bool, use_fast: bool = True):
-    """Decode + segment one page into (tag, text, link_text) tuples.
-    ``use_fast=False`` routes through the stdlib parser — the reference
-    implementation the fast tokenizer is equivalence-tested against."""
-    s = _decode(html)
-    if use_fast:
-        return _fused_segments(
-            s, _normalize_preserve if preserve_spaces else _normalize
-        )
-    parser = _BlockParser(preserve_spaces=preserve_spaces)
-    parser.feed(s)
-    parser.close()
-    return parser.segments
+def _segments(html, preserve_spaces: bool):
+    """Decode + segment one page into (tag, text, link_text) tuples."""
+    return _fused_segments(
+        _decode(html), _normalize_preserve if preserve_spaces else _normalize
+    )
 
 
-def extract_spans(
-    html, _use_fast: bool = True, preserve_spaces: bool = False
-) -> List[Block]:
+def extract_spans(html, preserve_spaces: bool = False) -> List[Block]:
     """Parse HTML (bytes or str) into scored blocks, document order.
 
     The analog of ``OCRField.parse_images`` (/root/reference/src/anki_ocr/
     api.py:44-77): parse → per-child extraction → validity scoring, emitting
     one record per block instead of one ``OCRImage`` per ``<img>`` tag.
-    ``_use_fast=False`` routes through the stdlib parser (``_segments``).
     ``preserve_spaces`` is the reference ``preserve_interword_spaces``
     analog (config.json:8): literal space runs inside a block survive.
     """
@@ -756,7 +626,7 @@ def extract_spans(
         Block(i, tag, text, len(text), _link_density(text, link_text),
               _keep(tag, text, link_text))
         for i, (tag, text, link_text) in enumerate(
-            _segments(html, preserve_spaces, _use_fast)
+            _segments(html, preserve_spaces)
         )
     ]
 
