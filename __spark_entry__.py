@@ -70,11 +70,8 @@ _FRONT = [
     "seq_pack",
     "train_val_split",
     "crossdedup_lsh",
-    "rag_chunk",
     "boilerplate_strip",
     "vocab_topn",
-    "bm25_topk",
-    "hybrid_rrf",
     "classifier_score",
     "url_latest",
     "dsir_weight",
@@ -82,13 +79,12 @@ _FRONT = [
     "badwords_filter",
     "token_entropy",
     "signal_correlation",
-]
-
-_TAIL = [
-    "ann_recall",
     "pii_redact",
     "repetition_filter",
     "tfidf_top_terms",
+]
+
+_TAIL = [
     "anchor_texts",
     "incremental_extract",
     "lm_perplexity",
@@ -116,8 +112,6 @@ _TAIL = [
     "outlinks",
     "lang_id",
     "neardup_cosine",
-    "ann_lsh_buckets",
-    "ann_ivf_topk",
     "doc_fingerprint",
     "count_distinct_twophase",
     "extract_spans",

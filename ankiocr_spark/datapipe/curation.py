@@ -868,7 +868,7 @@ DSIR_BUCKETS = 4096
 DSIR_TARGET_LANG = "en"
 #: log-ratios are quantized to integer micro-nats before the per-doc sum:
 #: float sums are partial-agg-order-dependent, integer sums are exact in
-#: both engines (the bm25/classifier float discipline).
+#: both engines (the classifier float discipline).
 DSIR_SCALE = 1_000_000
 
 

@@ -396,92 +396,14 @@ WHERE l.split <> 'train'
 """
 
 
-#: retrieval-chunking geometry: 32-token windows advancing 24 tokens
-#: (8-token overlap) — sized so fixture docs (10-99 tokens) yield 1-4
-#: chunks and every code path (single short chunk, truncated tail,
-#: interior full windows) carries rows at every shipped sf
-RAG_WINDOW = 32
-RAG_STRIDE = 24
-
-
-def q_rag_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping token-window chunking — the retrieval-index prep pass
-    (RAG corpora index fixed windows with overlap so no answer span is
-    split across chunk boundaries). ZERO shuffle: tokenize → chunk-count
-    arithmetic → explode → slice/join/md5 all fuse into one codegen
-    stage over the scan; each chunk row carries only scalars (count +
-    md5 fingerprint), never the token array.
-
-    The token array is projected ONCE below the explode (Catalyst does
-    not CSE inside downstream expressions; an inline split would
-    re-tokenize per chunk row)."""
-    base = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("_toks"))
-    )
-    n = F.size("_toks")
-    n_chunks = F.when(
-        n > RAG_WINDOW,
-        F.expr(f"(size(_toks) - {RAG_WINDOW} + {RAG_STRIDE} - 1) "
-               f"div {RAG_STRIDE}") + 1,
-    ).otherwise(F.lit(1)).cast("bigint")
-    chunks = base.select(
-        "doc_id",
-        "_toks",
-        F.explode(F.sequence(F.lit(0).cast("bigint"), n_chunks - 1)).alias(
-            "chunk_idx"
-        ),
-    )
-    piece = F.slice(
-        F.col("_toks"),
-        (F.col("chunk_idx") * RAG_STRIDE + 1).cast("int"),
-        F.lit(RAG_WINDOW),
-    )
-    return chunks.select(
-        "doc_id",
-        "chunk_idx",
-        F.size(piece).cast("bigint").alias("chunk_tokens"),
-        F.md5(F.array_join(piece, " ")).alias("chunk_md5"),
-    )
-
-
-ORACLE_RAG_CHUNK = f"""
-WITH tok AS (
-  SELECT doc_id, str_split(text, ' ') AS t
-  FROM documents WHERE text IS NOT NULL),
-c AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) > {RAG_WINDOW}
-              THEN (len(t) - {RAG_WINDOW} + {RAG_STRIDE} - 1) // {RAG_STRIDE} + 1
-              ELSE 1 END AS n_chunks
-  FROM tok),
-x AS (
-  SELECT doc_id, t,
-         unnest(generate_series(0, n_chunks - 1)) AS chunk_idx
-  FROM c)
-SELECT doc_id, chunk_idx::BIGINT AS chunk_idx,
-       len(list_slice(t, chunk_idx * {RAG_STRIDE} + 1,
-                      chunk_idx * {RAG_STRIDE} + {RAG_WINDOW}))::BIGINT
-         AS chunk_tokens,
-       md5(array_to_string(
-             list_slice(t, chunk_idx * {RAG_STRIDE} + 1,
-                        chunk_idx * {RAG_STRIDE} + {RAG_WINDOW}), ' '))
-         AS chunk_md5
-FROM x
-"""
-
-
 QUERIES = {
     "seq_pack": q_seq_pack,
-    "rag_chunk": q_rag_chunk,
     "train_val_split": q_train_val_split,
     "split_leakage": q_split_leakage,
 }
 
 ORACLE_SQL = {
     "seq_pack": ORACLE_SEQ_PACK,
-    "rag_chunk": ORACLE_RAG_CHUNK,
     "train_val_split": ORACLE_TRAIN_VAL_SPLIT,
     "split_leakage": _build_oracle_split_leakage(),
 }

@@ -50,7 +50,6 @@ N_QUERIES = 10   # vec_id < 10 are the query vectors
 TOP_K = 5
 COSINE_THRESHOLD = 0.45  # near-dup threshold (synthetic embeddings are
 # near-orthogonal — max pairwise cosine ≈0.6 — so 0.45 marks the tail)
-N_PLANES = 8
 
 
 def q_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,7 +102,7 @@ SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= {TOP_K}
 EMB_DIM = 64
 
 
-def _srp_weights(n_planes: int = N_PLANES) -> list:
+def _srp_weights(n_planes: int) -> list:
     """n_planes × EMB_DIM hyperplane weights, computed driver-side:
     w(j, d) = ((md5int(f"{j},{d}") % 2001) - 1000) / 1000 ∈ [-1, 1].
     Deterministic (md5), so the DuckDB oracle reproduces them exactly and
@@ -133,14 +132,13 @@ def _sign_col(emb_col, weight_row) -> "F.Column":
     return s >= 0
 
 
-def srp_bucket_col(emb_col, weights=None) -> "F.Column":
+def srp_bucket_col(emb_col, weights) -> "F.Column":
     """Sign-random-projection bucket of an embedding column (one bit per
     weight row), as a single whole-stage-codegen expression over literal
-    weight arrays. ``weights`` defaults to the 8-plane global family; the
-    banded near-dup path passes per-band slices so the sign-fold exists
-    exactly once (r3 review cleanup)."""
+    weight arrays. The banded near-dup path passes one band's slice of
+    ``_srp_weights`` per call."""
     acc = F.lit(0)
-    for j, row in enumerate(weights if weights is not None else _srp_weights()):
+    for j, row in enumerate(weights):
         acc = acc + F.when(_sign_col(emb_col, row), F.lit(1 << j)).otherwise(F.lit(0))
     return acc.cast("int")
 
@@ -226,9 +224,8 @@ def q_neardup_cosine(
     return scored.where(F.col("cosine") >= COSINE_THRESHOLD)
 
 
-#: shared DuckDB CTE: per-plane projection signs (planes 0..n-1), reused by
-#: the single-bucket (ann_lsh_buckets) and banded (neardup) oracles —
-#: identical math to _srp_weights/_sign_col.
+#: DuckDB CTE of the banded near-dup oracle: per-plane projection signs
+#: (planes 0..n-1) — identical math to _srp_weights/_sign_col.
 def _sql_proj(n_planes: int) -> str:
     return f"""
 e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
@@ -241,16 +238,6 @@ proj AS (
   FROM e, generate_series(0, {n_planes - 1}) AS gj(j))
 """
 
-
-_SQL_BUCKETS = (
-    _sql_proj(N_PLANES)
-    + """,
-bkt AS (
-  SELECT vec_id,
-         (sum(CASE WHEN s >= 0 THEN (1 << j) ELSE 0 END))::int AS bucket
-  FROM proj GROUP BY vec_id)
-"""
-)
 
 ORACLE_NEARDUP = f"""
 WITH {_sql_proj(NEARDUP_BANDS * NEARDUP_BAND_BITS)},
@@ -272,128 +259,6 @@ SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= {COSINE_THRESHOLD}
 """
 
 
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-random-projection LSH: 8 md5-derived hyperplanes → 8-bit bucket
-    per vector. Near vectors collide; candidate pairs come from a bucket
-    equi-join instead of a cross product (the ANN scale path). The bucket
-    is a pure codegen projection over literal weights (srp_bucket_col) —
-    zero shuffles, zero row amplification."""
-    emb = _load_emb(spark, sf_dir)
-    return emb.select("vec_id", srp_bucket_col(F.col("emb")).alias("bucket"))
-
-ORACLE_ANN_LSH = f"""
-WITH {_SQL_BUCKETS}
-SELECT vec_id, bucket FROM bkt
-"""
-
-
-# --- IVF-style two-stage ANN --------------------------------------------------
-
-#: IVF parameters: the coarse quantizer is K fixed "pseudo-centroids" (the
-#: embeddings of vec_ids CENTROID_LO..CENTROID_LO+K-1 — deterministic, no
-#: k-means training needed for a correctness-checkable plan shape); each
-#: vector is assigned to its nearest centroid cell, queries probe the
-#: NPROBE nearest cells and rank candidates only inside them.
-IVF_K = 8
-CENTROID_LO = 10  # disjoint from the query ids (vec_id < N_QUERIES)
-NPROBE = 2
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-k: broadcast the K centroids, assign every vector to its
-    argmax-cosine cell (K-row amplification then reduce — never a full
-    cross product), probe the NPROBE best cells per query, and rank
-    candidates within the probed cells only.
-
-    Scale shape: at 10^9 vectors the per-vector work is K broadcast-join
-    rows + one window reduce; the candidate join is an equi-join on
-    ``cell``, so shuffle volume is O(vectors), not O(vectors x queries).
-    Recall is approximate by design; the oracle runs the SAME algorithm,
-    so the check is exact."""
-    emb = _load_emb(spark, sf_dir)
-    cents = F.broadcast(
-        emb.where(
-            (F.col("vec_id") >= CENTROID_LO)
-            & (F.col("vec_id") < CENTROID_LO + IVF_K)
-        ).select(F.col("vec_id").alias("cent_id"), F.col("emb").alias("c_emb"))
-    )
-
-    scored = emb.crossJoin(cents).select(
-        "vec_id", "emb", "cent_id", _cos(F.col("emb"), F.col("c_emb")).alias("cc")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("cc").desc(), F.col("cent_id").asc()
-    )
-    ranked = scored.withColumn("r", F.row_number().over(w_assign))
-    cells = ranked.where(F.col("r") == 1).select(
-        "vec_id", "emb", F.col("cent_id").alias("cell")
-    )
-    probes = (
-        ranked.where(
-            (F.col("r") <= NPROBE) & (F.col("vec_id") < N_QUERIES)
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("cent_id").alias("cell"),
-        )
-    )
-    cand = probes.join(cells, "cell").where(
-        F.col("query_id") != F.col("vec_id")
-    )
-    scored_c = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cos(F.col("q_emb"), F.col("emb")).alias("cosine"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w_top = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored_c.withColumn("rank", F.row_number().over(w_top))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
-ORACLE_ANN_IVF = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cents AS (
-  SELECT vec_id AS cent_id, emb AS c_emb FROM e
-  WHERE vec_id >= {CENTROID_LO} AND vec_id < {CENTROID_LO + IVF_K}),
-scored AS (
-  SELECT e.vec_id, e.emb, c.cent_id,
-         round(list_sum(list_transform(list_zip(e.emb, c.c_emb), x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(e.emb, x -> x * x)))
-                * sqrt(list_sum(list_transform(c.c_emb, x -> x * x)))),
-         6) AS cc
-  FROM e, cents c),
-ranked AS (
-  SELECT vec_id, emb, cent_id, cc,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cc DESC, cent_id ASC) AS r
-  FROM scored),
-cells AS (SELECT vec_id, emb, cent_id AS cell FROM ranked WHERE r = 1),
-probes AS (
-  SELECT vec_id AS query_id, emb AS q_emb, cent_id AS cell
-  FROM ranked WHERE r <= {NPROBE} AND vec_id < {N_QUERIES}),
-cand AS (
-  SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id,
-         round(list_sum(list_transform(list_zip(p.q_emb, c.emb), x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(p.q_emb, x -> x * x)))
-                * sqrt(list_sum(list_transform(c.emb, x -> x * x)))),
-         6) AS cosine
-  FROM probes p JOIN cells c USING (cell)
-  WHERE p.query_id <> c.vec_id),
-topk AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM cand)
-SELECT query_id, rank, neighbor_id, cosine FROM topk WHERE rank <= {TOP_K}
-"""
-
-
 # --- SemDeDup: semantic dedup inside embedding clusters -----------------------
 
 #: intra-cluster cosine above which two documents are semantic duplicates.
@@ -402,13 +267,19 @@ SELECT query_id, rank, neighbor_id, cosine FROM topk WHERE rank <= {TOP_K}
 #: intra-cell pairs at sf0.01) while leaving most of every cluster intact.
 SEMDEDUP_TAU = 0.35
 
+#: the coarse quantizer is IVF_K fixed "pseudo-centroids" (the embeddings of
+#: vec_ids CENTROID_LO..CENTROID_LO+IVF_K-1 — deterministic, no k-means
+#: training needed for a correctness-checkable plan shape).
+IVF_K = 8
+CENTROID_LO = 10  # disjoint from the query ids (vec_id < N_QUERIES)
+
 
 def _ivf_cells(emb: DataFrame) -> DataFrame:
     """(vec_id, emb, cell, cc): every vector assigned to its argmax-cosine
-    pseudo-centroid (the IVF coarse quantizer — same K fixed centroids as
-    ``q_ann_ivf_topk``), with ``cc`` = rounded cosine to the assigned
-    centroid. Broadcast centroids → K-row amplification then a per-vector
-    window reduce; never a cross product."""
+    pseudo-centroid (the IVF coarse quantizer over the IVF_K fixed
+    centroids), with ``cc`` = rounded cosine to the assigned centroid.
+    Broadcast centroids → K-row amplification then a per-vector window
+    reduce; never a cross product."""
     cents = F.broadcast(
         emb.where(
             (F.col("vec_id") >= CENTROID_LO)
@@ -542,185 +413,14 @@ FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
 """
 
 
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality evaluation: recall@k of the IVF index against the
-    exact brute-force ground truth, per query — the measurement that
-    gates an index config (K, NPROBE) before it serves dedup/search at
-    scale. Pure composition of the two existing operators: the compare
-    join runs on (query_id, neighbor_id) id pairs — O(queries × k) rows,
-    trivially broadcastable.
-
-    Scale note: ground truth is exact brute force, so production runs
-    this on a SAMPLED query set (here: the same N_QUERIES sample both
-    operators already use) — the index serves the full corpus, the
-    recall estimate needs only the sample."""
-    truth = q_ann_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = q_ann_ivf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        truth.join(approx, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    queries = truth.select("query_id").distinct()
-    return queries.join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hits", F.lit(0).cast("bigint")).alias("n_hits"),
-        F.round(
-            F.coalesce("n_hits", F.lit(0).cast("bigint")) / F.lit(TOP_K), 6
-        ).alias("recall_at_k"),
-    )
-
-
-ORACLE_ANN_RECALL = f"""
-WITH truth AS (SELECT query_id, neighbor_id FROM ({ORACLE_ANN_TOPK}) bf),
-approx AS (SELECT query_id, neighbor_id FROM ({ORACLE_ANN_IVF}) ivf),
-hits AS (
-  SELECT t.query_id, count(*) AS n_hits
-  FROM truth t JOIN approx a USING (query_id, neighbor_id)
-  GROUP BY t.query_id)
-SELECT q.query_id,
-       coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-       round(coalesce(h.n_hits, 0) / {TOP_K}::DOUBLE, 6) AS recall_at_k
-FROM (SELECT DISTINCT query_id FROM truth) q
-LEFT JOIN hits h USING (query_id)
-"""
-
-
-# --- hybrid retrieval (sparse BM25 + dense cosine, RRF fusion) ----------------
-
-RRF_C = 60          # the standard reciprocal-rank-fusion damping constant
-HYBRID_K = 25       # depth of each retriever's candidate list
-DENSE_QUERY_ID = 0  # the dense query vector (one of the ANN query sample)
-
-
-def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval: fuse the BM25 keyword list (`q_bm25_topk`) with a
-    dense cosine list for one query vector via reciprocal-rank fusion —
-    score(d) = Σ_lists 1/(C + rank_list(d)), the standard way search
-    stacks combine sparse and dense retrieval without score calibration.
-
-    RRF is integer-native: ranks are ints, each term is 1/(60+rank) over
-    exact ints, and the two terms add in fixed (sparse, dense) order — so
-    scores are bit-identical across engines; docs absent from a list
-    contribute nothing and surface rank 0. The only non-tiny windows rank
-    the candidate LISTS (HYBRID_K rows each — the single-partition window
-    is over 25 rows, not the corpus); the fuse is a full-outer join of two
-    25-row lists. At serving scale both lists come from their indexes
-    (inverted / IVF) and this query is exactly the fusion head."""
-    from ankiocr_spark.datapipe import textstats
-
-    sparse = textstats.q_bm25_topk(spark, sf_dir).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc()))
-        .alias("sparse_rank"),
-    )
-    emb = _load_emb(spark, sf_dir)
-    qv = emb.where(F.col("vec_id") == DENSE_QUERY_ID).select(
-        F.col("emb").alias("q_emb")
-    )
-    dense_scored = (
-        emb.where(F.col("vec_id") != DENSE_QUERY_ID)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            _cos(F.col("q_emb"), F.col("emb")).alias("cosine"),
-        )
-    )
-    dense = (
-        dense_scored.select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.col("cosine").desc(), F.col("doc_id").asc()))
-            .alias("dense_rank"),
-        )
-        .where(F.col("dense_rank") <= HYBRID_K)
-    )
-    fused = sparse.join(dense, "doc_id", "full_outer").select(
-        "doc_id",
-        F.coalesce("sparse_rank", F.lit(0)).alias("sparse_rank"),
-        F.coalesce("dense_rank", F.lit(0)).alias("dense_rank"),
-        (
-            F.when(
-                F.col("sparse_rank").isNotNull(),
-                F.lit(1.0) / (F.lit(RRF_C) + F.col("sparse_rank")),
-            ).otherwise(F.lit(0.0))
-            + F.when(
-                F.col("dense_rank").isNotNull(),
-                F.lit(1.0) / (F.lit(RRF_C) + F.col("dense_rank")),
-            ).otherwise(F.lit(0.0))
-        ).alias("_raw"),
-    )
-    return (
-        fused.orderBy(F.col("_raw").desc(), F.col("doc_id").asc())
-        .limit(HYBRID_K)
-        .select(
-            "doc_id", "sparse_rank", "dense_rank", F.round("_raw", 6).alias("rrf")
-        )
-    )
-
-
-def _hybrid_oracle() -> str:
-    from ankiocr_spark.datapipe.textstats import ORACLE_BM25
-
-    return f"""
-WITH sparse AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS sparse_rank
-  FROM ({ORACLE_BM25})),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-dense_scored AS (
-  SELECT n.vec_id AS doc_id,
-         round(list_sum(list_transform(list_zip(q.emb, n.emb), x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(q.emb, x -> x * x)))
-                * sqrt(list_sum(list_transform(n.emb, x -> x * x)))),
-         6) AS cosine
-  FROM e q, e n
-  WHERE q.vec_id = {DENSE_QUERY_ID} AND n.vec_id <> {DENSE_QUERY_ID}),
-dense_all AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS dense_rank
-  FROM dense_scored),
-dense AS (SELECT doc_id, dense_rank FROM dense_all WHERE dense_rank <= {HYBRID_K}),
-fused AS (
-  SELECT doc_id,
-         coalesce(s.sparse_rank, 0) AS sparse_rank,
-         coalesce(d.dense_rank, 0) AS dense_rank,
-         (CASE WHEN s.sparse_rank IS NOT NULL
-               THEN 1.0::DOUBLE / ({RRF_C} + s.sparse_rank)
-               ELSE 0.0::DOUBLE END
-        + CASE WHEN d.dense_rank IS NOT NULL
-               THEN 1.0::DOUBLE / ({RRF_C} + d.dense_rank)
-               ELSE 0.0::DOUBLE END) AS raw
-  FROM sparse s FULL OUTER JOIN dense d USING (doc_id))
-SELECT doc_id, sparse_rank, dense_rank, round(raw, 6) AS rrf
-FROM fused
-ORDER BY raw DESC, doc_id ASC
-LIMIT {HYBRID_K}
-"""
-
-
-ORACLE_HYBRID_RRF = _hybrid_oracle()
-
-
 QUERIES = {
     "ann_topk_bruteforce": q_ann_topk_bruteforce,
-    "hybrid_rrf": q_hybrid_rrf,
     "neardup_cosine": q_neardup_cosine,
-    "ann_lsh_buckets": q_ann_lsh_buckets,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_recall": q_ann_recall,
     "semdedup": q_semdedup,
 }
 
 ORACLE_SQL = {
     "ann_topk_bruteforce": ORACLE_ANN_TOPK,
-    "hybrid_rrf": ORACLE_HYBRID_RRF,
     "neardup_cosine": ORACLE_NEARDUP,
-    "ann_lsh_buckets": ORACLE_ANN_LSH,
-    "ann_ivf_topk": ORACLE_ANN_IVF,
-    "ann_recall": ORACLE_ANN_RECALL,
     "semdedup": ORACLE_SEMDEDUP,
 }

@@ -337,8 +337,8 @@ LIMIT {BPE_PAIR_TOP}
 
 #: quantization grain for float per-doc scores folded into corpus means —
 #: sums of quantized BIGINTs are exact and order-independent, so the
-#: report is immune to the float-partial-agg-order trap (bm25 docstring);
-#: the one division back to double happens on the final one-row relation.
+#: report is immune to the float-partial-agg-order trap; the one division
+#: back to double happens on the final one-row relation.
 _HEALTH_Q = 1_000_000
 
 
@@ -433,135 +433,6 @@ SELECT n_docs, n_empty, total_tokens, distinct_texts,
        round(qsum::DOUBLE / qn / {float(_HEALTH_Q)}::DOUBLE, 6) AS mean_quality
 FROM agg
 """
-
-
-# --- BM25 retrieval scoring ---------------------------------------------------
-
-#: fixed keyword query for the retrieval benchmark — terms from the fixture
-#: generator's vocabulary so every sf has hits.
-BM25_QUERY = ("spark", "query", "table")
-BM25_K1 = 1.2
-BM25_B = 0.75
-BM25_TOP_K = 25
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-k document retrieval for a fixed keyword query —
-    the scoring function behind keyword search over the corpus (and the
-    sparse half of hybrid retrieval next to the ANN queries).
-
-    Cross-engine float discipline: per-term scores are summed in FIXED
-    query order inside one projection (never a float sum aggregate, whose
-    partial-agg order is nondeterministic), and every input to the double
-    math is an exact integer (tf, dl, df, N) or a shared literal — so the
-    only cross-engine float risk left is the idf log itself (JVM Math.log
-    vs DuckDB libm ln are each ~1-ulp accurate and MAY differ; ADVICE
-    r4). The round(·,6) emitted scores and the top-k cut are robust to
-    that ulp unless a score sits exactly on a boundary — not the case on
-    any shipped fixture (parity-swept each round); ties (duplicate docs)
-    break on doc_id, never on the float.
-
-    Scale shape: tf/dl are per-row array ops over ONE projected token
-    array (zero shuffle); corpus stats (N, Σdl, per-term df) are a second
-    pruned scan folding to ONE row — at index time these stats are
-    precomputed once and amortized over every query, which is why they
-    are driver scalars here, not a third join branch; top-k compiles to
-    TakeOrderedAndProject (per-partition heaps). A production engine adds
-    an inverted index (`tfidf_top_terms` is the posting builder); this is
-    the scorer, exact by construction."""
-    base = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # token array projected ONCE below its consumers (HOF lambdas have no
-    # codegen CSE)
-    toks = base.select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("_toks")
-    )
-
-    # NB: a two-parameter lambda is the (element, index) form to F.filter,
-    # so the term must bind via function scope, not a default argument.
-    def _tf(term: str):
-        return F.size(F.filter("_toks", lambda x: x == F.lit(term))).cast("bigint")
-
-    per_doc = toks.select(
-        "doc_id",
-        F.size("_toks").cast("bigint").alias("dl"),
-        *[_tf(t).alias(f"tf{i}") for i, t in enumerate(BM25_QUERY)],
-    )
-    stats = per_doc.agg(
-        F.count("*").alias("n"),
-        F.sum("dl").alias("total_dl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("int")).alias(f"df{i}")
-            for i in range(len(BM25_QUERY))
-        ],
-    ).first()
-    n_docs, total_dl = int(stats["n"]), int(stats["total_dl"])
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0)
-        - F.lit(BM25_B)
-        + F.lit(BM25_B)
-        * (F.col("dl").cast("double") / (F.lit(total_dl) / F.lit(n_docs)))
-    )
-    score = None
-    for i in range(len(BM25_QUERY)):
-        df_i = int(stats[f"df{i}"])
-        idf = F.log(
-            (F.lit(n_docs - df_i) + F.lit(0.5)) / (F.lit(df_i) + F.lit(0.5))
-            + F.lit(1.0)
-        )
-        s_i = idf * (
-            (F.col(f"tf{i}") * F.lit(BM25_K1 + 1.0)) / (F.col(f"tf{i}") + norm)
-        )
-        score = s_i if score is None else score + s_i
-    scored = per_doc.select(
-        "doc_id", F.col("dl").alias("n_tokens"), score.alias("_raw")
-    )
-    return (
-        scored.orderBy(F.col("_raw").desc(), F.col("doc_id").asc())
-        .limit(BM25_TOP_K)
-        .select("doc_id", "n_tokens", F.round("_raw", 6).alias("bm25"))
-    )
-
-
-def _bm25_oracle() -> str:
-    k1, b, k1p1 = BM25_K1, BM25_B, BM25_K1 + 1.0
-    tf_cols = ",\n         ".join(
-        f"len(list_filter(toks, x -> x = '{t}'))::BIGINT AS tf{i}"
-        for i, t in enumerate(BM25_QUERY)
-    )
-    df_cols = ", ".join(
-        f"sum((tf{i} > 0)::INT)::BIGINT AS df{i}" for i in range(len(BM25_QUERY))
-    )
-    terms = " + ".join(
-        f"(ln(((n_docs - df{i}) + 0.5::DOUBLE) / (df{i} + 0.5::DOUBLE)"
-        f" + 1.0::DOUBLE)"
-        f" * ((tf{i} * {k1p1}::DOUBLE)"
-        f" / (tf{i} + {k1}::DOUBLE * ((1.0::DOUBLE - {b}::DOUBLE)"
-        f" + {b}::DOUBLE * (dl / (total_dl / n_docs))))))"
-        for i in range(len(BM25_QUERY))
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS toks
-  FROM documents WHERE text IS NOT NULL),
-per_doc AS (
-  SELECT doc_id,
-         len(toks)::BIGINT AS dl,
-         {tf_cols}
-  FROM toks),
-stats AS (
-  SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS total_dl, {df_cols}
-  FROM per_doc),
-scored AS (
-  SELECT doc_id, dl AS n_tokens, {terms} AS raw
-  FROM per_doc CROSS JOIN stats)
-SELECT doc_id, n_tokens, round(raw, 6) AS bm25
-FROM scored
-ORDER BY raw DESC, doc_id ASC
-LIMIT {BM25_TOP_K}
-"""
-
-
-ORACLE_BM25 = _bm25_oracle()
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,8 +656,7 @@ FROM m
 #: weight-table size for the hashed linear classifier: token → bucket in
 #: [-CLF_HALF, +CLF_HALF] milli-units. 2·1000+1 buckets keeps every weight
 #: an exact small integer, so per-doc weight sums are integer-exact across
-#: engines (float weight sums are partial-agg-order-dependent — the same
-#: discipline as bm25_topk's fixed-order term sum).
+#: engines (float weight sums are partial-agg-order-dependent).
 CLF_HALF = 1000
 CLF_MOD = 2 * CLF_HALF + 1
 
@@ -909,7 +779,7 @@ def nb_train_score(docs: DataFrame) -> DataFrame:
     per-doc integer aggregation. Weights are micro-nat integers, so the
     per-doc sum is engine-exact GIVEN identical fitted weights, and the
     single float division runs once per output row. Residual float
-    caveat (the tfidf/bm25 class, r5 review): the weight FIT itself
+    caveat (the tfidf class, r5 review): the weight FIT itself
     rounds a float log difference to the nearest micro-nat per bucket —
     JVM Math.log vs DuckDB ln are each ~1-ulp accurate, so a bucket
     whose scaled log-odds lands within an ulp of a .5 boundary could
@@ -1111,7 +981,6 @@ QUERIES = {
     "zipf_alpha": q_zipf_alpha,
     "bpe_pair_counts": q_bpe_pair_counts,
     "corpus_health": q_corpus_health,
-    "bm25_topk": q_bm25_topk,
     "classifier_score": q_classifier_score,
     "classifier_train": q_classifier_train,
     "token_entropy": q_token_entropy,
@@ -1129,7 +998,6 @@ ORACLE_SQL = {
     "zipf_alpha": ORACLE_ZIPF,
     "bpe_pair_counts": ORACLE_BPE_PAIRS,
     "corpus_health": ORACLE_CORPUS_HEALTH,
-    "bm25_topk": ORACLE_BM25,
     "classifier_score": ORACLE_CLASSIFIER,
     "classifier_train": ORACLE_CLASSIFIER_TRAIN,
     "token_entropy": ORACLE_ENTROPY,

@@ -195,12 +195,35 @@ _MARKED_CLOSE_MS = re.compile(r"]\s*>")
 _SECT_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
 _SECT_MS = frozenset({"if", "else", "endif"})
 
-#: _Segmenter.tail: a NUL after a last tag-name character (tagfind_tolerant)
+#: raw_tail_pieces: a NUL after a last tag-name character (tagfind_tolerant)
 #: from which the attribute scan (locatestarttagend_tolerant) cannot go
 #: on, as it is neither a quote nor whitespace
 _RAW_NAME_END = re.compile("[^\\s'\"/>\\x00](?=\\x00)")
 #: the characters that end a tag-name run, '>' aside
 _NAME_STOPS = "\t\n\r\f /\x00"
+
+
+def raw_tail_pieces(s: str, i: int):
+    """Yield ``(start, end)`` of each piece of ``s[i:]``, where no '>'
+    follows, that the stdlib parser emits raw; the text around them is
+    data, charref-unescaped. No tag, comment or declaration can close
+    there, so the stdlib reads each construct as data through its
+    incomplete-data fallback, cut only at '<', which no charref spans.
+    One start tag differs: when its name run ends at a NUL right after a
+    character that is neither a quote nor whitespace, its attribute scan
+    stops at that NUL, and the stdlib emits ``<name`` raw
+    (parse_starttag's handle_data, no unescape). Every '<' in a name run
+    reaches the same NUL, so the first one opens the raw piece. Each such
+    NUL and the run before it are read once: a run of unclosed constructs
+    costs one pass, where the stdlib's scan per construct is quadratic."""
+    lo = i  # no name run crosses lo: it is i or a NUL
+    while (m := _RAW_NAME_END.search(s, lo)) is not None:
+        nul = m.end()
+        run = max(lo, *(s.rfind(c, lo, nul) + 1 for c in _NAME_STOPS))
+        tag = _STARTTAG_OPEN.search(s, run, nul)
+        if tag is not None:
+            yield tag.start(), nul
+        lo = nul
 
 
 def _flush(segments, pieces, link_pieces, tag: str, norm) -> None:
@@ -275,28 +298,12 @@ class _Segmenter:
         return k
 
     def tail(self, i: int, anchor_depth: int) -> None:
-        """Emit the page from ``i`` on, where no '>' follows. No tag,
-        comment or declaration can close there, so the stdlib reads each
-        construct as data through its incomplete-data fallback, cut only
-        at '<', which no charref spans. One start tag differs: when its
-        name run ends at a NUL right after a character that is neither a
-        quote nor whitespace, its attribute scan stops at that NUL, and
-        the stdlib emits ``<name`` raw (parse_starttag's handle_data, no
-        unescape). Every '<' in a name run reaches the same NUL, so the
-        first one opens the raw piece. Each such NUL and the run before
-        it are read once: a run of unclosed constructs costs one pass,
-        where a scan per construct would be quadratic."""
+        """Emit the page from ``i`` on, where no '>' follows."""
         s = self.s
-        lo = i  # no name run crosses lo: it is i or a NUL
-        while (m := _RAW_NAME_END.search(s, lo)) is not None:
-            nul = m.end()
-            run = max(lo, *(s.rfind(c, lo, nul) + 1 for c in _NAME_STOPS))
-            tag = _STARTTAG_OPEN.search(s, run, nul)
-            if tag is not None:
-                self.emit(s[i:tag.start()], anchor_depth)
-                self.emit(s[tag.start():nul], anchor_depth, raw=True)
-                i = nul
-            lo = nul
+        for j, nul in raw_tail_pieces(s, i):
+            self.emit(s[i:j], anchor_depth)
+            self.emit(s[j:nul], anchor_depth, raw=True)
+            i = nul
         self.emit(s[i:], anchor_depth)
 
     def general(self, i: int, stop: int, anchor_depth: int, segment_tag: str):

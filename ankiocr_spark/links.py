@@ -14,6 +14,7 @@ Arrow-batched only (mapInPandas), one output row per link.
 
 from __future__ import annotations
 
+from html import unescape
 from html.parser import HTMLParser
 from typing import List, Tuple
 from urllib.parse import urljoin
@@ -21,7 +22,7 @@ from urllib.parse import urljoin
 from pyspark.sql import DataFrame, SparkSession
 
 from .job import page_rows
-from .kernel import _decode
+from .kernel import _decode, raw_tail_pieces
 
 
 class _AnchorParser(HTMLParser):
@@ -66,7 +67,18 @@ class _AnchorParser(HTMLParser):
             self._flush()
 
     def close(self) -> None:
-        super().close()
+        rest = self.rawdata
+        if ">" in rest or self.cdata_elem is not None:
+            super().close()
+        else:
+            # the stdlib's close() reads a no-'>' tail as data too, but
+            # re-scans the rest of the page once per construct
+            i = 0
+            for j, nul in raw_tail_pieces(rest, 0):
+                self.handle_data(unescape(rest[i:j]))
+                self.handle_data(rest[j:nul])
+                i = nul
+            self.handle_data(unescape(rest[i:]))
         self._flush()  # page truncated mid-anchor
 
 

@@ -68,8 +68,6 @@ SECONDARY = [
     # step itself adds one broadcast join + one cluster-partitioned
     # window either way.
     ("vocab_topn", False),
-    ("bm25_topk", False),
-    ("hybrid_rrf", False),
     ("classifier_score", False),
     ("url_latest", False),
     ("dsir_weight", False),

@@ -36,9 +36,7 @@ AUDIT = [
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
     "ann_topk_bruteforce",
-    "ann_ivf_topk",
     "neardup_cosine",
-    "ann_lsh_buckets",
     "dedup_simhash",
     "token_count",
     "pdf_extract",
@@ -67,14 +65,10 @@ AUDIT = [
     "seq_pack",
     "train_val_split",
     "crossdedup_lsh",
-    "rag_chunk",
     "robots_policy",
-    "ann_recall",
     "boilerplate_strip",
     "cluster_keeper",
     "vocab_topn",
-    "bm25_topk",
-    "hybrid_rrf",
     "classifier_score",
     "url_latest",
     "dsir_weight",

@@ -507,3 +507,72 @@ def test_extract_links_matches_reference_href_parser():
         ref.close()
         got = [h for _, h, _ in extract_links("https://e.org/d/", page)]
         assert got == ref.hrefs, page
+
+
+def _stdlib_close_anchors(page):
+    """``_anchors`` with the stdlib's own ``HTMLParser.close`` in place of
+    ``_AnchorParser.close``'s one-pass read of a no-'>' tail."""
+    from html.parser import HTMLParser
+
+    from ankiocr_spark.kernel import _decode
+    from ankiocr_spark.links import _AnchorParser
+
+    p = _AnchorParser()
+    p.feed(_decode(page))
+    HTMLParser.close(p)
+    p._flush()
+    return p.pairs
+
+
+def test_anchor_tail_matches_stdlib_close():
+    """Seeded differential sweep of the no-'>' tail read against the
+    stdlib close path: the same (href, anchor text) pairs. Each page is a
+    head of any pieces (anchors left open among them) and a tail with no
+    '>': unclosed start tags, NULs, charrefs split across pieces,
+    unterminated raw text. Pages on which the stdlib raises (an unknown
+    marked section such as `<![x`) are skipped."""
+    import random
+
+    from ankiocr_spark.links import _AnchorParser, _anchors
+
+    tail = [
+        "<a ", "\x00", "&am", "p;", "<script>unterminated", "<a href=/b ",
+        "<a", "<A HREF=x", "</a ", "text ", "&amp;", "<", "</", "<!--",
+        "<!x", "<?", "<![cdata", "<p", "=", "'", '"', "/", " ", "\n", "x",
+    ]
+    head = tail + ['<a href="/open">', '<a href="#f">', "</a>", "<b>",
+                   "<style>", ">"]
+    rng = random.Random(20261019)
+    compared = fast = 0
+    for _ in range(4000):
+        page = "".join(
+            [rng.choice(head) for _ in range(rng.randint(0, 8))]
+            + [rng.choice(tail) for _ in range(rng.randint(1, 30))]
+        )
+        try:
+            want = _stdlib_close_anchors(page)
+        except AssertionError:
+            continue
+        assert _anchors(page) == want, repr(page)
+        compared += 1
+        p = _AnchorParser()
+        p.feed(page)
+        fast += ">" not in p.rawdata and p.cdata_elem is None
+    assert compared > 3500 and fast > 2000, (compared, fast)
+
+
+def test_anchor_tail_stays_linear():
+    """12 KB of unclosed `<a ` tags, alone and followed by a NUL, parse
+    within 10x the time of a benign page of the same size: the stdlib's
+    close() re-scanned the rest of the page per tag (~2 s each)."""
+    import timeit
+
+    from ankiocr_spark.links import _anchors
+
+    def best(page):
+        return min(timeit.repeat(lambda: _anchors(page), number=1, repeat=3))
+
+    unit = '<p><a href="/x">link</a> text</p>'
+    for page in ("<a " * 4000, "<a " * 4000 + "\x00"):
+        benign = (unit * (len(page) // len(unit) + 1))[: len(page)]
+        assert best(page) < 10 * best(benign), repr(page[-8:])

@@ -104,6 +104,9 @@ def test_driver_window_holds_every_unproven_query():
     # name as a KeyError when their script runs
     assert set(entrymod._FRONT) <= set(names)
     assert set(entrymod._TAIL) <= set(names)
+    # every exported query is pinned exactly once: no middle block, no
+    # name in both lists or twice in one
+    assert sorted(entrymod._FRONT + entrymod._TAIL) == sorted(names)
     import bench
     from scripts import audit_plans
 

@@ -81,41 +81,6 @@ def test_train_val_split_is_stable(spark, sf_dir):
     assert a == b
 
 
-def test_rag_chunk_matches_python_recompute(spark, sf_dir):
-    """Third-implementation check: chunk geometry (count, per-chunk token
-    count) recomputed in plain Python from the same tokenization must
-    match — independent of both Spark and the DuckDB oracle mirroring
-    each other's arithmetic."""
-    W, S = packing.RAG_WINDOW, packing.RAG_STRIDE
-    docs = {
-        r["doc_id"]: r["text"].split(" ")
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-        if r["text"] is not None
-    }
-    got = {}
-    for r in packing.q_rag_chunk(spark, sf_dir).collect():
-        got.setdefault(r["doc_id"], {})[r["chunk_idx"]] = r["chunk_tokens"]
-    assert set(got) == set(docs)
-    for doc_id, toks in docs.items():
-        n = len(toks)
-        n_chunks = 1 if n <= W else -((n - W) // -S) + 1  # ceil div
-        expect = {
-            i: min(W, n - i * S) for i in range(n_chunks)
-        }
-        assert got[doc_id] == expect, doc_id
-        # overlap property: consecutive chunks share W-S tokens (full ones)
-        assert all(v >= 1 for v in expect.values())
-
-
-def test_rag_chunk_plan_has_no_exchange(spark, sf_dir):
-    """The chunker is a pure map-side projection: tokenize → explode →
-    slice/hash with ZERO shuffles (the property that makes it free at
-    100 TB)."""
-    df = packing.q_rag_chunk(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 def test_crossdedup_drops_exact_cross_parity_copies(spark, sf_dir):
     """Ground truth the hash-parity check can't state: any NEW (odd) doc
     whose text equals some REF (even) doc's text shares ALL bands with it

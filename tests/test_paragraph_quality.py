@@ -109,61 +109,6 @@ def test_vocab_topn_matches_counter(spark, sf_dir):
     assert sorted(got) == sorted(expected)
 
 
-def test_bm25_topk_matches_python(spark, sf_dir):
-    import math
-
-    import duckdb
-
-    from ankiocr_spark.datapipe.textstats import (
-        BM25_B,
-        BM25_K1,
-        BM25_QUERY,
-        BM25_TOP_K,
-        q_bm25_topk,
-    )
-
-    docs = {
-        doc_id: [t for t in text.split(" ") if t]
-        for doc_id, text in duckdb.sql(
-            f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
-            "WHERE text IS NOT NULL"
-        ).fetchall()
-    }
-    n = len(docs)
-    avgdl = sum(len(t) for t in docs.values()) / n
-    df = {t: sum(1 for toks in docs.values() if t in toks) for t in BM25_QUERY}
-    scored = []
-    for doc_id, toks in docs.items():
-        s = 0.0
-        for t in BM25_QUERY:
-            tf = toks.count(t)
-            idf = math.log((n - df[t] + 0.5) / (df[t] + 0.5) + 1.0)
-            s += idf * (tf * (BM25_K1 + 1.0)) / (
-                tf + BM25_K1 * (1.0 - BM25_B + BM25_B * len(toks) / avgdl)
-            )
-        scored.append((doc_id, len(toks), s))
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    expected = [(d, dl, round(s, 6)) for d, dl, s in scored[:BM25_TOP_K]]
-    got = [
-        (r["doc_id"], r["n_tokens"], round(r["bm25"], 6))
-        for r in q_bm25_topk(spark, sf_dir).collect()
-    ]
-    assert got == expected
-
-
-def test_bm25_plan_is_shuffle_free(spark, sf_dir):
-    """BM25 scoring must stay a pure map-side projection + top-k heap:
-    tf/dl are array ops over one projected token array, the top-k is
-    TakeOrderedAndProject — zero Exchange (the property that makes the
-    scorer free at corpus scale; stats fold in a separate pruned pass)."""
-    from ankiocr_spark.datapipe.textstats import q_bm25_topk
-
-    df = q_bm25_topk(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_classifier_score_matches_python(spark, sf_dir):
     """Independent md5-weight reimplementation + the keep ⇔ Σw ≥ 0
     contract (the gate compares the INTEGER sum, so the boundary is
