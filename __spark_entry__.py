@@ -41,11 +41,7 @@ _FRONT = [
     "robots_txt_filter",
     "split_leakage",
     "crawl_schedule",
-    "zipf_alpha",
-    "bpe_pair_counts",
     "perplexity_buckets",
-    "corpus_health",
-    "gate_funnel",
     "page_metadata",
     "html_tables",
     "canonical_collapse",
@@ -71,29 +67,24 @@ _FRONT = [
     "train_val_split",
     "crossdedup_lsh",
     "boilerplate_strip",
-    "vocab_topn",
     "classifier_score",
     "url_latest",
     "dsir_weight",
     "c4_filter",
     "badwords_filter",
     "token_entropy",
-    "signal_correlation",
     "pii_redact",
     "repetition_filter",
     "tfidf_top_terms",
-]
-
-_TAIL = [
     "anchor_texts",
     "incremental_extract",
     "lm_perplexity",
-    "quality_percentiles",
-    "host_length_rank",
     "robots_policy",
     "run_metrics",
     "outlinks_pagerank",
-    "stream_host_tracker",
+]
+
+_TAIL = [
     "merge_upsert",
     "resumable_extract",
     "dedup_ngram_jaccard",
@@ -104,7 +95,6 @@ _TAIL = [
     "training_set_select",
     "pagerank",
     "stream_extract",
-    "stream_window_stats",
     "url_normalize",
     "dedup_simhash",
     "stream_dedup",

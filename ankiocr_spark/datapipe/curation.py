@@ -344,8 +344,8 @@ _MIX_REDUCE = 2147483648  # 2^31 — keeps (doc_id % R) * MULT < 2^63
 def sql_mix_draw(col: str) -> str:
     """DuckDB twin of `mix_draw` over id column *col* — the ONE copy every
     oracle interpolates (domain_mix_sample, lm_perplexity's sample gate,
-    the curation e2e, the gate funnel), so a Spark-side constant change
-    cannot silently outrun a hand-mirrored SQL fragment (r5 review)."""
+    the curation e2e), so a Spark-side constant change cannot silently
+    outrun a hand-mirrored SQL fragment (r5 review)."""
     return (
         f"((((({col}) % {_MIX_REDUCE} + {_MIX_REDUCE}) % {_MIX_REDUCE})"
         f" * {_MIX_MULT}) % {_MIX_MOD})::DOUBLE / {float(_MIX_MOD)}::DOUBLE"
@@ -755,7 +755,6 @@ FROM pages
 #: the host's documents. Integer form (2*df >= n_docs) so Spark and the
 #: DuckDB oracle compare exactly — no float-threshold divergence.
 BOILER_DF_NUM, BOILER_DF_DEN = 1, 2
-_NAV_LINE_FMT = "nav {} home about contact login"
 _PROMO_LINE = "promo subscribe to the newsletter today"
 PROMO_MOD = 3
 
@@ -1005,9 +1004,9 @@ _C4_CTA = "click here now"
 _C4_JS_LINE = "javascript is required to view this site please enable it today"
 
 #: DuckDB twin of `c4_line_ok` (lambda variable ``x``) — the ONE copy every
-#: oracle interpolates (ORACLE_C4, the curation e2e, the gate funnel), built
-#: from the same constants as the Spark expression so a rule change cannot
-#: silently outrun a hand-mirrored SQL fragment (r5 review).
+#: oracle interpolates (ORACLE_C4, the curation e2e), built from the same
+#: constants as the Spark expression so a rule change cannot silently
+#: outrun a hand-mirrored SQL fragment (r5 review).
 SQL_C4_LINE_OK = (
     "list_contains(["
     + ", ".join(f"'{t}'" for t in C4_TERMINALS)
@@ -1274,9 +1273,8 @@ def q_domain_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness discipline: the per-host aggregation sums INTEGERS only
     (docs, chars, tokens, bad-token hits) — order-independent across
     partial aggregation — and the float score is computed once per host
-    row from those exact totals, then rounded (the signal_correlation
-    precedent). score = 0.5·min(1, avg_chars/cap) + 0.5·max(0, 1 −
-    amp·bad_rate).
+    row from those exact totals, then rounded. score = 0.5·min(1,
+    avg_chars/cap) + 0.5·max(0, 1 − amp·bad_rate).
 
     Scale shape: ONE map-side-combined exchange to the host grain
     (hosts ≪ docs), then the host verdicts broadcast back onto the

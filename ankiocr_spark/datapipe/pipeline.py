@@ -1,12 +1,12 @@
 """Composed end-to-end pipeline queries over the flagship extract output.
 
 These are the queries a real 100-TB training-data user runs (VERDICT r3
-items #3 and #6): the full extract → quality-gate → dedup → decontaminate
-→ select composition in ONE plan, and a user-facing window function over
-the extract table. Every stage is individually closed-form oracle-able
-(the flagship kernel's CASE form, the shared gate expressions from
-textstats, the shingle definition from dedup), so the composition is too
-— the same technique as outlinks_pagerank.
+item #3): the full extract → quality-gate → dedup → decontaminate →
+select composition in ONE plan, and the extract → C4 → bad-words →
+classifier → mix → pack curation chain. Every stage is individually
+closed-form oracle-able (the flagship kernel's CASE form, the shared
+gate expressions from textstats, the shingle definition from dedup), so
+the composition is too — the same technique as outlinks_pagerank.
 
 Reference analog: the full-pipeline e2e test
 (/root/reference/tests/test_ocr.py:80-85) runs OCR → field update →
@@ -184,53 +184,6 @@ WHERE url NOT IN (SELECT url FROM contaminated)
 """
 
 
-def q_host_length_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-facing window function over the extract table (VERDICT r3 #6):
-    dense_rank of pages per host by extracted length. Pages get
-    deterministic multi-host urls (doc_id % 7 hosts) so the partition
-    clause does real work; ties share a rank (dense_rank over length
-    alone), which keeps the result a pure function of (host, length).
-
-    Scale shape: ONE window exchange on host over the kernel output —
-    the standard per-host leaderboard every crawl-ops dashboard runs."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    pages = docs.select(
-        F.concat(
-            F.lit("https://h"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".example.org/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-        wrap_html(F.col("text")).alias("html"),
-        F.col("lang"),
-    )
-    ext = run_extract(spark, pages, ExtractConfig(salt_buckets=8)).select(
-        "url", "extracted_text"
-    )
-    w = Window.partitionBy("host").orderBy(F.desc("n_chars_extracted"))
-    return ext.select(
-        "url",
-        F.regexp_extract("url", r"^https://([^/]+)/", 1).alias("host"),
-        F.length("extracted_text").alias("n_chars_extracted"),
-    ).withColumn("length_rank", F.dense_rank().over(w))
-
-
-def _oracle_host_length_rank() -> str:
-    return f"""
-WITH ext AS (
-  SELECT 'https://h' || (doc_id % 7) || '.example.org/doc/' || doc_id AS url,
-         'h' || (doc_id % 7) || '.example.org' AS host,
-         length(CASE WHEN length(trim(text)) >= 25
-                THEN '{H1_TEXT}' || chr(10) || trim(text)
-                ELSE '{H1_TEXT}' END) AS n_chars_extracted
-  FROM documents WHERE text IS NOT NULL)
-SELECT url, host, n_chars_extracted,
-       dense_rank() OVER (PARTITION BY host ORDER BY n_chars_extracted DESC)
-           AS length_rank
-FROM ext
-"""
-
-
 #: per-language acceptance rates consumed by the composed pipeline's mix
 #: stage — a PRECOMPUTED artifact (the materialized output of a rate job
 #: like q_domain_mix_sample's counts stage), exactly how a 100-TB run
@@ -405,149 +358,12 @@ FROM spans GROUP BY chunk_id
 """
 
 
-# ---------------------------------------------------------------------------
-# Gate-funnel ablation report — per-gate kill accounting over ONE scan
-# ---------------------------------------------------------------------------
-
-
-def q_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate-ablation funnel: the one-row report every curation owner
-    reads before touching a threshold — how many documents survive each
-    gate cumulatively in pipeline order (C4 → bad-words → classifier →
-    mixture draw), and how many each gate kills STANDALONE (its kill set
-    ignoring the other gates). Cumulative-vs-standalone is the ablation
-    pair: a gate whose standalone kills are all already dead upstream is
-    free to drop; one whose cumulative step is large is doing unique
-    work. (Semantics note: this composes the STANDALONE per-doc verdicts
-    — each gate judged on the raw text, exactly as its individual driver
-    query does; `curation_pipeline_e2e` is the PIPELINE semantics where
-    later gates see progressively cleaned text. Both are real tools; the
-    ablation wants independent verdicts.)
-
-    Scale shape: ONE pruned corpus scan; every verdict is the shared
-    codegen gate expression (c4_lines/c4_line_ok, BAD_WORDS, integer
-    clf_token_weight fold, mix_draw) computed in one projection, and the
-    funnel collapses via map-side-partial conditional sums — the only
-    exchange is the metadata-sized one-row collapse. Integer counts end
-    to end: nothing to ulp-flake.
-
-    Reference analog: AnkiOCR's end-of-run processed/errored readout
-    (`gui.py:70-76`), lifted to per-gate corpus accounting."""
-    from .curation import BAD_WORDS, c4_line_ok, c4_lines, mix_draw
-    from .textstats import clf_token_weight
-
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    # project the HOF inputs ONCE below their consumers (no codegen CSE
-    # inside lambdas)
-    staged = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        c4_lines(F.col("text"), F.col("doc_id")).alias("_lines"),
-        F.filter(F.split("text", " "), lambda x: x != "").alias("_toks"),
-    )
-    rate = F.create_map(
-        *[F.lit(x) for kv in CURATION_MIX_RATES.items() for x in kv]
-    )[F.col("lang")]
-    verd = staged.select(
-        (
-            (F.size(F.filter("_lines", c4_line_ok)) > 0)
-            & ~F.col("text").contains("lorem ipsum")
-            & ~F.col("text").contains("{")
-        ).alias("c4"),
-        (
-            F.size(F.filter("_toks", lambda x: x.isin(*BAD_WORDS))) == 0
-        ).alias("bad"),
-        (
-            F.aggregate(
-                "_toks",
-                F.lit(0).cast("bigint"),
-                lambda acc, t: acc + clf_token_weight(t),
-            )
-            >= 0
-        ).alias("clf"),
-        # a lang outside the mixture has NULL rate → draw < NULL is NULL
-        # → must read as FALSE (the e2e drops those langs up front)
-        F.coalesce(
-            mix_draw(F.col("doc_id")) < rate, F.lit(False)
-        ).alias("mix"),
-    )
-
-    def n(cond):
-        return F.sum(cond.cast("int")).cast("bigint")
-
-    c4, bad, clf, mix = (F.col(c) for c in ("c4", "bad", "clf", "mix"))
-    return verd.agg(
-        F.count("*").alias("n_docs"),
-        n(c4).alias("pass_c4"),
-        n(c4 & bad).alias("pass_badwords"),
-        n(c4 & bad & clf).alias("pass_classifier"),
-        n(c4 & bad & clf & mix).alias("pass_mix"),
-        n(~c4).alias("kill_c4"),
-        n(~bad).alias("kill_badwords"),
-        n(~clf).alias("kill_classifier"),
-        n(~mix).alias("kill_mix"),
-    )
-
-
-def _oracle_gate_funnel() -> str:
-    from .curation import (
-        _BAD_LIST, _C4_CTA, _C4_JS_LINE, C4_JS_MOD, C4_PUNCT_MOD,
-        SQL_C4_LINE_OK, sql_c4_doc_gate, sql_mix_draw,
-    )
-    from .textstats import SQL_CLF_TOKEN_WEIGHT
-
-    mix_case = " ".join(
-        f"WHEN '{k}' THEN {v}::DOUBLE"
-        for k, v in CURATION_MIX_RATES.items()
-    )
-    return f"""
-WITH staged AS (
-  SELECT doc_id, lang, text,
-         list_filter([
-           CASE WHEN doc_id % {C4_PUNCT_MOD} = 0 THEN text || '.' ELSE text END,
-           '{_C4_CTA}',
-           CASE WHEN doc_id % {C4_JS_MOD} = 0 THEN '{_C4_JS_LINE}' END
-         ], x -> x IS NOT NULL) AS ls,
-         list_filter(str_split(text, ' '), x -> x <> '') AS toks
-  FROM documents WHERE text IS NOT NULL),
-verd AS (
-  SELECT
-    (len(list_filter(ls, x -> {SQL_C4_LINE_OK})) > 0
-     AND {sql_c4_doc_gate("text")}) AS c4,
-    (len(list_filter(toks, x -> list_contains({_BAD_LIST}, x))) = 0) AS bad,
-    (coalesce(list_sum(list_transform(toks,
-       t -> {SQL_CLF_TOKEN_WEIGHT})), 0) >= 0) AS clf,
-    coalesce(
-      {sql_mix_draw("doc_id")}
-        < CASE lang {mix_case} END,
-      false) AS mix
-  FROM staged)
-SELECT count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN c4 THEN 1 ELSE 0 END)::BIGINT AS pass_c4,
-       sum(CASE WHEN c4 AND bad THEN 1 ELSE 0 END)::BIGINT AS pass_badwords,
-       sum(CASE WHEN c4 AND bad AND clf THEN 1 ELSE 0 END)::BIGINT
-         AS pass_classifier,
-       sum(CASE WHEN c4 AND bad AND clf AND mix THEN 1 ELSE 0 END)::BIGINT
-         AS pass_mix,
-       sum(CASE WHEN NOT c4 THEN 1 ELSE 0 END)::BIGINT AS kill_c4,
-       sum(CASE WHEN NOT bad THEN 1 ELSE 0 END)::BIGINT AS kill_badwords,
-       sum(CASE WHEN NOT clf THEN 1 ELSE 0 END)::BIGINT AS kill_classifier,
-       sum(CASE WHEN NOT mix THEN 1 ELSE 0 END)::BIGINT AS kill_mix
-FROM verd
-"""
-
-
 QUERIES = {
     "training_pipeline_e2e": q_training_pipeline,
-    "host_length_rank": q_host_length_rank,
     "curation_pipeline_e2e": q_curation_pipeline,
-    "gate_funnel": q_gate_funnel,
 }
 
 ORACLE_SQL = {
     "training_pipeline_e2e": _oracle_training_pipeline(),
-    "host_length_rank": _oracle_host_length_rank(),
     "curation_pipeline_e2e": _oracle_curation_pipeline(),
-    "gate_funnel": _oracle_gate_funnel(),
 }

@@ -111,330 +111,6 @@ FROM documents
 """
 
 
-#: vocabulary size for the tokenizer-training corpus sweep (BPE/WordPiece
-#: trainers start from exactly this table: term → corpus frequency).
-VOCAB_TOP_N = 200
-
-
-def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(token, freq): the corpus word count — the ONE tokenization +
-    count definition shared by q_vocab_topn, q_zipf_alpha (via the vocab
-    head) and q_bpe_pair_counts, so the pair table cannot silently drift
-    from the vocabulary it is documented to share (the _tokenized_docs
-    sync discipline; review find). The split delimiter and the
-    empty-token filter are load-bearing for all three oracles."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = docs.select(
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("token")
-    )
-    return toks.groupBy("token").agg(F.count("*").alias("freq"))
-
-
-def q_vocab_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary: the top-N whitespace tokens by total frequency —
-    the word-count pass every tokenizer-training pipeline runs over the
-    cleaned corpus before fitting merges. Full (freq DESC, token ASC)
-    ordering makes the selected SET deterministic across engines even when
-    frequencies tie at the cut.
-
-    Scale shape: the classic map-side-combined word count — ONE exchange
-    of (token, partial count) keys, then ``orderBy().limit()`` compiles to
-    TakeOrderedAndProject (per-partition top-N heaps + a driver merge of
-    N·partitions rows), never a global sort of the vocabulary."""
-    return (
-        _word_counts(spark, sf_dir)
-        .orderBy(F.col("freq").desc(), F.col("token").asc())
-        .limit(VOCAB_TOP_N)
-    )
-
-
-ORACLE_VOCAB = f"""
-SELECT token, count(*)::BIGINT AS freq
-FROM (SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS token
-      FROM documents WHERE text IS NOT NULL)
-GROUP BY token
-ORDER BY freq DESC, token ASC
-LIMIT {VOCAB_TOP_N}
-"""
-
-
-# --- Zipf power-law fit (corpus-health / tokenizer diagnostics) ----------------
-
-#: head size for the Zipf fit: power laws are fit on the frequency HEAD
-#: (the tail is where Zipf breaks down and where counts are noisy);
-#: bounded, so the rank window below runs over ≤ this many rows. The
-#: head is selected from q_vocab_topn's table, so it can never exceed
-#: VOCAB_TOP_N — asserted below, or lowering the vocab knob would
-#: silently shrink the fit in both engine AND oracle (review find).
-ZIPF_TOP = 200
-assert ZIPF_TOP <= VOCAB_TOP_N, "zipf head cannot exceed the vocab table"
-
-#: log quantization grain — micro-nats as BIGINT (the token_entropy
-#: discipline): JVM Math.log and DuckDB libm ln() agree to ~1 ulp
-#: (~1e-15 absolute), so after ×1e6 the values differ by ~1e-9 and the
-#: integer rounding can only disagree within 1e-9 of a .5 boundary —
-#: negligible over a few hundred values; every MOMENT sum is then an
-#: exact integer in both engines, and float math runs once on the
-#: one-row moment relation (the signal_correlation recipe).
-_ZIPF_Q = 1_000_000
-
-
-def q_zipf_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf power-law fit over the corpus token-frequency head: least-
-    squares slope of ln(freq) against ln(rank) for the top ``ZIPF_TOP``
-    tokens — natural text runs alpha ≈ 1 (Zipf 1949), and the fitted
-    exponent is a standard corpus-health / tokenizer diagnostic (a
-    too-flat head means boilerplate or dedup failure; a too-steep one
-    means a collapsed vocabulary — Gopher reports exactly this family of
-    corpus statistics).
-
-    Scale shape: the word count is vocab_topn's ONE map-side-combined
-    exchange + TakeOrderedAndProject head selection; the rank window and
-    the regression run over ≤ ZIPF_TOP rows (the single-partition window
-    is over the bounded head, never the vocabulary), and the five
-    regression moments accumulate as exact integers over quantized logs
-    (see ``_ZIPF_Q``) with the float slope/intercept computed once on
-    the one-row moment relation. Reference analog: AnkiOCR's per-run
-    aggregate stats readout (`gui.py:70-76`), generalized to a
-    distributional corpus diagnostic."""
-    # re-state the order before the head cut: a bare .limit() on an
-    # already-ordered relation is not contractually ordered in either
-    # engine once ZIPF_TOP < VOCAB_TOP_N
-    head = (
-        q_vocab_topn(spark, sf_dir)
-        .orderBy(F.col("freq").desc(), F.col("token").asc())
-        .limit(ZIPF_TOP)
-    )
-    w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
-    ranked = head.select(
-        F.row_number().over(w).alias("rank"), "freq"
-    ).select(
-        F.round(F.log(F.col("rank").cast("double")) * _ZIPF_Q)
-        .cast("bigint")
-        .alias("xq"),
-        F.round(F.log(F.col("freq").cast("double")) * _ZIPF_Q)
-        .cast("bigint")
-        .alias("yq"),
-    )
-    m = ranked.agg(
-        F.count("*").alias("n"),
-        F.sum("xq").alias("sx"),
-        F.sum("yq").alias("sy"),
-        F.sum(F.col("xq") * F.col("xq")).alias("sxx"),
-        F.sum(F.col("xq") * F.col("yq")).alias("sxy"),
-    )
-    slope = (
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    )
-    intercept = (
-        (F.col("sy") - slope * F.col("sx"))
-        / F.col("n") / F.lit(float(_ZIPF_Q))
-    )
-    return m.select(
-        F.col("n").alias("n_head_tokens"),
-        F.round(-slope, 6).alias("zipf_alpha"),
-        F.round(intercept, 6).alias("ln_c"),
-    )
-
-
-ORACLE_ZIPF = f"""
-WITH head AS (SELECT token, freq FROM ({ORACLE_VOCAB})
-              ORDER BY freq DESC, token ASC LIMIT {ZIPF_TOP}),
-ranked AS (
-  SELECT round(ln((row_number() OVER (ORDER BY freq DESC, token ASC))::DOUBLE)
-               * {_ZIPF_Q})::BIGINT AS xq,
-         round(ln(freq::DOUBLE) * {_ZIPF_Q})::BIGINT AS yq
-  FROM head),
-m AS (
-  SELECT count(*)::BIGINT AS n, sum(xq)::BIGINT AS sx, sum(yq)::BIGINT AS sy,
-         sum(xq * xq)::BIGINT AS sxx, sum(xq * yq)::BIGINT AS sxy
-  FROM ranked)
-SELECT n AS n_head_tokens,
-       round(-((n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)), 6)
-         AS zipf_alpha,
-       round(((sy - ((n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)) * sx)
-              / n / {_ZIPF_Q}::DOUBLE), 6) AS ln_c
-FROM m
-"""
-
-
-# --- BPE merge-pair counting (tokenizer training, iteration 0) -----------------
-
-#: head size for the reported merge-pair table — the BPE trainer only
-#: ever needs the argmax pair per iteration; reporting a ranked head
-#: keeps the driver result bounded while exercising the same plan.
-BPE_PAIR_TOP = 150
-
-
-def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training, iteration 0: corpus-wide frequencies of
-    adjacent character pairs, weighted by word frequency — the pair table
-    whose argmax is the first BPE merge (Sennrich et al. 2016). Every
-    BPE/SentencePiece trainer starts from exactly this table.
-
-    Scale shape — the trainer trick that makes BPE feasible at corpus
-    scale: pairs are counted over the DISTINCT-WORD relation (word →
-    corpus frequency), never over the raw token stream. The corpus pays
-    ONE map-side-combined word-count exchange (the vocab_topn stage);
-    the pair explode then runs over |vocab| rows (≪ corpus tokens), and
-    the pair aggregate is a second map-side-combined exchange over
-    |vocab|·avg_word_len keys — both metadata-sized next to the corpus.
-    The ranked head compiles to TakeOrderedAndProject (per-partition
-    heaps, no global sort). Production BPE iterates: apply the argmax
-    merge to the word table (a row-local string rewrite of |vocab| rows)
-    and re-count — the corpus-scale stage never reruns, and the loop
-    cache-rotates the word table like the pagerank iterator.
-    words of length 1 contribute no pairs and are filtered before the
-    explode (Spark's ``sequence(1, 0)`` would step BACKWARD to [1, 0],
-    unlike DuckDB's empty ``generate_series(1, 0)``).
-
-    Reference analog: AnkiOCR builds its per-language recognition
-    alphabet once per batch run (`ocr.py:60-66` languages → tessdata
-    config); this is the corpus-statistics pass a from-scratch tokenizer
-    needs at 10^12 docs."""
-    words = (
-        _word_counts(spark, sf_dir)
-        .select(F.col("token").alias("word"), F.col("freq").alias("wf"))
-        .where(F.length("word") >= 2)
-    )
-    pairs = words.select(
-        "wf",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word") - 1),
-                lambda i: F.substring(F.col("word"), i, F.lit(2)),
-            )
-        ).alias("pair"),
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.sum("wf").alias("pair_count"))
-        .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-        .limit(BPE_PAIR_TOP)
-    )
-
-
-ORACLE_BPE_PAIRS = f"""
-WITH words AS (
-  SELECT word, count(*)::BIGINT AS wf
-  FROM (SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS word
-        FROM documents WHERE text IS NOT NULL)
-  GROUP BY word),
-pairs AS (
-  SELECT wf,
-         unnest(list_transform(generate_series(1, length(word) - 1),
-                               i -> substr(word, i, 2))) AS pair
-  FROM words WHERE length(word) >= 2)
-SELECT pair, sum(wf)::BIGINT AS pair_count
-FROM pairs GROUP BY pair
-ORDER BY pair_count DESC, pair ASC
-LIMIT {BPE_PAIR_TOP}
-"""
-
-
-# --- Corpus health report (the daily one-row dashboard) ------------------------
-
-#: quantization grain for float per-doc scores folded into corpus means —
-#: sums of quantized BIGINTs are exact and order-independent, so the
-#: report is immune to the float-partial-agg-order trap; the one division
-#: back to double happens on the final one-row relation.
-_HEALTH_Q = 1_000_000
-
-
-def q_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row corpus health dashboard: document/empty counts, token
-    volume, exact-duplicate fraction, language spread, and the mean
-    quality score — the daily readout a corpus owner checks before
-    anything else (dup_frac creeping up means the dedup stage regressed;
-    mean quality dropping means a bad crawl slice landed). Reference
-    analog: AnkiOCR's end-of-run stats readout (`gui.py:70-76`, notes
-    processed / errored counts), generalized to corpus telemetry.
-
-    Scale shape: ONE corpus scan. The two DISTINCT aggregates (text
-    digest, lang) compile to Spark's Expand plan — the scan's rows fan
-    out ×3 (one stream per distinct + one for the plain sums) but stay
-    map-side-partial-aggregated before the (digest, lang, gid) exchange;
-    the second exchange in the recorded plan (docs/PLANS.md) is the
-    single-partition collapse of the already-aggregated groups to the
-    one-row report — metadata-sized by then. At 10^12 docs the
-    production swap is approx_count_distinct (HLL: one pass, no Expand,
-    and the first exchange carries sketches instead of distinct keys),
-    kept exact here for the value oracle. Float means ride as
-    exact quantized-integer sums (see ``_HEALTH_Q``) divided once on the
-    one-row result; every other column is a pure integer."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
-    quality_q = F.round(quality_col(F.split("text", " ")) * _HEALTH_Q).cast(
-        "bigint"
-    )
-    agg = docs.select(
-        "lang",
-        F.col("text").isNull().cast("int").alias("is_empty"),
-        F.when(F.col("text").isNotNull(), F.md5("text")).alias("digest"),
-        F.when(F.col("text").isNotNull(), F.size(toks))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("n_toks"),
-        F.when(F.col("text").isNotNull(), quality_q).alias("q_q"),
-    ).agg(
-        F.count("*").alias("n_docs"),
-        F.sum("is_empty").alias("n_empty"),
-        F.sum("n_toks").alias("total_tokens"),
-        F.countDistinct("digest").alias("distinct_texts"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.sum("q_q").alias("_qsum"),
-        F.count("q_q").alias("_qn"),
-    )
-    non_empty = F.col("n_docs") - F.col("n_empty")
-    return agg.select(
-        "n_docs",
-        "n_empty",
-        "total_tokens",
-        "distinct_texts",
-        F.round(
-            (non_empty - F.col("distinct_texts")) / non_empty, 6
-        ).alias("dup_frac"),
-        "n_langs",
-        F.round(F.col("_qsum") / F.col("_qn") / F.lit(float(_HEALTH_Q)), 6).alias(
-            "mean_quality"
-        ),
-    )
-
-
-ORACLE_CORPUS_HEALTH = f"""
-WITH base AS (
-  SELECT lang,
-         CASE WHEN text IS NULL THEN 1 ELSE 0 END AS is_empty,
-         CASE WHEN text IS NOT NULL THEN md5(text) END AS digest,
-         CASE WHEN text IS NOT NULL
-              THEN len(list_filter(str_split(text, ' '), x -> x <> ''))
-              ELSE 0 END AS n_toks,
-         CASE WHEN text IS NOT NULL THEN
-           round(round(0.4 * least(1.0, len(str_split(text, ' ')) / 100.0)
-                     + 0.6 * (len(list_distinct(str_split(text, ' ')))
-                              / len(str_split(text, ' '))), 6)
-                 * {_HEALTH_Q})::BIGINT
-         END AS q_q
-  FROM documents),
-agg AS (
-  SELECT count(*)::BIGINT AS n_docs,
-         sum(is_empty)::BIGINT AS n_empty,
-         sum(n_toks)::BIGINT AS total_tokens,
-         count(DISTINCT digest)::BIGINT AS distinct_texts,
-         count(DISTINCT lang)::BIGINT AS n_langs,
-         sum(q_q)::BIGINT AS qsum,
-         count(q_q)::BIGINT AS qn
-  FROM base)
-SELECT n_docs, n_empty, total_tokens, distinct_texts,
-       round((n_docs - n_empty - distinct_texts)::DOUBLE
-             / (n_docs - n_empty), 6) AS dup_frac,
-       n_langs,
-       round(qsum::DOUBLE / qn / {float(_HEALTH_Q)}::DOUBLE, 6) AS mean_quality
-FROM agg
-"""
-
-
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic document fingerprint: hash of normalized prefix +
     length — the cheap first-pass near-dup key (rolling-hash analog)."""
@@ -534,123 +210,6 @@ FROM agg
 """
 
 
-# --- gate-calibration correlation report -------------------------------------
-
-
-def q_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation between two per-doc quality signals (the
-    composite heuristic `quality_col` and the unigram token entropy) —
-    the calibration report a curation owner runs before wiring a new
-    gate into the pipeline: do the signals agree, and is the new one
-    adding information? One row out: corpus size + r.
-
-    Exactness at scale: both signals quantize to micro-unit INTEGERS per
-    doc, and all five moments (Σx, Σy, Σx², Σy², Σxy) accumulate as
-    ``decimal(38,0)`` (Spark) / HUGEINT (DuckDB) — exact at 10^12 docs
-    where bigint moments would overflow (Σx² ≤ ~2·10^13 per doc × 10^12
-    docs ≈ 10^25). The single float expression runs ONCE on the one-row
-    moment relation, in the same operation order in both engines, so r
-    is bit-identical. This is the general recipe for any corpus-level
-    statistic here: exact integer/decimal moments, float only at the end.
-
-    Scale shape: entropy's two partial-agg exchanges + one doc_id join of
-    two per-doc signal relations + a moment fold that collapses map-side
-    to one row per partition. Nothing quadratic, nothing driver-side.
-
-    Reference analog: the reference reports only per-run progress counts
-    (`api.py:252-268` NotesQuery / QueryOp progress); this generalizes
-    that reporting surface to corpus-level statistics."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    tokens = F.split("text", " ")
-    x_side = docs.select(
-        "doc_id",
-        F.round(quality_col(tokens) * F.lit(1e6)).cast("bigint").alias("x"),
-    )
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.filter(tokens, lambda t: t != "")).alias("token"),
-    )
-    cnt = toks.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
-    ent_agg = cnt.groupBy("doc_id").agg(
-        F.sum("c").alias("n"),
-        F.sum(
-            F.round(F.col("c") * F.log("c") * F.lit(float(ENTROPY_SCALE))).cast(
-                "bigint"
-            )
-        ).alias("_s"),
-    )
-    y_side = ent_agg.select(
-        "doc_id",
-        F.round(
-            F.round(
-                F.log("n")
-                - F.col("_s") / F.lit(float(ENTROPY_SCALE)) / F.col("n"),
-                6,
-            )
-            * F.lit(1e6)
-        )
-        .cast("bigint")
-        .alias("y"),
-    )
-    j = x_side.join(y_side, "doc_id")
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
-    m = j.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(dec(F.col("x"))).alias("sx"),
-        F.sum(dec(F.col("y"))).alias("sy"),
-        F.sum(dec(F.col("x") * F.col("x"))).alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).alias("syy"),
-        F.sum(dec(F.col("x") * F.col("y"))).alias("sxy"),
-    )
-    n = F.col("n_docs").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    r = (n * sxy - sx * sy) / (
-        F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
-    )
-    return m.select("n_docs", F.round(r, 6).alias("pearson_r"))
-
-
-ORACLE_SIGNAL_CORR = f"""
-WITH d AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-x_side AS (
-  SELECT doc_id,
-         round(round(0.4 * least(1.0, len(str_split(text, ' ')) / 100.0)
-             + 0.6 * (len(list_distinct(str_split(text, ' ')))
-                      / len(str_split(text, ' '))), 6)
-               * 1000000.0::DOUBLE)::BIGINT AS x
-  FROM d),
-toks AS (
-  SELECT doc_id,
-         unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
-  FROM d),
-cnt AS (
-  SELECT doc_id, token, count(*)::BIGINT AS c FROM toks GROUP BY doc_id, token),
-ent AS (
-  SELECT doc_id, sum(c)::BIGINT AS n,
-         sum(round(c * ln(c) * {ENTROPY_SCALE}.0::DOUBLE)::BIGINT)::BIGINT AS s
-  FROM cnt GROUP BY doc_id),
-y_side AS (
-  SELECT doc_id,
-         round(round(ln(n) - s / {ENTROPY_SCALE}.0::DOUBLE / n, 6)
-               * 1000000.0::DOUBLE)::BIGINT AS y
-  FROM ent),
-m AS (
-  SELECT count(*)::BIGINT AS n_docs,
-         sum(x::HUGEINT) AS sx, sum(y::HUGEINT) AS sy,
-         sum((x * x)::HUGEINT) AS sxx, sum((y * y)::HUGEINT) AS syy,
-         sum((x * y)::HUGEINT) AS sxy
-  FROM x_side JOIN y_side USING (doc_id))
-SELECT n_docs,
-       round((n_docs::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-           / (sqrt(n_docs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
-            * sqrt(n_docs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE)),
-         6) AS pearson_r
-FROM m
-"""
-
-
 # --- hashed linear classifier gate -------------------------------------------
 
 #: weight-table size for the hashed linear classifier: token → bucket in
@@ -661,9 +220,9 @@ CLF_HALF = 1000
 CLF_MOD = 2 * CLF_HALF + 1
 
 #: DuckDB twin of `clf_token_weight` (lambda variable ``t``) — the ONE
-#: copy every oracle interpolates (ORACLE_CLASSIFIER, the curation e2e,
-#: the gate funnel), so a weight-formula change cannot silently outrun a
-#: hand-mirrored SQL fragment (r5 review).
+#: copy every oracle interpolates (ORACLE_CLASSIFIER, the curation e2e),
+#: so a weight-formula change cannot silently outrun a hand-mirrored SQL
+#: fragment (r5 review).
 SQL_CLF_TOKEN_WEIGHT = (
     f"(('0x' || substr(md5(t), 1, 15))::BIGINT % {CLF_MOD}) - {CLF_HALF}"
 )
@@ -935,73 +494,24 @@ WHERE doc_id IN (SELECT min(doc_id) FROM gated GROUP BY content_hash)
 """
 
 
-def q_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language quality-score distribution (median + p90 + count) —
-    the corpus-health report every curation run starts from (where do the
-    gates bite, per language?).
-
-    Scale note: ``F.percentile`` is EXACT (it buffers the group's values),
-    which is what makes this oracle-checkable; the group count is bounded
-    by the language set, not the corpus, but per-group state is O(docs in
-    group). The 100-TB path swaps in ``approx_percentile(col, p, acc)``
-    (bounded GK-sketch state, partial-aggregatable) — one identifier, same
-    plan shape; the exact form stays here as the value contract."""
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    tokens = F.split("text", " ")
-    return (
-        docs.select("lang", quality_col(tokens).alias("quality"))
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.percentile("quality", F.lit(0.5)), 6).alias("quality_p50"),
-            F.round(F.percentile("quality", F.lit(0.9)), 6).alias("quality_p90"),
-        )
-    )
-
-
-ORACLE_QUALITY_PERCENTILES = """
-WITH scored AS (
-  SELECT lang,
-         round(0.4 * least(1.0, len(str_split(text, ' ')) / 100.0)
-             + 0.6 * (len(list_distinct(str_split(text, ' '))) / len(str_split(text, ' '))), 6) AS quality
-  FROM documents WHERE text IS NOT NULL)
-SELECT lang, count(*)::BIGINT AS n_docs,
-       round(quantile_cont(quality, 0.5), 6) AS quality_p50,
-       round(quantile_cont(quality, 0.9), 6) AS quality_p90
-FROM scored GROUP BY lang
-"""
-
-
 QUERIES = {
     "lang_id": q_lang_id,
-    "quality_percentiles": q_quality_percentiles,
     "quality_score": q_quality_score,
     "token_count": q_token_count,
-    "vocab_topn": q_vocab_topn,
-    "zipf_alpha": q_zipf_alpha,
-    "bpe_pair_counts": q_bpe_pair_counts,
-    "corpus_health": q_corpus_health,
     "classifier_score": q_classifier_score,
     "classifier_train": q_classifier_train,
     "token_entropy": q_token_entropy,
-    "signal_correlation": q_signal_correlation,
     "doc_fingerprint": q_fingerprint,
     "training_set_select": q_training_set_select,
 }
 
 ORACLE_SQL = {
     "lang_id": ORACLE_LANG_ID,
-    "quality_percentiles": ORACLE_QUALITY_PERCENTILES,
     "quality_score": ORACLE_QUALITY,
     "token_count": ORACLE_TOKEN_COUNT,
-    "vocab_topn": ORACLE_VOCAB,
-    "zipf_alpha": ORACLE_ZIPF,
-    "bpe_pair_counts": ORACLE_BPE_PAIRS,
-    "corpus_health": ORACLE_CORPUS_HEALTH,
     "classifier_score": ORACLE_CLASSIFIER,
     "classifier_train": ORACLE_CLASSIFIER_TRAIN,
     "token_entropy": ORACLE_ENTROPY,
-    "signal_correlation": ORACLE_SIGNAL_CORR,
     "doc_fingerprint": ORACLE_FINGERPRINT,
     "training_set_select": ORACLE_TRAINING_SET,
 }

@@ -66,6 +66,16 @@ class _AnchorParser(HTMLParser):
         if tag == "a":
             self._flush()
 
+    def parse_marked_section(self, i: int, report: int = 1) -> int:
+        # the stdlib raises AssertionError on a marked section with no or
+        # an unknown keyword ('<![ foo]>'); -1 sends it to goahead's
+        # end-of-feed fallback, which reads it as data up to its '>' —
+        # the kernel's degrade rule for the same section
+        try:
+            return super().parse_marked_section(i, report)
+        except AssertionError:
+            return -1
+
     def close(self) -> None:
         rest = self.rawdata
         if ">" in rest or self.cdata_elem is not None:
@@ -351,14 +361,9 @@ SELECT node, round(rank, 8) AS pagerank FROM r{PR_ITERS}
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
 
-#: THE authority-extraction regex — one definition for host_col AND
-#: normalize_url_col so the streaming host key and the canonical-url host
-#: can never diverge on the same record (r5 review: host_col's first cut
-#: restricted the scheme to RFC-valid ``[A-Za-z][A-Za-z0-9+.-]*`` while
-#: normalize_url_col accepted any ``[^:/?#]+`` — a corrupt-scheme crawl
-#: url like '1http://x.org/p' then produced host 'x.org' in one and ''
-#: in the other, exactly the degenerate-key split the helper exists to
-#: prevent)
+#: authority-extraction regex of ``normalize_url_col``: any ``[^:/?#]+``
+#: scheme, so a corrupt-scheme crawl url like '1http://x.org/p' still
+#: yields host 'x.org'
 _AUTHORITY_RE = r"^[^:/?#]+://([^/?#]*)"
 
 
@@ -373,20 +378,6 @@ def _host_of_hostport(hostport) -> "F.Column":
         F.when(bracket != "", bracket)
         .otherwise(F.split(hostport, ":", 2).getItem(0))
     )
-
-
-def host_col(u) -> "F.Column":
-    """Crawl host of a URL as a pure codegen expression: case-folded,
-    port-stripped, IPv6-safe, tolerant of uppercase schemes and of urls
-    with no path ('https://example.org'). This is the per-host bucketing
-    key the streaming stats/state operators group on (r5 review: their
-    ad-hoc ``^[a-z]+://([^/]+)/`` regex sent uppercase-scheme, slashless,
-    and ported urls to host '' / distinct keys); built from the SAME
-    ``_AUTHORITY_RE``/``_host_of_hostport`` pair as ``normalize_url_col``
-    so every host key in the engine is identical."""
-    from pyspark.sql import functions as F
-
-    return _host_of_hostport(F.regexp_extract(u, _AUTHORITY_RE, 1))
 
 
 def normalize_url_col(u) -> "F.Column":
@@ -793,7 +784,7 @@ def registered_domain(hosts: DataFrame) -> DataFrame:
     dot (``example.com.`` — routine in DNS-derived host data) is stripped
     first; the host column itself passes through verbatim.
     Otherwise-invalid hosts (empty labels) pass through deterministically
-    — host validation belongs to `host_col`/url parsing, not here.
+    — host validation belongs to url parsing, not here.
 
     Scale shape: ONE codegen projection fused into the scan, zero
     Exchange (plan-asserted) — the match length is `array_max` over the

@@ -162,146 +162,6 @@ def start_stream_extract_dedup(
     )
 
 
-def start_stream_host_stats(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 day",
-    watermark: str = "1 hour",
-    max_files_per_trigger: Optional[int] = None,
-) -> StreamingQuery:
-    """Stateful streaming analytics over the ingest: per-host tumbling-
-    window page counts with a watermark for late-arriving crawl records.
-
-    The reference has no streaming/stateful surface (SURVEY.md §2.1); this
-    is the scale-path companion the crawl pipeline needs: rows older than
-    ``watermark`` behind the stream's max ``warc_ts`` are dropped rather
-    than reopening finalized windows, so state stays bounded — at 10^12
-    docs the state store holds only (hosts x open windows), not history.
-    Append mode emits a window only once it is closed by the watermark.
-
-    Host key = ``links.host_col`` (case-folded, port-stripped, IPv6-safe
-    — shared with URL canonicalization; the previous ad-hoc regex sent
-    uppercase-scheme/slashless/ported urls to degenerate keys). The
-    driver oracle keeps its simple closed form: the fixture urls are
-    lowercase with paths and no ports, where the two definitions agree
-    value-for-value."""
-    from .links import host_col
-
-    pages = stream_pages(spark, input_dir, max_files_per_trigger)
-    host = host_col(F.col("url")).alias("host")
-    agg = (
-        pages.select(host, "warc_ts")
-        .withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("host"))
-        .agg(F.count("*").alias("n_pages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "host",
-            "n_pages",
-        )
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# --------------------------------------------------------------------------
-# custom stateful operator: per-host cumulative crawl tracker
-# --------------------------------------------------------------------------
-
-HOST_STATE_SCHEMA = "n_pages long, n_bytes long, last_ts timestamp"
-HOST_TRACKER_OUT = (
-    "host string, n_pages long, n_bytes long, last_ts timestamp, "
-    "batch_pages long"
-)
-
-
-def _host_tracker(key, pdf_iter, state):
-    """applyInPandasWithState function: fold this micro-batch's pages for
-    one host into cumulative (pages, bytes, last crawl ts) state and yield
-    one updated row. State is O(hosts) regardless of stream length."""
-    import pandas as pd
-
-    n_pages, n_bytes, last_ts = (
-        state.get if state.exists else (0, 0, None)
-    )
-    batch_pages = 0
-    for pdf in pdf_iter:
-        batch_pages += len(pdf)
-        n_pages += len(pdf)
-        n_bytes += int(pdf["n_bytes"].sum())
-        ts = pdf["warc_ts"].max()
-        # pd.notna, NOT `is not None`: an all-null batch yields NaT, which
-        # would poison the host's last_ts state forever (NaT comparisons
-        # are always False, so no later real timestamp could replace it —
-        # r3 review, reproduced)
-        if pd.notna(ts):
-            ts = pd.Timestamp(ts).to_pydatetime()
-            if last_ts is None or pd.isna(last_ts) or ts > last_ts:
-                last_ts = ts
-    state.update((n_pages, n_bytes, last_ts))
-    yield pd.DataFrame([{
-        "host": key[0],
-        "n_pages": n_pages,
-        "n_bytes": n_bytes,
-        "last_ts": last_ts,
-        "batch_pages": batch_pages,
-    }])
-
-
-def start_stream_host_tracker(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> StreamingQuery:
-    """Custom stateful streaming operator (applyInPandasWithState): a
-    running per-host crawl ledger — cumulative page count, byte volume and
-    newest ``warc_ts`` — carried across triggers in the state store.
-
-    This is the API tier above watermarked aggregation: arbitrary
-    user-defined state transition per key per micro-batch, Arrow-batched
-    (no per-row Python), with state size O(distinct hosts). Update output
-    mode: each trigger emits one refreshed row per host that saw pages."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .links import host_col
-
-    pages = stream_pages(spark, input_dir, max_files_per_trigger)
-    per_host = pages.select(
-        host_col(F.col("url")).alias("host"),  # shared parsing; see host stats
-        F.octet_length("html").alias("n_bytes"),
-        "warc_ts",
-    )
-    tracked = per_host.groupBy("host").applyInPandasWithState(
-        _host_tracker,
-        outputStructType=HOST_TRACKER_OUT,
-        stateStructType=HOST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    def _write_batch(df, epoch_id):
-        (df.withColumn("epoch", F.lit(epoch_id))
-           .write.mode("append").parquet(output_dir))
-
-    return (
-        tracked.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable entry with a FULL value oracle: dump the driver's
     own ``documents`` table as wrapped pages (ops.docs_as_pages — the exact
@@ -327,162 +187,6 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("url", "extracted_text")
         .orderBy("url")
     )
-
-
-def q_stream_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling-window aggregation with a FULL value oracle.
-
-    Append-mode emission under availableNow ends with a no-data
-    micro-batch (``spark.sql.streaming.noDataMicroBatches``, default on)
-    that advances the watermark to global max(ts) − delay and flushes
-    every window it closes — so the FINAL emitted set is batch-order
-    independent: exactly the windows whose end ≤ that watermark, with the
-    newest partial window withheld. The oracle computes that set in
-    closed form, so late-window withholding is VALUE-checked, not just
-    pytest-asserted. The dump is still written as 4 event-time-ordered
-    files drained one per trigger, exercising genuine incremental
-    batches — but by SPARK writer tasks (VERDICT r3 #2: the previous
-    ``pq.read_table(...).to_pylist()`` materialized the id column on the
-    driver; this is the ``warc.py`` distributed-dump pattern instead).
-    The driver only touches two scalars (min/max doc_id, for the quarter
-    boundaries) and per-file rename/mtime metadata."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    base = tempfile.mkdtemp(prefix="stream_w_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    from .ops import load
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    lohi = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
-    lo, hi = lohi["lo"], lohi["hi"]
-    span = hi - lo + 1
-    mt0 = _time.time() - 1000
-    for q in range(4):
-        a = lo + q * span // 4
-        b = (lo + (q + 1) * span // 4) if q < 3 else hi + 1
-        chunk = docs.where(
-            (F.col("doc_id") >= a) & (F.col("doc_id") < b)
-        ).select(
-            F.concat(
-                F.lit("https://h"), (F.col("doc_id") % 7).cast("string"),
-                F.lit(".example.org/doc/"), F.col("doc_id").cast("string"),
-            ).alias("url"),
-            F.expr(
-                "timestampadd(MINUTE, cast(doc_id AS int), "
-                "timestamp'2024-01-01 00:00:00')"
-            ).alias("warc_ts"),
-            F.lit(None).cast("binary").alias("html"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-        tmp = os.path.join(base, f"tmp{q}")
-        chunk.coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        path = os.path.join(in_dir, f"crawl-{q}.parquet")
-        os.rename(part, path)
-        shutil.rmtree(tmp)
-        os.utime(path, (mt0 + q * 10, mt0 + q * 10))
-    q_handle = start_stream_host_stats(
-        spark,
-        in_dir,
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-        window="1 hour",
-        watermark="10 minutes",
-        max_files_per_trigger=1,
-    )
-    _drain(q_handle)
-    return spark.read.parquet(os.path.join(base, "out")).select(
-        "window_start", "host", "n_pages"
-    )
-
-
-ORACLE_STREAM_WINDOW = """
-WITH d AS (SELECT doc_id FROM documents),
-p AS (
-  SELECT doc_id,
-         TIMESTAMP '2024-01-01 00:00:00' + doc_id * INTERVAL 1 MINUTE AS ts,
-         'h' || (doc_id % 7) || '.example.org' AS host
-  FROM d),
-wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM p),
-agg AS (
-  SELECT date_trunc('hour', ts) AS window_start, host, count(*) AS n_pages
-  FROM p GROUP BY 1, 2)
-SELECT window_start, host, n_pages
-FROM agg, wm
-WHERE window_start + INTERVAL 1 HOUR <= wm.w
-"""
-
-
-def q_stream_host_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value oracle for the custom stateful operator (VERDICT r2 #3 — the
-    last pytest-only capability): drain a 4-file crawl dump through
-    ``start_stream_host_tracker`` one file per trigger, then read each
-    host's LAST emitted row (max epoch). Because the operator's state is
-    cumulative per host, that final row equals the full-dump per-host
-    aggregate — a closed form over ``documents`` that is independent of
-    file/trigger order, so genuine multi-trigger statefulness is exercised
-    while staying exactly oracle-able. The dump itself is generated
-    DISTRIBUTED (Spark write, no driver materialization)."""
-    import os
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from .ops import load, wrap_html
-
-    base = tempfile.mkdtemp(prefix="stream_h_")
-    in_dir = os.path.join(base, "in")
-    (
-        load(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select(
-            F.concat(
-                F.lit("https://h"), (F.col("doc_id") % 7).cast("string"),
-                F.lit(".example.org/doc/"), F.col("doc_id").cast("string"),
-            ).alias("url"),
-            F.expr(
-                "timestamp'2024-01-01 00:00:00' + doc_id * INTERVAL 1 MINUTE"
-            ).alias("warc_ts"),
-            wrap_html(F.col("text")).alias("html"),
-            F.col("text"),
-            F.col("lang"),
-        )
-        .repartition(4)
-        .write.parquet(in_dir)
-    )
-    q = start_stream_host_tracker(
-        spark, in_dir, os.path.join(base, "out"), os.path.join(base, "ckpt"),
-        max_files_per_trigger=1,
-    )
-    _drain(q)
-    out = spark.read.parquet(os.path.join(base, "out"))
-    w = Window.partitionBy("host").orderBy(F.col("epoch").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("host", "n_pages", "n_bytes", "last_ts")
-    )
-
-
-def _oracle_stream_host_tracker() -> str:
-    from .ops import WRAP_PREFIX, WRAP_SUFFIX
-
-    wrap_bytes = len((WRAP_PREFIX + WRAP_SUFFIX).encode("utf-8"))
-    return f"""
-SELECT 'h' || (doc_id % 7) || '.example.org' AS host,
-       count(*)::BIGINT AS n_pages,
-       sum({wrap_bytes} + octet_length(encode(text)))::BIGINT AS n_bytes,
-       max(TIMESTAMP '2024-01-01 00:00:00' + doc_id * INTERVAL 1 MINUTE)
-           AS last_ts
-FROM documents WHERE text IS NOT NULL
-GROUP BY 1
-"""
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,13 +228,9 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "stream_extract": q_stream_extract,
-    "stream_window_stats": q_stream_window_stats,
     "stream_dedup": q_stream_dedup,
-    "stream_host_tracker": q_stream_host_tracker,
 }
 ORACLE_SQL = {
     "stream_extract": ORACLE_FLAGSHIP,
-    "stream_window_stats": ORACLE_STREAM_WINDOW,
     "stream_dedup": ORACLE_FLAGSHIP,
-    "stream_host_tracker": _oracle_stream_host_tracker(),
 }

@@ -67,14 +67,12 @@ SECONDARY = [
     # it in-lineage, staged pays it once at staging time); the keeper
     # step itself adds one broadcast join + one cluster-partitioned
     # window either way.
-    ("vocab_topn", False),
     ("classifier_score", False),
     ("url_latest", False),
     ("dsir_weight", False),
     ("c4_filter", False),
     ("badwords_filter", False),
     ("token_entropy", False),
-    ("signal_correlation", False),
     # r5 additions
     ("classifier_train", False),
     ("recrawl_e2e", False),
@@ -84,11 +82,7 @@ SECONDARY = [
     ("robots_txt_filter", True),
     ("split_leakage", True),
     ("crawl_schedule", True),
-    ("zipf_alpha", True),
-    ("bpe_pair_counts", True),
     ("perplexity_buckets", True),
-    ("corpus_health", True),
-    ("gate_funnel", True),
     ("page_metadata", True),
     ("html_tables", True),
     ("canonical_collapse", True),

@@ -48,9 +48,7 @@ AUDIT = [
     "dedup_simhash_pairs",
     "decontaminate",
     "training_pipeline_e2e",
-    "host_length_rank",
     "dedup_paragraph",
-    "quality_percentiles",
     "pii_redact",
     "repetition_filter",
     "tfidf_top_terms",
@@ -68,14 +66,12 @@ AUDIT = [
     "robots_policy",
     "boilerplate_strip",
     "cluster_keeper",
-    "vocab_topn",
     "classifier_score",
     "url_latest",
     "dsir_weight",
     "c4_filter",
     "badwords_filter",
     "token_entropy",
-    "signal_correlation",
     "classifier_train",
     "recrawl_e2e",
     "curation_pipeline_e2e",
@@ -85,11 +81,7 @@ AUDIT = [
     "robots_txt_filter",
     "split_leakage",
     "crawl_schedule",
-    "zipf_alpha",
-    "bpe_pair_counts",
     "perplexity_buckets",
-    "corpus_health",
-    "gate_funnel",
     "page_metadata",
     "html_tables",
     "canonical_collapse",

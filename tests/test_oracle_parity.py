@@ -114,3 +114,48 @@ def test_driver_window_holds_every_unproven_query():
     assert set(audit_plans.NOTES) <= set(names)
     assert set(bench.HEADLINE) <= set(names)
     assert {name for name, _ in bench.SECONDARY} <= set(names)
+
+
+def test_every_package_level_name_is_read_somewhere():
+    """Every module-level function, class and assigned name in
+    ankiocr_spark/ is read somewhere in the repo's .py files (hidden
+    directories such as perfbench/.cache skipped) other than its own
+    definition: as a name, an attribute, an import or an equal string
+    (a monkeypatch target). Deleting a query therefore cannot leave an
+    orphaned helper or constant behind."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(entrymod.__file__).resolve().parent
+    trees = {
+        p.relative_to(repo): ast.parse(p.read_text())
+        for p in repo.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(repo).parts)
+    }
+    read = set()
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                read.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                read.add(n.attr)
+            elif isinstance(n, ast.alias):
+                read.add(n.name.rsplit(".", 1)[-1])
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                read.add(n.value)
+    dead = []
+    for path, tree in trees.items():
+        if path.parts[0] != "ankiocr_spark":
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                names = [x.id for t in targets for x in ast.walk(t)
+                         if isinstance(x, ast.Name)]
+            else:
+                names = []
+            dead += [f"{path}:{node.lineno} {n}" for n in names if n not in read]
+    assert not dead, dead

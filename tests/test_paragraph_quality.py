@@ -1,5 +1,5 @@
-"""Invariant tests for paragraph-level dedup and per-lang quality
-percentiles — each checked against an INDEPENDENT pure-Python
+"""Invariant tests for paragraph-level dedup, the classifier gates and
+the token-entropy gate — each checked against an INDEPENDENT pure-Python
 reimplementation (the oracle-parity sweep replicates the same SQL math,
 so these are the checks that catch shared-math bugs)."""
 
@@ -7,12 +7,10 @@ import hashlib
 import math
 
 import duckdb
-import numpy as np
 
 from ankiocr_spark.datapipe.dedup import (
     PARA_DUP_MOD, PARA_TOKENS, q_dedup_paragraph,
 )
-from ankiocr_spark.datapipe.textstats import q_quality_percentiles
 
 
 def _corpus(sf_dir):
@@ -62,51 +60,6 @@ def test_dedup_paragraph_output_has_no_hash_collisions(spark, sf_dir):
     paras = [r["paragraph"] for r in q_dedup_paragraph(spark, sf_dir).collect()]
     digests = {hashlib.md5(p.encode()).hexdigest() for p in paras}
     assert len(digests) == len(paras)
-
-
-def _py_quality(text):
-    toks = text.split(" ")
-    return round(
-        0.4 * min(1.0, len(toks) / 100.0) + 0.6 * (len(set(toks)) / len(toks)),
-        6,
-    )
-
-
-def test_quality_percentiles_match_numpy(spark, sf_dir):
-    rows = duckdb.sql(
-        f"SELECT lang, text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE text IS NOT NULL"
-    ).fetchall()
-    by_lang = {}
-    for lang, text in rows:
-        by_lang.setdefault(lang, []).append(_py_quality(text))
-    got = {r["lang"]: r for r in q_quality_percentiles(spark, sf_dir).collect()}
-    assert set(got) == set(by_lang)
-    for lang, vals in by_lang.items():
-        r = got[lang]
-        assert r["n_docs"] == len(vals)
-        # Spark's exact percentile uses linear interpolation = numpy default
-        assert abs(r["quality_p50"] - round(float(np.percentile(vals, 50)), 6)) <= 1e-6
-        assert abs(r["quality_p90"] - round(float(np.percentile(vals, 90)), 6)) <= 1e-6
-        assert r["quality_p50"] <= r["quality_p90"]
-
-
-def test_vocab_topn_matches_counter(spark, sf_dir):
-    from collections import Counter
-
-    import duckdb
-
-    from ankiocr_spark.datapipe.textstats import VOCAB_TOP_N, q_vocab_topn
-
-    counts = Counter()
-    for (text,) in duckdb.sql(
-        f"SELECT text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE text IS NOT NULL"
-    ).fetchall():
-        counts.update(t for t in text.split(" ") if t)
-    expected = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:VOCAB_TOP_N]
-    got = [(r["token"], r["freq"]) for r in q_vocab_topn(spark, sf_dir).collect()]
-    assert sorted(got) == sorted(expected)
 
 
 def test_classifier_score_matches_python(spark, sf_dir):
@@ -268,235 +221,3 @@ def test_token_entropy_matches_python(spark, sf_dir):
         dropped += not keep
         assert got[doc_id] == (n, ent, keep), doc_id
     assert 0 < dropped < len(got)
-
-
-def test_signal_correlation_matches_numpy(spark, sf_dir):
-    """Independent Pearson via numpy over independently recomputed
-    micro-quantized signals; also sanity: entropy and the
-    diversity-weighted quality score must correlate POSITIVELY."""
-    import math
-    from collections import Counter
-
-    from ankiocr_spark.datapipe.textstats import (
-        ENTROPY_SCALE,
-        q_signal_correlation,
-    )
-
-    xs, ys = [], []
-    for _doc_id, text in duckdb.sql(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE text IS NOT NULL"
-    ).fetchall():
-        raw = text.split(" ")
-        toks = [t for t in raw if t]
-        if not toks:
-            continue
-        q = round(
-            0.4 * min(1.0, len(raw) / 100.0)
-            + 0.6 * (len(set(raw)) / len(raw)),
-            6,
-        )
-        n = len(toks)
-        s = sum(
-            round(c * math.log(c) * ENTROPY_SCALE)
-            for c in Counter(toks).values()
-        )
-        ent = round(math.log(n) - s / ENTROPY_SCALE / n, 6)
-        xs.append(round(q * 1e6))
-        ys.append(round(ent * 1e6))
-    expected = float(np.corrcoef(xs, ys)[0, 1])
-    row = q_signal_correlation(spark, sf_dir).collect()[0]
-    assert row["n_docs"] == len(xs)
-    assert abs(row["pearson_r"] - expected) < 1e-5
-    assert row["pearson_r"] > 0.0
-
-
-def test_zipf_alpha_matches_python_fit(spark, sf_dir):
-    """From-scratch least-squares fit over the same quantized-log points:
-    python recomputes the token counts, the (freq desc, token asc) head
-    ranking, the micro-nat quantization, the integer moments, and the
-    slope — the engine's one-row report must match to the rounding
-    grain, and alpha must be positive (frequencies DECREASE with rank by
-    construction of the ranking)."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from ankiocr_spark.datapipe.textstats import (
-        ZIPF_TOP, _ZIPF_Q, q_zipf_alpha,
-    )
-
-    got = q_zipf_alpha(spark, sf_dir).collect()
-    assert len(got) == 1
-    r = got[0]
-
-    counts = Counter()
-    for (text,) in duckdb.sql(
-        f"SELECT text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE text IS NOT NULL"
-    ).fetchall():
-        counts.update(t for t in text.split(" ") if t != "")
-    head = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:ZIPF_TOP]
-    pts = [
-        (round(math.log(rank) * _ZIPF_Q), round(math.log(freq) * _ZIPF_Q))
-        for rank, (_, freq) in enumerate(head, start=1)
-    ]
-    n = len(pts)
-    sx = sum(x for x, _ in pts)
-    sy = sum(y for _, y in pts)
-    sxx = sum(x * x for x, _ in pts)
-    sxy = sum(x * y for x, y in pts)
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    intercept = (sy - slope * sx) / n / _ZIPF_Q
-
-    assert r["n_head_tokens"] == n
-    assert abs(r["zipf_alpha"] - round(-slope, 6)) <= 1e-6
-    assert abs(r["ln_c"] - round(intercept, 6)) <= 1e-6
-    assert r["zipf_alpha"] > 0
-
-
-def test_bpe_pair_counts_matches_python_trainer_step(spark, sf_dir):
-    """From-scratch recompute of BPE iteration 0: python builds the
-    word→frequency table, expands each distinct word (len ≥ 2) into its
-    adjacent character pairs, and sums word frequencies per pair — the
-    engine's ranked head must equal the python head exactly (count desc,
-    pair asc is a total order, so the LIMIT cut is deterministic), and
-    the argmax pair (the first BPE merge) must agree."""
-    from collections import Counter
-
-    import duckdb
-
-    from ankiocr_spark.datapipe.textstats import (
-        BPE_PAIR_TOP, q_bpe_pair_counts,
-    )
-
-    got = [
-        (r["pair"], r["pair_count"])
-        for r in q_bpe_pair_counts(spark, sf_dir).collect()
-    ]
-
-    wf = Counter()
-    for (text,) in duckdb.sql(
-        f"SELECT text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "WHERE text IS NOT NULL"
-    ).fetchall():
-        wf.update(t for t in text.split(" ") if t != "")
-    pc = Counter()
-    for word, f in wf.items():
-        if len(word) >= 2:
-            for i in range(len(word) - 1):
-                pc[word[i : i + 2]] += f
-    want = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[:BPE_PAIR_TOP]
-
-    assert got == want
-    assert got[0] == want[0]  # the first merge the trainer would pick
-    # pair stage runs over the distinct-word relation, not the corpus:
-    # every pair count is bounded by total token occurrences
-    total_tokens = sum(wf.values())
-    assert all(c <= total_tokens for _, c in got)
-
-
-def test_corpus_health_matches_python_recompute(spark, sf_dir):
-    """Every field of the one-row dashboard recomputed from the raw
-    parquet in python: counts, token volume, exact-duplicate fraction,
-    language spread, and the quantized-integer mean quality — plus the
-    bounds the oracle can't state (distinct_texts never exceeds the
-    non-empty count; dup_frac in [0, 1])."""
-    import hashlib
-
-    import duckdb
-
-    from ankiocr_spark.datapipe.textstats import _HEALTH_Q, q_corpus_health
-
-    rows = q_corpus_health(spark, sf_dir).collect()
-    assert len(rows) == 1
-    r = rows[0]
-
-    raw = duckdb.sql(
-        f"SELECT text, lang FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    n_docs = len(raw)
-    n_empty = sum(1 for t, _ in raw if t is None)
-    digests = {hashlib.md5(t.encode()).hexdigest() for t, _ in raw if t is not None}
-    total_tokens = sum(
-        len([x for x in t.split(" ") if x != ""]) for t, _ in raw if t is not None
-    )
-    qsum, qn = 0, 0
-    for t, _ in raw:
-        if t is None:
-            continue
-        toks = t.split(" ")
-        q = round(
-            0.4 * min(1.0, len(toks) / 100.0)
-            + 0.6 * (len(set(toks)) / len(toks)),
-            6,
-        )
-        qsum += round(q * _HEALTH_Q)
-        qn += 1
-
-    assert r["n_docs"] == n_docs
-    assert r["n_empty"] == n_empty
-    assert r["total_tokens"] == total_tokens
-    assert r["distinct_texts"] == len(digests)
-    # countDistinct ignores NULLs in both engines — so must the recompute
-    assert r["n_langs"] == len({l for _, l in raw if l is not None})
-    assert r["dup_frac"] == round(
-        (n_docs - n_empty - len(digests)) / (n_docs - n_empty), 6
-    )
-    assert r["mean_quality"] == round(qsum / qn / _HEALTH_Q, 6)
-    assert r["distinct_texts"] <= n_docs - n_empty
-    assert 0.0 <= r["dup_frac"] <= 1.0
-
-
-def test_corpus_health_null_text_and_null_lang_branches(spark, tmp_path):
-    """The shipped fixtures contain zero NULL texts, so every NULL guard
-    in corpus_health (is_empty, the digest/quality null-pass, n_toks → 0,
-    dup_frac's empty-exclusion, countDistinct's NULL-lang skip) is dead
-    under the oracle sweep (review find) — this synthetic corpus makes
-    each branch load-bearing: 3 NULL texts, 1 NULL lang, and one
-    duplicated text among 4 non-empty docs."""
-    import duckdb
-
-    from ankiocr_spark.datapipe.textstats import _HEALTH_Q, q_corpus_health
-
-    rows = [
-        (1, "alpha beta beta", "en"),
-        (2, "alpha beta beta", "de"),     # exact duplicate of doc 1
-        (3, "gamma", None),               # NULL lang, counted doc
-        (4, "delta epsilon", "fr"),
-        (5, None, "en"),                  # NULL text
-        (6, None, None),                  # NULL text AND lang
-        (7, None, "xx"),
-    ]
-    duckdb.sql(
-        "COPY (SELECT * FROM (VALUES "
-        + ", ".join(
-            "(%d, %s, %s)"
-            % (i, "NULL" if t is None else "'%s'" % t,
-               "NULL" if l is None else "'%s'" % l)
-            for i, t, l in rows
-        )
-        + ") AS t(doc_id, text, lang)) TO '%s' (FORMAT parquet)"
-        % (tmp_path / "documents.parquet")
-    )
-
-    r = q_corpus_health(spark, str(tmp_path)).collect()[0]
-    assert r["n_docs"] == 7
-    assert r["n_empty"] == 3
-    assert r["total_tokens"] == 3 + 3 + 1 + 2
-    assert r["distinct_texts"] == 3            # dup collapses, NULLs skipped
-    assert r["n_langs"] == 4                   # en, de, fr, xx — NULL skipped
-    assert r["dup_frac"] == round((4 - 3) / 4, 6)
-
-    def q(text):
-        toks = text.split(" ")
-        return round(
-            round(0.4 * min(1.0, len(toks) / 100.0)
-                  + 0.6 * (len(set(toks)) / len(toks)), 6) * _HEALTH_Q
-        )
-
-    want_mean = round(
-        sum(q(t) for _, t, _ in rows if t is not None) / 4 / _HEALTH_Q, 6
-    )
-    assert r["mean_quality"] == want_mean

@@ -2,13 +2,12 @@
 DuckDB oracle cannot catch because it replicates the same math (see the
 MinHash precedent): dedup really removes re-crawl dups,
 decontamination really drops every eval doc that survives the gates, and
-window ranks are dense per host."""
+every curation stage bites."""
 
 import re
-from collections import defaultdict
 
 from ankiocr_spark.datapipe.pipeline import (
-    DUP_MOD, q_curation_pipeline, q_host_length_rank, q_training_pipeline,
+    DUP_MOD, q_curation_pipeline, q_training_pipeline,
 )
 from ankiocr_spark.datapipe.dedup import EVAL_DOC_MOD
 
@@ -39,28 +38,6 @@ def test_training_pipeline_dedups_and_decontaminates(spark, sf_dir):
     # gates: every survivor carries a quality at or above the floor
     assert all(r["quality"] >= 0.5 for r in rows)
     assert all(r["n_tokens"] >= 1 for r in rows)
-
-
-def test_host_length_rank_dense_and_monotone(spark, sf_dir):
-    rows = q_host_length_rank(spark, sf_dir).collect()
-    assert rows
-    by_host = defaultdict(list)
-    for r in rows:
-        by_host[r["host"]].append((r["n_chars_extracted"], r["length_rank"]))
-    assert len(by_host) > 1, "multi-host synthesis collapsed to one host"
-    for host, pairs in by_host.items():
-        pairs.sort(key=lambda p: (-p[0], p[1]))
-        ranks = [rk for _, rk in pairs]
-        # dense: rank values form 1..max with no gaps
-        assert sorted(set(ranks)) == list(range(1, max(ranks) + 1)), host
-        # monotone: longer extracts never rank below shorter ones
-        lens = [ln for ln, _ in pairs]
-        assert lens == sorted(lens, reverse=True), host
-        # equal lengths share a rank; strictly longer means strictly better
-        seen = {}
-        for ln, rk in pairs:
-            seen.setdefault(ln, rk)
-            assert seen[ln] == rk, f"{host}: tie got two ranks"
 
 
 def test_curation_pipeline_every_stage_bites_and_conserves(spark, sf_dir):
@@ -126,65 +103,3 @@ def test_curation_pipeline_kernel_stage_runs_once(spark, sf_dir):
     # plan shows reuse (ReusedExchange nodes and/or shared
     # ShuffleQueryStage references), never a second MapInPandas stage run
     assert post.count("ReusedExchange") >= 1
-
-
-def test_gate_funnel_agrees_with_the_standalone_gates(spark, sf_dir):
-    """The funnel's counts are recomputed from the STANDALONE gate
-    queries' own verdicts (c4_filter.doc_keep, badwords_filter.keep,
-    classifier_score.keep) plus a python mix draw — a drifted funnel
-    predicate (the exact bug class the shared-definition discipline
-    guards against) breaks this even though the DuckDB oracle, which
-    replays the funnel's own expressions, would stay green. Plus the
-    funnel algebra: cumulative passes are non-increasing and every
-    standalone pass/kill pair sums to n_docs."""
-    import duckdb
-
-    from ankiocr_spark.datapipe.curation import (
-        _MIX_MOD, _MIX_MULT, _MIX_REDUCE, q_badwords_filter, q_c4_filter,
-    )
-    from ankiocr_spark.datapipe.pipeline import (
-        CURATION_MIX_RATES, q_gate_funnel,
-    )
-    from ankiocr_spark.datapipe.textstats import q_classifier_score
-
-    r = q_gate_funnel(spark, sf_dir).collect()[0]
-
-    c4 = {x["doc_id"]: x["doc_keep"] for x in q_c4_filter(spark, sf_dir).collect()}
-    bad = {x["doc_id"]: x["keep"] for x in q_badwords_filter(spark, sf_dir).collect()}
-    clf = {x["doc_id"]: x["keep"] for x in q_classifier_score(spark, sf_dir).collect()}
-    langs = dict(
-        duckdb.sql(
-            f"SELECT doc_id, lang FROM read_parquet('{sf_dir}/documents.parquet') "
-            "WHERE text IS NOT NULL"
-        ).fetchall()
-    )
-
-    def mix(doc_id):
-        rate = CURATION_MIX_RATES.get(langs[doc_id])
-        if rate is None:
-            return False
-        u = (doc_id % _MIX_REDUCE + _MIX_REDUCE) % _MIX_REDUCE * _MIX_MULT % _MIX_MOD
-        return u / _MIX_MOD < rate
-
-    ids = list(langs)
-    # classifier_score only emits docs with >= 1 token; absent ids keep
-    # (empty fold sums to 0 >= 0) — none exist in the shipped fixtures
-    assert set(clf) == set(ids)
-    assert r["n_docs"] == len(ids)
-    assert r["pass_c4"] == sum(c4[i] for i in ids)
-    assert r["pass_badwords"] == sum(c4[i] and bad[i] for i in ids)
-    assert r["pass_classifier"] == sum(c4[i] and bad[i] and clf[i] for i in ids)
-    assert r["pass_mix"] == sum(c4[i] and bad[i] and clf[i] and mix(i) for i in ids)
-    assert r["kill_c4"] == len(ids) - sum(c4.values())
-    assert r["kill_badwords"] == len(ids) - sum(bad.values())
-    assert r["kill_classifier"] == len(ids) - sum(clf.values())
-    assert r["kill_mix"] == len(ids) - sum(mix(i) for i in ids)
-    # funnel algebra
-    assert (r["n_docs"] >= r["pass_c4"] >= r["pass_badwords"]
-            >= r["pass_classifier"] >= r["pass_mix"] >= 0)
-    for g in ("c4", "badwords", "classifier", "mix"):
-        assert r[f"kill_{g}"] <= r["n_docs"]
-    # every gate and the funnel tail must actually bite on the fixture
-    assert r["pass_mix"] > 0
-    for g in ("c4", "badwords", "classifier", "mix"):
-        assert r[f"kill_{g}"] > 0

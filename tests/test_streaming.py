@@ -7,6 +7,7 @@ streaming checkpoint's incremental guarantee: a second dump processes
 ONLY the new files.
 """
 
+import datetime as dt
 import os
 
 import pyarrow as pa
@@ -80,86 +81,12 @@ def test_stream_resume_processes_only_new_files(spark, dirs):
     assert len(_read_extracts(spark, output_dir)) == 65
 
 
-# --- stateful: watermarked per-host window counts ---------------------------
-
-import datetime as dt
-
-from ankiocr_spark.streaming import start_stream_host_stats
-
-D1 = dt.datetime(2024, 1, 1, 12, 0, 0)
-D2 = dt.datetime(2024, 1, 2, 12, 0, 0)
-D3 = dt.datetime(2024, 1, 3, 12, 0, 0)
-D4 = dt.datetime(2024, 1, 4, 12, 0, 0)
-
-
-def _write_host_dump(input_dir, name, rows):
-    """rows: list of (url, warc_ts). Other page columns filled minimally."""
-    os.makedirs(input_dir, exist_ok=True)
-    table = pa.table({
-        "url": pa.array([u for u, _ in rows], pa.string()),
-        "warc_ts": pa.array([t for _, t in rows], pa.timestamp("us")),
-        "html": pa.array([b"<p>x</p>"] * len(rows), pa.binary()),
-        "text": pa.array(["x"] * len(rows), pa.string()),
-        "lang": pa.array(["eng"] * len(rows), pa.string()),
-    })
-    pq.write_table(table, os.path.join(input_dir, name))
-
-
-def _drain_host_stats(spark, dirs):
-    input_dir, output_dir, ckpt = dirs
-    q = start_stream_host_stats(spark, input_dir, output_dir, ckpt)
-    assert q.awaitTermination(120)
-
-
-def _read_stats(spark, output_dir):
-    df = spark.read.parquet(output_dir)
-    return {
-        (r["window_start"].date().isoformat(), r["host"]): r["n_pages"]
-        for r in df.collect()
-    }
-
-
-def test_stream_host_stats_watermark_and_late_data(spark, tmp_path):
-    dirs = (str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck"))
-    input_dir, output_dir, _ = dirs
-
-    # trigger 1: days 1-3; watermark lands 1h behind D3 noon, so the
-    # day-1 and day-2 windows close and emit; day-3 stays open
-    _write_host_dump(input_dir, "d0.parquet", [
-        ("https://a.example/p1", D1), ("https://a.example/p2", D1),
-        ("https://b.example/p1", D1),
-        ("https://a.example/p3", D2),
-        ("https://a.example/p4", D3),
-    ])
-    _drain_host_stats(spark, dirs)
-    got = _read_stats(spark, output_dir)
-    assert got == {
-        ("2024-01-01", "a.example"): 2,
-        ("2024-01-01", "b.example"): 1,
-        ("2024-01-02", "a.example"): 1,
-    }
-
-    # trigger 2: day 4 arrives plus a LATE day-1 row (behind the
-    # watermark -> dropped); day-3 window now closes with its original
-    # count; day-4 stays open and never appears
-    _write_host_dump(input_dir, "d1.parquet", [
-        ("https://a.example/late", D1),          # late: must be dropped
-        ("https://a.example/p5", D4),
-        ("https://b.example/p2", D4),
-    ])
-    _drain_host_stats(spark, dirs)
-    got = _read_stats(spark, output_dir)
-    assert got == {
-        ("2024-01-01", "a.example"): 2,          # unchanged: late row dropped
-        ("2024-01-01", "b.example"): 1,
-        ("2024-01-02", "a.example"): 1,
-        ("2024-01-03", "a.example"): 1,
-    }
-
-
 # --- streaming exact-dedup on url across overlapping dumps ------------------
 
 from ankiocr_spark.streaming import start_stream_extract_dedup
+
+D1 = dt.datetime(2024, 1, 1, 12, 0, 0)
+D2 = dt.datetime(2024, 1, 2, 12, 0, 0)
 
 
 def test_stream_extract_dedup_across_dumps(spark, tmp_path):
@@ -210,56 +137,6 @@ def test_stream_extract_dedup_across_dumps(spark, tmp_path):
     # the kept /b is the FIRST crawl's extract
     b = [r for r in rows if r["url"].endswith("/b")][0]
     assert "beta" in b["extracted_text"] and "beta-again" not in b["extracted_text"]
-
-
-# --- custom stateful operator: per-host crawl tracker -----------------------
-
-from ankiocr_spark.streaming import start_stream_host_tracker
-
-
-def test_stream_host_tracker_state_across_triggers(spark, tmp_path):
-    input_dir = str(tmp_path / "in")
-    output_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-
-    def dump(name, rows):
-        os.makedirs(input_dir, exist_ok=True)
-        table = pa.table({
-            "url": pa.array([r[0] for r in rows], pa.string()),
-            "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-            "html": pa.array([r[2] for r in rows], pa.binary()),
-            "text": pa.array([None] * len(rows), pa.string()),
-            "lang": pa.array(["eng"] * len(rows), pa.string()),
-        })
-        pq.write_table(table, os.path.join(input_dir, name))
-
-    def drain():
-        q = start_stream_host_tracker(spark, input_dir, output_dir, ckpt)
-        assert q.awaitTermination(120)
-
-    dump("d0.parquet", [
-        ("https://a.example/1", D1, b"x" * 10),
-        ("https://a.example/2", D2, b"y" * 20),
-        ("https://b.example/1", D1, b"z" * 5),
-    ])
-    drain()
-    rows = {r["host"]: r for r in spark.read.parquet(output_dir).collect()}
-    assert rows["a.example"]["n_pages"] == 2
-    assert rows["a.example"]["n_bytes"] == 30
-    assert rows["a.example"]["last_ts"] == D2
-    assert rows["b.example"]["n_pages"] == 1
-
-    # second trigger: state must carry (cumulative, not reset)
-    dump("d1.parquet", [
-        ("https://a.example/3", D3, b"w" * 40),
-    ])
-    drain()
-    latest = [r for r in spark.read.parquet(output_dir).collect()
-              if r["host"] == "a.example" and r["batch_pages"] == 1
-              and r["n_pages"] == 3]
-    assert latest, "cumulative state row missing"
-    assert latest[0]["n_bytes"] == 70
-    assert latest[0]["last_ts"] == D3
 
 
 def test_stream_honors_extract_config(spark, tmp_path):
